@@ -25,7 +25,8 @@ object JobLogProbe {
     sources.CatalogStats.registerAndAnalyze(spark, sfDir)
     val stageWrite = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
     val stageName = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    // Boxed values: a missing key must read as null, not as 0.
+    val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
     val listener = new SparkListener {
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
         stageWrite.put(e.stageInfo.stageId,
@@ -34,11 +35,14 @@ object JobLogProbe {
           e.stageInfo.name.take(60))
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit = {
-        val t0 = jobStart.getOrDefault(e.jobId, e.time)
-        println(f"[job ${e.jobId}%3d end] ${(e.time - t0) / 1e3}%6.2f s")
+        // "?" when the probe never saw the job start (listener added
+        // mid-job, or an event dropped off a full bus).
+        val secs = Option(jobStart.remove(e.jobId))
+          .fold("     ?")(t0 => f"${(e.time - t0) / 1e3}%6.2f")
+        println(f"[job ${e.jobId}%3d end] $secs s")
       }
       override def onJobStart(e: SparkListenerJobStart): Unit = {
-        jobStart.put(e.jobId, e.time)
+        jobStart.put(e.jobId, java.lang.Long.valueOf(e.time))
         println(s"[job ${e.jobId}] stages=${e.stageIds.mkString(",")} " +
           Option(e.properties.getProperty("callSite.short")).getOrElse(""))
       }

@@ -35,6 +35,17 @@ object TimeOne {
       .map(_.stripPrefix("--cpus="))
       .orElse(sys.env.get("SPARK_GRAFT_CPUS"))
       .getOrElse("32")
+    require(cpus.matches("\\d+") && cpus.toIntOption.exists(_ > 0),
+      s"core count must be a positive integer, got '$cpus' " +
+        "(--cpus=N or SPARK_GRAFT_CPUS)")
+    // getOrCreate() would hand back a live session with its master
+    // unchanged (and overwrite its confs): timing it would silently
+    // measure another core count.
+    val live = SparkSession.getActiveSession
+      .orElse(SparkSession.getDefaultSession).map(_.sparkContext.master)
+    require(live.forall(_ == s"local[$cpus]"),
+      s"a live session runs at ${live.getOrElse("")}, not local[$cpus]; " +
+        s"stop it before timing at $cpus cores")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft-timeone")

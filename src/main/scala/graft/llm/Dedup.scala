@@ -256,8 +256,11 @@ object Dedup {
    *     compare per candidate — it discards most sub-threshold candidates
    *     before any token array is touched (0.10 slack ≈ 3σ of the
    *     estimator at k=60, so true positives survive);
-   *  4. the per-doc signature and token tables are broadcast — the
-   *     candidate stream never shuffles its payload.
+   *  4. one per-doc table (doc_id, sig, toks) is broadcast once per
+   *     side — the candidate stream never shuffles its payload, and the
+   *     signature and token arrays of a doc ride the same build (two
+   *     broadcast builds per verify, not four: AQE never reuses a
+   *     broadcast across the differently-aliased sides).
    * At cluster scale lever 4 flips to a shuffle join on doc_id once the
    * doc dimension outgrows broadcast; the rest are unchanged.
    *
@@ -270,15 +273,27 @@ object Dedup {
    * lever 2 instead (same output, bit-for-bit).
    */
   def minhashLsh(docs: DataFrame, thresh: Double): DataFrame = {
-    // sigs feeds three subtrees (banding + both verify sides); the
-    // persist keeps the signature scan single-computation. Cache LIFECYCLE
+    // The per-doc frame feeds banding and both verify sides; the
+    // persist keeps its one scan single-computation. Cache LIFECYCLE
     // belongs to the session runner: a lazily-returned DataFrame has no
     // after-materialization hook, so Verify/Bench clearCache() between
     // queries (round-1 ADVICE: nothing stays pinned across queries).
-    val sigs = Q.ownPersist(signaturesInline(docs)).df
-    val cands = lshCandidatePairs(sigs, lshBands(docs))
-    verifyPairs(cands, sigs, tokenArrays(docs), thresh)
+    val perDoc = Q.ownPersist(sigsAndToks(docs)).df
+    val cands = lshCandidatePairs(
+      perDoc.select(col("doc_id"), col("sig")), lshBands(docs))
+    verifyPairs(cands, perDoc, thresh)
       .orderBy(col("doc_a"), col("doc_b"))
+  }
+
+  /** (doc_id, sig, toks) in one scan: the MinHash signature and the
+    * sorted token-hash array of every doc — the per-doc frame
+    * [[verifyPairs]] takes, built the same way by [[minhashLsh]] and
+    * the streaming sink. */
+  private[graft] def sigsAndToks(docs: DataFrame): DataFrame = {
+    val distinctToks = array_distinct(split(col("text"), " "))
+    docs.select(col("doc_id"),
+      graft.plans.VectorExprs.minhashSig(distinctToks, MinHashK).as("sig"),
+      graft.plans.VectorExprs.tokenHashesSorted(distinctToks).as("toks"))
   }
 
   /** Token sets as SORTED xxhash64 arrays: set cardinalities (and hence
@@ -292,24 +307,26 @@ object Dedup {
       graft.plans.VectorExprs.tokenHashesSorted(
         array_distinct(split(col("text"), " "))).as("toks"))
 
-  /** Signature-estimate pre-filter + exact-Jaccard verification over
-    * PRECOMPUTED `sigs` (doc_id, sig) and `toks` (doc_id, toks) frames —
-    * the shared core of [[minhashLsh]] and the streaming near-dedup sink
+  /** Signature-estimate pre-filter + exact-Jaccard verification over a
+    * PRECOMPUTED per-doc frame (doc_id, sig, toks) — the shared core of
+    * [[minhashLsh]] and the streaming near-dedup sink
     * ([[graft.streaming.NearDedupStream]]): ONE code path, so the
     * stream's cross-epoch verdicts are bit-parity with the batch
-    * operator by construction, not by re-implementation. Output:
-    * (doc_a, doc_b, jaccard round-4dp), unordered. */
-  private[graft] def verifyPairs(cands: DataFrame, sigs: DataFrame,
-      toks: DataFrame, thresh: Double): DataFrame = {
+    * operator by construction, not by re-implementation. The frame is
+    * broadcast once per side (lever 4); the estimate filter stays
+    * ahead of the Jaccard merge scan, so most sub-threshold candidates
+    * never touch a token array. Output: (doc_a, doc_b, jaccard
+    * round-4dp), unordered. */
+  private[graft] def verifyPairs(cands: DataFrame, perDoc: DataFrame,
+      thresh: Double): DataFrame = {
     val minMatches = math.ceil((thresh - 0.10) * MinHashK).toInt
-    val estKeep = cands
-      .join(Q.maybeBroadcast(sigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a"))), "doc_a")
-      .join(Q.maybeBroadcast(sigs.select(col("doc_id").as("doc_b"), col("sig").as("sig_b"))), "doc_b")
+    def side(s: String) = Q.maybeBroadcast(perDoc.select(
+      col("doc_id").as(s"doc_$s"), col("sig").as(s"sig_$s"),
+      col("toks").as(s"t$s")))
+    cands
+      .join(side("a"), "doc_a")
+      .join(side("b"), "doc_b")
       .filter(graft.plans.VectorExprs.sigMatch(col("sig_a"), col("sig_b")) >= minMatches)
-      .select(col("doc_a"), col("doc_b"))
-    estKeep
-      .join(Q.maybeBroadcast(toks.select(col("doc_id").as("doc_a"), col("toks").as("ta"))), "doc_a")
-      .join(Q.maybeBroadcast(toks.select(col("doc_id").as("doc_b"), col("toks").as("tb"))), "doc_b")
       .withColumn("jaccard", graft.plans.VectorExprs.jaccardSorted(col("ta"), col("tb")))
       .filter(col("jaccard") >= thresh)
       .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 4).as("jaccard"))

@@ -299,9 +299,9 @@ object Similarity {
     hyperplaneCandidatePairs(hyperplaneSigs(emb))
 
   def hyperplanePairs(emb: DataFrame, thresh: Double): DataFrame = {
-    // Persisted for the same reason as minhashLsh's sigs: four subtrees
-    // (both banding sides + both verify sides) would recompute the
-    // 192-dot signature scan; the runner clearCache()s between queries.
+    // Persisted for the same reason as minhashLsh's per-doc frame: four
+    // subtrees (both banding sides + both verify sides) would recompute
+    // the 192-dot signature scan; the runner clearCache()s between queries.
     val sigs = graft.Q.ownPersist(hyperplaneSigs(emb)).df
     val cands = hyperplaneCandidatePairs(sigs)
     val sides = sigs.select(col("vec_id"), col("embedding"), col("sq"))

@@ -5,6 +5,7 @@ import graft.llm.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types._
 
 /**
  * Streaming near-deduplication — the MinHash-LSH dedup family applied
@@ -58,6 +59,18 @@ import org.apache.spark.sql.streaming.StreamingQuery
  * cross-epoch candidates. Neither read scans the corpus — per-epoch
  * cost is O(batch + candidates), the same class as one batch-operator
  * run over the batch, regardless of how much history the store holds.
+ * Both reads pass the schema the sink writes ([[BandsSchema]],
+ * [[PayloadSchema]]) instead of inferring it, so neither launches a
+ * schema-merge job over the store footers.
+ *
+ * Spark actions per epoch: ONE materializing action, a per-bucket
+ * count over the batch's band keys, builds both epoch caches (the
+ * per-doc frame and its band keys) and yields the touched band buckets
+ * — an empty result IS the empty trigger, which writes the ledger
+ * marker only. Epochs with a committed past add one more: the collect
+ * of the candidates' payload buckets, which prunes the payload read.
+ * Everything else is the verify, the three writes, and the one
+ * broadcast per verify side [[graft.llm.Dedup.verifyPairs]] builds.
  * Like every epoch-directory sink, buckets accumulate O(epochs) files;
  * [[compactStore]] folds committed epoch directories into one
  * consolidated epoch per side, keeping the `_bucket`/`_pbucket`
@@ -84,6 +97,23 @@ object NearDedupStream {
     * show against the sf0.01 epoch size; `0` disables the policy. */
   val CompactAfterEpochsKey = "spark.graft.neardedupCompactAfterEpochs"
 
+  /** Data columns of the bands store, exactly as a reader infers them
+    * from the files [[neardedupBatch]] and [[compactStore]] write (the
+    * `epoch` and `_bucket` partition columns come from the directory
+    * names). The cross-epoch read passes it explicitly, so no
+    * schema-merge job runs over the store footers; StreamingSpec pins
+    * it against the inferred schema. */
+  val BandsSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType), StructField("band", IntegerType),
+    StructField("band_key", LongType)))
+
+  /** Data columns of the payload store (`epoch` and `_pbucket` come
+    * from the directory names); same contract as [[BandsSchema]]. */
+  val PayloadSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("sig", ArrayType(LongType)),
+    StructField("toks", ArrayType(LongType))))
+
   /** The foreachBatch function. `thresh` is the exact-Jaccard keep
     * threshold (the batch operator's knob); `nBuckets` sizes both
     * stores' pruning grain. */
@@ -97,22 +127,15 @@ object NearDedupStream {
     val bandsDir = new Path(target, "bands").toString
     val payloadDir = new Path(target, "payload").toString
     val verdictsDir = new Path(target, "verdicts").toString
-    if (batch.isEmpty) { // empty trigger: ledger only
-      fs.mkdirs(marker.getParent); fs.create(marker, true).close(); return
+    def writeMarker(): Unit = {
+      fs.mkdirs(marker.getParent); fs.create(marker, true).close()
     }
     val nBands = Dedup.lshBands(batch)
     val rows = Dedup.MinHashK / nBands
     // One scan computes both per-doc artifacts (signature + sorted
     // token hashes); persisted — it feeds banding, both verify sides,
     // the verdict frame, and the payload write.
-    val prep = Q.ownPersist(batch
-      .select(col("doc_id"),
-        graft.plans.VectorExprs.minhashSig(
-          array_distinct(split(col("text"), " ")), Dedup.MinHashK).as("sig"),
-        graft.plans.VectorExprs.tokenHashesSorted(
-          array_distinct(split(col("text"), " "))).as("toks"))
-      .dropDuplicates("doc_id"))
-    prep.df.count()
+    val prep = Q.ownPersist(Dedup.sigsAndToks(batch).dropDuplicates("doc_id"))
     val sigsB = prep.df.select(col("doc_id"), col("sig"))
     // Band keys in EXACTLY lshCandidatePairs' form (xxhash64 of the
     // band's signature slice) — cross-epoch candidates must be the
@@ -124,7 +147,15 @@ object NearDedupStream {
       .withColumn("_bucket",
         pmod(xxhash64(col("band"), col("band_key")), lit(nBuckets))
           .cast("int")))
-    bandsB.df.count()
+    // The epoch's ONE materializing action: it builds both caches
+    // (bandsB reads prep) and returns the band buckets the batch
+    // touches — the pruning set of the cross-epoch store read. Every
+    // doc yields nBands rows, so no buckets means an empty trigger.
+    val touched = bandsB.df.groupBy(col("_bucket")).count()
+      .collect().map(_.getInt(0)).toSeq // bounded by nBuckets
+    if (touched.isEmpty) { // empty trigger: ledger only
+      bandsB.release(); prep.release(); writeMarker(); return
+    }
     // WITHIN-batch candidates: the batch operator's own banding.
     val candsWithin = Dedup.lshCandidatePairs(sigsB, nBands)
     // CROSS-epoch candidates: batch band keys vs the store, pruned to
@@ -137,9 +168,10 @@ object NearDedupStream {
     // whose payload side is absent — or, worse, whose payload ROOT
     // exists holding only a `_temporary` dir (the committer's
     // setupJob mkdirs it before any file commits) — and a replay
-    // that trusted directory EXISTENCE would run schema inference
-    // over zero readable footers and throw on every restart: a
-    // permanent crash loop (found by the r12 review pass; the first
+    // that trusted directory EXISTENCE would read zero visible files
+    // (no `_pbucket` partition column to prune on, even with the
+    // explicit schema) and throw on every restart: a permanent crash
+    // loop (found by the r12 review pass; the first
     // fix checked fs.exists and still had the _temporary hole). The
     // committed-content check below uses Spark's own visibility rule
     // (`_`/`.`-prefixed names are hidden UNLESS they contain `=` —
@@ -165,9 +197,7 @@ object NearDedupStream {
     val crossPairs =
       if (!havePast) None
       else {
-        val touched = bandsB.df.select(col("_bucket")).distinct()
-          .collect().map(_.getInt(0)).toSeq // bounded by nBuckets
-        Some(spark.read.parquet(bandsDir)
+        Some(spark.read.schema(BandsSchema).parquet(bandsDir)
           .filter(col("_bucket").isin(touched: _*)).as("s")
           .join(bandsB.df.as("n"),
             col("s.band") === col("n.band") &&
@@ -178,25 +208,24 @@ object NearDedupStream {
       }
     // Payload rows for the cross-candidates' store side, pruned to the
     // doc buckets that actually hold candidates.
-    val (sigsAll, toksAll, crossCands) = crossPairs match {
-      case None => (sigsB, prep.df.select(col("doc_id"), col("toks")), None)
+    val (perDoc, crossCands) = crossPairs match {
+      case None => (prep.df, None)
       case Some(cp) =>
         val cpOwned = Q.ownPersist(cp)
         val pBuckets = cpOwned.df
           .select(pmod(xxhash64(col("doc_a")), lit(nBuckets)).cast("int")
             .as("_pbucket"))
           .distinct().collect().map(_.getInt(0)).toSeq
-        val payload = spark.read.parquet(payloadDir)
+        val payload = spark.read.schema(PayloadSchema).parquet(payloadDir)
           .filter(col("_pbucket").isin(pBuckets: _*))
-        (sigsB.unionByName(payload.select(col("doc_id"), col("sig"))),
-          prep.df.select(col("doc_id"), col("toks"))
-            .unionByName(payload.select(col("doc_id"), col("toks"))),
+        (prep.df.unionByName(
+          payload.select(col("doc_id"), col("sig"), col("toks"))),
           Some(cpOwned))
     }
     val cands = crossCands.map(c => candsWithin.union(c.df))
       .getOrElse(candsWithin)
     // The SHARED verification core — bit-parity with minhashLsh.
-    val pairs = Dedup.verifyPairs(cands, sigsAll, toksAll, thresh)
+    val pairs = Dedup.verifyPairs(cands, perDoc, thresh)
     val verdicts = Dedup.verdictsFromPairs(
       prep.df.select(col("doc_id")), pairs)
     // Per-epoch overwrites (idempotent under replay), ledger LAST.
@@ -211,8 +240,7 @@ object NearDedupStream {
     crossCands.foreach(_.release())
     bandsB.release()
     prep.release()
-    fs.mkdirs(marker.getParent)
-    fs.create(marker, true).close()
+    writeMarker()
     // Auto-compaction (VERDICT r12 #3): the epoch is fully committed
     // (marker written), the sink still owns the single-writer window,
     // and compactStore only folds COMMITTED epochs — so firing here is

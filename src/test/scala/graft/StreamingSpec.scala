@@ -877,4 +877,115 @@ class StreamingSpec extends SparkSpec {
         "corpus surfaced no dups — the parity assertion is vacuous")
     } finally spark.conf.unset(NearDedupStream.CompactAfterEpochsKey)
   }
+
+  /** Runs `body` and returns how many Spark jobs it started — counted
+    * through a thread-local property, which Spark copies into the
+    * broadcast and subquery threads a query spawns, so every job of
+    * `body` is counted and no job of anything else. */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val key = "graft.test.jobBudget"
+    val tag = java.util.UUID.randomUUID().toString
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(key) == tag)
+          n.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    sc.setLocalProperty(key, tag)
+    try body
+    finally {
+      sc.setLocalProperty(key, null)
+      org.apache.spark.graftbridge.ListenerDrain.drain(sc)
+      sc.removeSparkListener(l)
+    }
+    n.get
+  }
+
+  test("streaming near-dedup: per-epoch job budget — one materializing action per epoch, no schema-inference jobs on the store") {
+    // Budget: 15 jobs for epoch 0 (no store yet) and 20 for epoch 1
+    // (cross-epoch store reads and verify). A re-added eager count, a
+    // second touched-bucket action, an inferred-schema store read or a
+    // third verify broadcast pushes an epoch over budget.
+    import java.nio.file.Files
+    import org.apache.spark.sql.functions.col
+    import graft.streaming.NearDedupStream
+    val t = s"${Files.createTempDirectory("graft_neardedup_budget")}/t"
+    val docs = Tables.documents(spark, sf0001).select("doc_id", "text")
+    val mid = docs.selectExpr("percentile(doc_id, 0.5)").collect()(0)
+      .getDouble(0).toLong
+    val e0 = jobsOf(NearDedupStream.neardedupBatch(t, 0.95, 8)(
+      docs.filter(col("doc_id") <= mid), 0L))
+    val e1 = jobsOf(NearDedupStream.neardedupBatch(t, 0.95, 8)(
+      docs.filter(col("doc_id") > mid), 1L))
+    assert(e0 <= 15, s"epoch 0 (no store yet) ran $e0 jobs, budget 15")
+    assert(e1 <= 20, s"epoch 1 (cross-epoch verify) ran $e1 jobs, budget 20")
+  }
+
+  test("streaming near-dedup: an empty epoch writes only its ledger marker and releases its caches; the next data epoch stays bit-parity") {
+    import java.nio.file.Files
+    import org.apache.spark.sql.functions.col
+    import graft.streaming.NearDedupStream
+    val t = s"${Files.createTempDirectory("graft_neardedup_empty")}/t"
+    val docs = Tables.documents(spark, sf0001).select("doc_id", "text")
+    val lo = docs.selectExpr("min(doc_id)").collect()(0).getLong(0)
+    spark.catalog.clearCache()
+    NearDedupStream.neardedupBatch(t, 0.95, 8)(
+      docs.filter(col("doc_id") < lo), 0L)
+    assert(new java.io.File(s"$t/_epochs/0").isFile,
+      "empty epoch left no ledger marker")
+    for (side <- Seq("bands", "payload", "verdicts"))
+      assert(!new java.io.File(s"$t/$side/epoch=0").exists,
+        s"empty epoch wrote a $side epoch directory")
+    assert(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.isEmpty,
+      "empty epoch left a cached frame behind")
+    NearDedupStream.neardedupBatch(t, 0.95, 8)(docs, 1L)
+    def asMap(df: org.apache.spark.sql.DataFrame) = df.collect().map { r =>
+      r.getLong(0) -> ((r.getBoolean(1), Option(r.get(2)), Option(r.get(3))))
+    }.toMap
+    val streamed = asMap(NearDedupStream.readVerdicts(spark, t))
+    assert(streamed === asMap(
+      graft.llm.Dedup.queries("dedup_near_verdicts")(spark, sf0001)),
+      "verdicts after an empty epoch diverged from the batch twin")
+    assert(streamed.values.exists(!_._1),
+      "corpus surfaced no dups — the parity assertion is vacuous")
+  }
+
+  test("streaming near-dedup: the explicit store schemas equal the schemas Spark infers from the per-epoch and the compacted store") {
+    // The sink reads bands and payload with BandsSchema / PayloadSchema
+    // instead of inferring them; a writer change those constants miss
+    // would read as null columns, not fail. Pin them to what a reader
+    // infers from both store shapes: per-epoch dirs and the negative
+    // consolidated epoch compactStore writes.
+    import java.nio.file.Files
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.StructType
+    import graft.streaming.NearDedupStream
+    val t = s"${Files.createTempDirectory("graft_neardedup_schema")}/t"
+    val docs = Tables.documents(spark, sf0001).select("doc_id", "text")
+    val mid = docs.selectExpr("percentile(doc_id, 0.5)").collect()(0)
+      .getDouble(0).toLong
+    NearDedupStream.neardedupBatch(t, 0.95, 8)(docs.filter(col("doc_id") <= mid), 0L)
+    NearDedupStream.neardedupBatch(t, 0.95, 8)(docs.filter(col("doc_id") > mid), 1L)
+    def check(shape: String): Unit =
+      for ((side, schema) <- Seq("bands" -> NearDedupStream.BandsSchema,
+          "payload" -> NearDedupStream.PayloadSchema)) {
+        val dir = s"$t/$side"
+        val inferred = spark.read.parquet(dir).schema
+        val partCols = Set("epoch", "_bucket", "_pbucket")
+        assert(StructType(inferred.filterNot(f => partCols(f.name))) === schema,
+          s"$shape $side store: inferred data columns ${inferred.simpleString}")
+        assert(spark.read.schema(schema).parquet(dir).schema === inferred,
+          s"$shape $side store: explicit-schema read differs from inference")
+      }
+    check("per-epoch")
+    assert(NearDedupStream.compactStore(spark, t) >= 6, "nothing compacted")
+    for (side <- Seq("bands", "payload"))
+      assert(new java.io.File(s"$t/$side").list().toSeq
+        .exists(_.startsWith("epoch=-")), s"$side store was not compacted")
+    check("compacted")
+  }
 }
