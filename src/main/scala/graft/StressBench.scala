@@ -162,6 +162,23 @@ object StressBench {
   case class Entry(sec: Double, rows: Long, strategy: String,
       gcSec: Double, cpuShare: Double)
 
+  /** (width, recall) per rerank width — recall of ann_pq's top-k id set
+    * vs the exact cosine top-k, over the 10 fixture probes: the
+    * measurement behind [[graft.llm.Similarity.PqRerankFactor]]'s
+    * default. */
+  private def recallCurve(spark: SparkSession, dir: String, k: Int,
+      widths: Seq[Int]): Seq[(Int, Double)] = {
+    val exact = llm.Similarity.bruteTopK(spark, dir, k)
+      .select(col("probe_id"), col("vec_id")).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    widths.map { w =>
+      val approx = llm.Similarity.annPq(spark, dir, k, w)
+        .select(col("probe_id"), col("vec_id")).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      (w, (exact & approx).size.toDouble / exact.size)
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val root = if (args.length > 0) args(0)
       else sys.env.getOrElse("SPARK_GRAFT_STRESS_ROOT", "stressdata")
@@ -648,7 +665,7 @@ object StressBench {
       sources.CatalogStats.registerAndAnalyze(spark, dir)
       val t0 = System.nanoTime()
       val curve =
-        try PqCurve.recallCurve(spark, dir, 5, Seq(16, 32, 64, 128))
+        try recallCurve(spark, dir, 5, Seq(16, 32, 64, 128))
         catch { case e: Throwable =>
           System.err.println(s"[stress] pq_recall failed: $e"); Nil }
       val sec = (System.nanoTime() - t0) / 1e9

@@ -35,7 +35,7 @@ import org.apache.spark.sql.expressions.Window
  *
  * r6→r7 regression bisect (VERDICT r6 #2): BENCH_r06's heavy tier read
  * this entry at 48.1 s (vs 26.5 s in r5) with CBO newly on, so CBO
- * join-reorder was the prime suspect. Bisected with [[graft.TimeOne]]
+ * join-reorder was the prime suspect. Bisected with [[graft.Profile]]
  * (clean JVM, sf0.1, idle host, 2 reps each): ANALYZE+CBO 26.4/24.0 s,
  * ANALYZE with CBO off 26.2/25.3 s, no ANALYZE (r5 conditions)
  * 25.5/24.6 s — identical SMJ+BHJ strategies in all three. CBO is
@@ -52,7 +52,7 @@ object Curate {
     // signature/token builds (two reads — the signature persist and the
     // token-array broadcast build), and (b) the stage-2 anti-join's left
     // side — without the cache the full-corpus md5 window re-ran up to
-    // three times per query (TimeOne: the lsh arm spends its first
+    // three times per query (graft.Profile: the lsh arm spends its first
     // seconds repeating this window). Cache lifecycle belongs to the
     // runner (per-query clearCache), the documented handle-leak
     // convention — same as the tf persist in TextOps.

@@ -131,7 +131,7 @@ object Dedup {
   // of 12 rows: P(candidate | j=0.95) = 1-(1-0.95^12)^5 ≈ 0.98 (recall
   // holds) while P(j=0.8) ≈ 0.30 and P(j=0.7) ≈ 0.07 (the bulk prunes).
   //
-  // Default JUSTIFIED BY SWEEP (graft.BandSweep, r5; recall = fraction
+  // Default JUSTIFIED BY SWEEP (r5, raw output in band_sweep.txt; recall = fraction
   // of exact j≥0.95 pairs surfaced as candidates):
   //
   //   corpus        b   rows  candidates  recall   full lsh sec

@@ -109,8 +109,8 @@ object SimilarityJoinRewrite extends Rule[LogicalPlan] {
     * fix fed TRUE rowCounts into auto and the shared 20 k vector
     * constant promptly kept a 22 s exact plan at 5 k docs where the
     * ~4 s LSH plan was designed to run). Default 1 500, measured by
-    * [[graft.TokCrossoverSweep]] (r7, local[32], sf0.1 doc-prefix
-    * subsets — table in tok_crossover.txt): exact/LSH seconds are
+    * a sweep (r7, local[32], sf0.1 doc-prefix subsets — table in
+    * tok_crossover.txt): exact/LSH seconds are
     * 1.28/0.77 at 500 docs, 1.69/0.52 at 1 500, 2.60/0.70 at 2 000,
     * 19.44/2.70 at 5 000 — the exact arm is already past its n² knee
     * by 2 000 and LSH's fixed pipeline cost never exceeds ~1 s under

@@ -159,7 +159,7 @@ object GraftShims {
     // bytes-per-partition logic AQE's own coalescing applies, pointed
     // the other way. The floor is conf-able
     // (spark.graft.checkpointClaimMinPartBytes; 0 forces the claim —
-    // used by the plan captures and the property tests).
+    // used by the property tests).
     val bytes = ds.sparkSession.sparkContext.getRDDStorageInfo
       .find(_.id == rdd.id).map(i => i.memSize + i.diskSize).getOrElse(0L)
     val minPerPart = ds.sparkSession.conf
@@ -207,12 +207,6 @@ object GraftShims {
     import catalyst.plans.physical._
     import catalyst.expressions.{Attribute, AttributeMap}
     val unknown = UnknownPartitioning(0)
-    // Safety valve + A/B lever: claims off restores the stock
-    // localCheckpoint behavior everywhere (used by the r18 measurements
-    // to attribute plan deltas to the claim alone).
-    if (ds.sparkSession.conf
-        .get("spark.graft.keepCheckpointPartitioning", "true") == "false")
-      return unknown
     try {
       val finalPlan = ds.queryExecution.executedPlan match {
         case a: execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan

@@ -229,17 +229,4 @@ class IoSpec extends SparkSpec {
         === org.apache.spark.sql.types.TimestampType,
         s"$v did not normalize to TimestampType")
   }
-
-  test("TimeOne refuses a malformed core count and a live session at another core count, leaving the session untouched") {
-    val live = spark.sparkContext.master
-    val partitions = spark.conf.get("spark.sql.shuffle.partitions")
-    val other = if (live == "local[2]") "3" else "2"
-    val e = intercept[IllegalArgumentException](
-      TimeOne.main(Array("agg_group", sf0001, s"--cpus=$other")))
-    assert(e.getMessage.contains(live), e.getMessage)
-    intercept[IllegalArgumentException](
-      TimeOne.main(Array("agg_group", sf0001, "--cpus=4x")))
-    assert(spark.conf.get("spark.sql.shuffle.partitions") === partitions,
-      "the refused run still rewrote the live session's confs")
-  }
 }

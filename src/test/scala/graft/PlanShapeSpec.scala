@@ -8,6 +8,20 @@ class PlanShapeSpec extends SparkSpec {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf0001).queryExecution.executedPlan.toString
 
+  private object Aqe extends org.apache.spark.sql.execution.adaptive
+    .AdaptiveSparkPlanHelper
+
+  /** Hash keys (column names) of every shuffle Exchange in `df`'s plan. */
+  private def shuffleKeys(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] =
+    Aqe.collect(df.queryExecution.executedPlan) {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>
+        e.outputPartitioning match {
+          case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
+            h.expressions.map(_.references.map(_.name).mkString("+"))
+          case other => Seq(other.toString)
+        }
+    }
+
   test("join_broadcast plans BroadcastHashJoin") {
     assert(plan("join_broadcast").contains("BroadcastHashJoin"))
   }
@@ -130,6 +144,42 @@ class PlanShapeSpec extends SparkSpec {
       "threshold count lost its hash aggregation")
     assert(p.contains("l_orderkey"),
       "pair join no longer keyed on the order key")
+  }
+
+  test("copurchaseEdges: one shuffle Exchange keyed on (doc_a, doc_b); the distinct adds none") {
+    // The (ok, doc_a, doc_b) distinct rides the pair join's l_orderkey
+    // clustering, so the fan is deduped before the only exchange of its
+    // own: hash(doc_a, doc_b) into the weight count (node 14 of
+    // plans/r18/copurchase_edges_after.txt). Broadcast joins off gives
+    // the pair join the shuffle shape it has at capture scale.
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val keys = shuffleKeys(llm.Graph.copurchaseEdges(spark, sf0001))
+      assert(keys.count(_ == Seq("doc_a", "doc_b")) === 1, keys)
+      assert(keys.filterNot(_ == Seq("doc_a", "doc_b"))
+        .forall(_ == Seq("l_orderkey")), keys)
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
+  test("refineRoundPlan: one NN-descent round plans exactly one shuffle Exchange, keyed on src") {
+    // The candidate dedup and the final per-src top-k ride one
+    // repartition by src (node 13 of plans/r18/refine_round_after.txt);
+    // the embedding sides broadcast and the capped adjacency is read
+    // from its cache. The seed is checkpointed as the NND loop holds its
+    // edge frame between rounds.
+    val emb = Tables.embeddings(spark, sf0001)
+    val eOwned = Q.ownPersist(llm.Similarity.refineEmbFrame(emb))
+    eOwned.df.count()
+    val seed = llm.Similarity.knnGraph(emb, 3)
+      .select("src", "dst", "cos_sim").localCheckpoint(true)
+    val (round, und) = llm.Similarity.refineRoundPlan(
+      eOwned, Q.Owned(seed, owned = false), 3)
+    try assert(shuffleKeys(round) === Seq(Seq("src")))
+    finally {
+      und.release(); eOwned.release()
+      org.apache.spark.sql.GraftShims.unpersistLeafRdd(seed)
+    }
   }
 
   test("bfsFrom round shape: a checkpointed frontier layer broadcasts into the edge join (r15)") {

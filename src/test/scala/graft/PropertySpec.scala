@@ -238,6 +238,39 @@ class PropertySpec extends SparkSpec {
       assert(canon(wS) === canon(wP), "window rank diverged under the claim")
       shim.unpersist(); stock.unpersist()
     }
+    // What the claim buys, at the scale shape (broadcast joins off): a
+    // groupBy and an inner join keyed on the claimed column plan no
+    // shuffle Exchange over the shim leaf, and one each over the stock
+    // localCheckpoint leaf.
+    val prevBc = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val sp = s.conf.get("spark.sql.shuffle.partitions").toInt
+      val base = s.range(0, 20000).select(col("id").as("k"),
+        (col("id") * 31 % 1013).as("v")).repartition(sp, col("k"))
+      val other = s.range(0, 20000).select(col("id").as("k"),
+        (col("id") % 7).as("w"))
+      val stock = base.localCheckpoint(true)
+      val shim = org.apache.spark.sql.GraftShims
+        .localCheckpointKeepPartitioning(base)
+      object H extends org.apache.spark.sql.execution.adaptive
+        .AdaptiveSparkPlanHelper
+      def leafExchanges(df: org.apache.spark.sql.DataFrame): Int = {
+        df.collect()
+        H.collect(df.queryExecution.executedPlan) {
+          case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+              if H.find(e.child)(_.isInstanceOf[
+                org.apache.spark.sql.execution.RDDScanExec]).nonEmpty => e
+        }.length
+      }
+      for ((leaf, ck, want) <- Seq(("stock", stock, 1), ("shim", shim, 0))) {
+        assert(leafExchanges(ck.groupBy("k").agg(sum("v"))) === want,
+          s"groupBy over the $leaf leaf")
+        assert(leafExchanges(ck.join(other, Seq("k"))) === want,
+          s"inner join over the $leaf leaf")
+      }
+      shim.unpersist(); stock.unpersist()
+    } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
     } finally s.conf.unset("spark.graft.checkpointClaimMinPartBytes")
   }
 
