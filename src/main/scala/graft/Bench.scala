@@ -1,28 +1,34 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import org.json4s._
+import org.json4s.JsonDSL._
+import org.json4s.jackson.JsonMethods.{compact, parse, render}
 
 /**
  * Headline benchmark (driver contract): runs a representative query per
  * operator family on SPARK_GRAFT_SF_DIR and prints ONE JSON line.
  * Timings are first-touch inside one warm JVM — the same methodology as
- * BASELINE.md's probe suite, so the 2× envelope compares like-for-like.
+ * BASELINE.md's six-query suite, so the 2× envelope compares
+ * like-for-like.
  *
  * Robustness (round-2, VERDICT.md): round 1's artifact was unusable —
  * the JSON line picked up sbt's `[info]` prefix (parse failure) and the
- * host was contended (5× inflation). Two fixes:
+ * host was contended (5× inflation). Two answers:
  *  1. the JSON line is ALSO written to a file (bench.json, or
  *     $SPARK_GRAFT_BENCH_OUT), so a log prefix can never corrupt it;
- *  2. three load-normalizer probes (scan+filter, TPC-H Q1 agg, a
- *     HOF-cosine join — the same cost shapes as BASELINE.md's probe
- *     suite) run in the same JVM. Their anchors are THIS code measured
- *     on this machine idle (BASELINE.md's absolute numbers came from a
- *     different formulation and are not reproducible anchors — its
- *     38.8 s HOF-cosine row measures 6× slower re-spelled as a join
- *     condition). `host_factor` = measured/anchor ≈ 1.0 idle, >1 under
- *     contention; `total_normalized` = total / host_factor stays
- *     interpretable under any host load.
+ *  2. every row records the work behind its wall seconds, from the
+ *     [[RunMetrics]] its stages report: `task_sec` (executor task
+ *     time), `cpu_sec` (executor CPU time), `cpu_share`, `stages`,
+ *     `shuffle_write_bytes`, `gc_sec` and the post-AQE join strategies
+ *     (heavy rows add spill bytes); the line also records the `cpus`
+ *     and `shuffle_partitions` it ran under. Seconds are reported raw.
+ *     A row whose task and CPU seconds grew did more work (a plan or
+ *     arm regression, or work duplicated across threads); one whose
+ *     wall seconds grew at flat task and CPU seconds waited on the host.
+ *     tools/artifact_check.py gates the raw totals against their
+ *     budgets; gating a change on host-independent counters (jobs,
+ *     stages, tasks, shuffle bytes) is perfbench's job.
  *
  * The near-dup family is represented by `minhash_lsh` (the at-scale
  * path), not the all-pairs exact `dedup_near`, which exists as the
@@ -86,304 +92,15 @@ object Bench {
     "pipeline_decont_bloom", "simhash_pairs", "ann_ivf", "tokjoin_auto",
     "agg_percentiles")
 
-  /** Idle-host cumulative budget for the [[heavy]] tier at sf0.1.
-    * Re-based r8: the jaccardPairs persist fix cut the tier's measured
-    * total from 145.8 s to ~55 s, so the r6 150 s budget no longer
-    * gates anything — 90 s keeps ~1.6× headroom for host noise while a
-    * real arm regression (any big entry doubling) still breaches.
-    * r11 (VERDICT r10 #1): the two CC-backed entries now benchmark
-    * their conf-swapped SCALE arms (see the conf sets around the heavy
-    * runSuite below), cutting the idle tier to ~half, and the tier
-    * carries its own probe anchors — the budget is unchanged so the
-    * raw totals stay comparable, but the margin is now real. */
+  /** Idle-host cumulative budget for the [[heavy]] tier at sf0.1, gated
+    * on the RAW tier total. Re-based r8: the jaccardPairs persist fix
+    * cut the tier's measured total from 145.8 s to ~55 s, so the r6
+    * 150 s budget no longer gated anything — 90 s keeps ~1.6× headroom
+    * for host noise while a real arm regression (any big entry
+    * doubling) still breaches. r11 (VERDICT r10 #1): the two CC-backed
+    * entries benchmark their conf-swapped SCALE arms (see the conf sets
+    * in the heavy-tier child below), cutting the idle tier to ~half. */
   val HeavyBudgetSec = 90.0
-
-  /** Warm in-JVM idle-host anchors for the tier-local probes that
-    * bracket the [[heavy]] tier (VERDICT r10 #1b). The HEADLINE probes
-    * run at session start; both r9 and r10 driver breaches were host
-    * stalls that arrived MID-RUN (headline host_factor 1.01 while the
-    * heavy entries ran at cpu_share 0.46–0.60) — invisible to a
-    * start-of-run anchor. These two probes re-run immediately before
-    * and after the heavy tier (untimed — outside every budget window);
-    * `heavy_host_factor` = measured / anchor normalizes the tier total
-    * exactly as the headline's probe_baseline normalizes `value`.
-    * Anchors are the WARM costs (parquet hot, JVM warm — unlike the
-    * 5.1 s cold probe_filter anchor), measured idle at HEAD r11
-    * (probe_agg_q1 0.53–0.54, probe_cosine_hof 0.58–0.84 per pass;
-    * the TWO-PASS SUM is the stable quantity — 2.49/2.52 s across
-    * idle runs — which is why the factor divides the summed passes by
-    * the summed baseline rather than averaging per-probe ratios). The
-    * cosine probe is pure CPU (500×500 HOF join), so its inflation
-    * tracks descheduling; the agg probe adds a shuffle-shaped floor. */
-  val HeavyProbeAnchors: Map[String, Double] = Map(
-    "probe_agg_q1" -> 0.54, "probe_cosine_hof" -> 0.71)
-
-  /** Saturating throughput probe (r16 — VERDICT r15 #1). Probe design
-    * note: the three serial probes below are near-single-threaded
-    * (probe_agg_q1 is one small job; probe_cosine_hof one 500×500 HOF
-    * join), so a PARALLEL-throughput-bound contended window — other
-    * processes eating cores while each individual thread still runs at
-    * speed — is invisible to them: the r15 artifacts carried
-    * host_factor 0.91 beside a suite running 1.5–1.8× slow, and the
-    * headline and heavy factors disagreed 0.91-vs-1.57 inside ONE run.
-    * Every gated suite is parallel-bound (local[32], 32 shuffle
-    * partitions), so the normalizing factor must measure the same
-    * quantity: [[parallelProbe]] runs `threads` concurrent copies of
-    * the probe_agg_q1 body (each its own Spark job) and times the
-    * batch — wall time scales with the machine throughput actually
-    * available to this JVM, which is what the suites consume. The
-    * serial probes stay in the artifact (`host_factor_serial`,
-    * cross-round comparability back to r1) but `host_factor` — the
-    * field every gate normalizes by — is parallel-based from r16 on.
-    * [[ParallelProbeAnchorSec]] is the idle-host wall time of one
-    * 32-thread pass at sf0.1, calibrated at r16 HEAD with the parquet
-    * warm (the probe runs after the serial probes every time, so the
-    * anchor condition is reproduced exactly).
-    *
-    * The r15 raw-regression question (VERDICT r15 #2) was settled at
-    * r16 by running the ROUND-14 code, unmodified, on the same host
-    * and corpus in the same hour as HEAD: r14 code 56.3 s headline /
-    * 53.5 s heavy vs HEAD 47.9–53.4 / 53.9–60.3 across three idle
-    * runs — the same level, HEAD slightly faster. The 39 → 69.5 s
-    * driver swing was entirely host-window throughput drift; no
-    * committed change (the r15 ledger included — whose per-query cost
-    * for non-fixpoint rows is one synchronized null map lookup)
-    * contributed measurably. Calibrated 2026-08-16,
-    * idle host, ProbeCalib 8 steady passes: 1.39/1.20/1.03/0.97/0.99/
-    * 0.95/1.01/0.88 after a 1.86 s warm-up — the measured Bench pass is
-    * the THIRD (two discarded warm-ups), ≈ 1.0–1.2 s. This anchor
-    * serves the HEADLINE tier only — its measurement point (session
-    * start, post-serial-probes) proved stable across run shapes at
-    * the r17 closeout (0.89 s even in a JVM that had just executed
-    * 183 verify queries; 1.07 s standalone). The heavy child's
-    * bracket lives in a different, wider envelope and normalizes by
-    * [[ParallelProbeChildAnchorSec]] below. */
-  val ParallelProbeAnchorSec = 1.05
-
-  /** r17 (VERDICT r16 #1): the heavy tier now runs in a FRESH CHILD
-    * JVM (`--heavy-tier` mode, spawned by the canonical run), so its
-    * brackets normalize by the ONE fresh anchor above and the r16
-    * aged-JVM anchor (2.3) is retired. History, because it explains
-    * the design: a session that has executed the 35-query headline
-    * suite runs the 32-way burst persistently ~2.2× slower than a
-    * fresh one EVEN IDLE, which forced the second anchor — itself
-    * fitted to passes spanning 2.0–3.2 s idle, leaving the tier
-    * factor legitimately anywhere in 0.88–1.4 on a healthy host and
-    * the agreement gate with almost no real margin (r16 driver run:
-    * 1.37 of the 1.5 limit at 86% of the raw budget). Before choosing
-    * the fork, the cheaper resets were MEASURED (ProbeCalib's
-    * SPARK_GRAFT_CALIB_AGE sweep — every condition in one JVM, one
-    * host window, 2026-08-16): fresh steady 1.47 s → aged 2.30 →
-    * SparkContext restart in the same JVM 2.42 → after three explicit
-    * full GCs 2.58. Neither Spark state nor heap garbage explains the
-    * aging (Bench already System.gc()s between queries); it is
-    * JVM-level (JIT/allocation-path aging), and no in-process reset
-    * recovers it — so the VERDICT r16 suggestion of a context restart
-    * is falsified by measurement, and a fresh process is the minimal
-    * condition that RECOVERS fresh throughput at all. The child's
-    * session build + catalog ANALYZE cost is reported as
-    * `heavy_jvm_setup_sec`, outside every budget window — the same
-    * accounting class as analyze_sec. */
-
-  /** Idle-host anchor for the CHILD's pre-tier bracket — the quantity
-    * [[heavyHostFactorOf]] divides by. NOT the parent's
-    * [[ParallelProbeAnchorSec]]: the r17 closeout measured, in one
-    * idle hour at one HEAD, that a fresh child's pre bracket reads
-    * ~1.55 s when the host has only booted a bench (standalone run)
-    * but ~2.36 s when it has just churned through the full
-    * verify-then-bench driver protocol (218 queries) — while the AGED
-    * parent of that same replica probed at 0.89 s. So the burst
-    * slowdown is NOT purely JVM age (a fresh process does not recover
-    * it on a churned host) and not parent contention (the parent was
-    * waiting): a host-window churn component survives the fork. The
-    * fresh-child design still buys the thing it was built for — the
-    * child starts at the SAME JVM-life point every run, removing the
-    * "aged by whatever happened to run before" variance of the r16
-    * in-process anchor — but its bracket lives in an irreducible
-    * idle-host envelope: 1.47 (ProbeCalib fresh steady), 1.55
-    * (standalone idle), 2.30 (r16 aged calib), 2.36 (driver-shaped
-    * idle). This anchor is that envelope's center; the
-    * artifact_check gate (heavy_host_factor ≤ 1.5) then trips only
-    * OUTSIDE the measured envelope (pre bracket ≳ 2.9 s), i.e. on
-    * genuine contention, and the within-tier post/pre drift gate —
-    * not a cross-JVM agreement pin — catches contention arriving
-    * mid-tier (idle drift reads 1.1–1.6× from within-tier aging; the
-    * r17 contended run read 6.5×). */
-  val ParallelProbeChildAnchorSec = 1.9
-
-  /** One bracket measurement: a discarded warm-up burst, then
-    * [[BracketPasses]] measured passes — the MEDIAN is the bracket
-    * estimate (VERDICT r16 #1a: a 2-pass mean over a distribution
-    * whose idle passes span 0.88–1.39 s gave the tier factor ±25%
-    * noise per side; the median of three is robust to one straggler
-    * pass). All passes ride the artifact so tools/artifact_check.py
-    * can gate on their SPREAD — a wide spread means the host changed
-    * under the bracket and the run is not canonical. */
-  val BracketPasses = 3
-
-  /** r18 (VERDICT r17 #1): PER-ROW heavy-tier normalization. The r17
-    * driver breach (107.9 s raw ≡ normalized vs the 90 s budget) was
-    * ONE row — pipeline_curate at 65.8 s vs 15–21 s in every replica,
-    * its task CPU tripled — under a contention wave that lived
-    * entirely INSIDE the row: the pre bracket's median read healthy
-    * (its own first pass read 6.9 s — the wave — and the median
-    * discarded it), the post bracket ran after the wave had passed,
-    * and heavy_host_factor came out 0.66 ("fast host") while the tier
-    * ran ~2× slow. Start/end brackets are structurally blind to
-    * mid-row waves, so the tier now measures contention per row, from
-    * two independent in-window signals, and normalizes each row by the
-    * larger of the two (never both — they overlap; max of two lower
-    * bounds is still a lower bound of the true slowdown):
-    *
-    *  1. EXTERNAL-CPU SHARE (`heavy_ext_share`): /proc/stat deltas
-    *     bracketing the row. In this Firecracker sandbox a noisy
-    *     neighbor appears as STEAL jiffies (hypervisor time taken from
-    *     our vCPUs — measured live on this host: an idle window reads
-    *     ~1%, the contention waves the r17 ledger documents read tens
-    *     of %) plus any non-self busy jiffies (other local processes —
-    *     ~0 during a canonical run, the parent JVM is blocked in
-    *     waitFor). ext = steal_share + max(0, busy_share − own_share),
-    *     own from the JVM's process-CPU clock, all shares HZ-free
-    *     ratios of the same /proc/stat capacity delta. The row credit
-    *     is the LINEAR machine-share model — normalized = raw ×
-    *     (1 − ext) — deliberately conservative: SMT-sibling and
-    *     frequency interference make real damage superlinear in ext,
-    *     and a linear credit can never over-correct an idle host
-    *     (ext ≈ 0 ⇒ factor 1). Unreadable /proc/stat degrades to 0.
-    *  2. BOUNDARY PROBES (`heavy_probe_mid_passes`): one saturating
-    *     probe pass between consecutive rows; a row's probe factor is
-    *     min(pass before, pass after) / [[BoundaryProbeAnchorSec]] —
-    *     min, so a wave that only grazed a boundary cannot credit the
-    *     row; the anchor is the mid-tier idle level (in-tier JVM aging
-    *     inflates mid-tier passes over the fresh-child 1.9 s anchor:
-    *     the r17 idle post brackets span 1.88–2.66 s), so an idle run
-    *     earns no credit from aging. Catches in-guest slowdown modes
-    *     steal cannot see (JIT starvation, cache pollution) when they
-    *     persist across a boundary.
-    *
-    * Per-row factor = max(1, ext-based, probe-based); the artifact
-    * carries every ingredient (shares, passes, factors) so the
-    * normalization is auditable, `heavy_total_normalized` =
-    * Σ raw_i / factor_i, and a clean run normalizes to exactly its raw
-    * total. `heavy_norm_suspect` flags the signals DISAGREEING
-    * (VERDICT r17 #1's "fail loudly" ask): a probe factor > 1.5 on a
-    * row whose ext share read < 2% (an in-guest anomaly, not measured
-    * external load) — consumers should treat the run as non-canonical
-    * rather than trust either signal. The child JVM's setup cost
-    * stays outside every budget window (`heavy_jvm_setup_sec`), as
-    * before. */
-  val BoundaryProbeAnchorSec = 2.4
-
-  def median(xs: Seq[Double]): Double = {
-    val s = xs.sorted
-    if (s.isEmpty) -1.0
-    else if (s.length % 2 == 1) s(s.length / 2)
-    else (s(s.length / 2 - 1) + s(s.length / 2)) / 2
-  }
-
-  /** One /proc/stat + process-CPU snapshot for the per-row external-load
-    * measurement (see [[BoundaryProbeAnchorSec]]'s design note). `ok`
-    * false (non-Linux, masked /proc) degrades every share to 0 — the
-    * normalization then falls back to the probe signal alone. */
-  final case class StatSnap(ok: Boolean, busy: Long, steal: Long,
-    total: Long, ownNanos: Long, wallNanos: Long)
-
-  def readStatSnap(): StatSnap = {
-    val wall = System.nanoTime()
-    val own = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean match {
-      case b: com.sun.management.OperatingSystemMXBean => b.getProcessCpuTime
-      case _ => -1L
-    }
-    try {
-      val line = java.nio.file.Files
-        .lines(java.nio.file.Paths.get("/proc/stat")).findFirst().orElse("")
-      val v = line.trim.split("\\s+").drop(1).map(_.toLong)
-      if (v.length < 8 || own < 0) StatSnap(ok = false, 0, 0, 0, own, wall)
-      else {
-        // user nice system idle iowait irq softirq steal
-        val busy = v(0) + v(1) + v(2) + v(5) + v(6)
-        StatSnap(ok = true, busy, v(7), busy + v(7) + v(3) + v(4), own, wall)
-      }
-    } catch { case scala.util.control.NonFatal(_) =>
-      StatSnap(ok = false, 0, 0, 0, own, wall)
-    }
-  }
-
-  /** Fraction of machine capacity consumed OUTSIDE this JVM between two
-    * snapshots: hypervisor steal plus non-self busy. All terms are
-    * ratios of the same /proc/stat capacity delta (HZ-free: own CPU is
-    * converted through the wall-clock share of the same window). */
-  def extShare(a: StatSnap, b: StatSnap, cpus: Int): Double = {
-    if (!a.ok || !b.ok) return 0.0
-    val cap = (b.total - a.total).toDouble
-    val wallSec = (b.wallNanos - a.wallNanos) / 1e9
-    if (cap <= 0 || wallSec <= 0) return 0.0
-    val stealShare = (b.steal - a.steal) / cap
-    val busyShare = (b.busy - a.busy) / cap
-    val ownShare = ((b.ownNanos - a.ownNanos) / 1e9) / (wallSec * cpus)
-    math.max(0.0, stealShare) + math.max(0.0, busyShare - ownShare)
-  }
-
-  def parallelProbe(spark: SparkSession, sfDir: String, threads: Int): Double = {
-    val body = probes(sfDir).collectFirst {
-      case ("probe_agg_q1", _, run) => run }.get
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
-    val t0 = System.nanoTime()
-    var failed = true
-    try {
-      val futs = (1 to threads).map(_ => pool.submit(
-        new java.util.concurrent.Callable[Long] {
-          def call(): Long = body(spark)
-        }))
-      futs.foreach(_.get())
-      failed = false
-    } finally {
-      // ADVICE r16: on the failure path (one probe future threw while
-      // others are still queued/running) a plain shutdown() would let
-      // the survivors keep executing Spark jobs UNDER the next timed
-      // section (ANALYZE / the measured queries), polluting it. Cancel
-      // and wait them out before the exception propagates; the happy
-      // path is unaffected (all futures already completed).
-      if (failed) {
-        pool.shutdownNow()
-        pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
-      } else pool.shutdown()
-    }
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  /** Load-normalizer probes + idle-host anchor seconds (sf0.1,
-    * local[32], measured 2026-08-12). probe_filter runs first so it
-    * includes the session's first parquet read every round; the cosine
-    * probe is deliberately HOF-interpreted (no kernel) and capped at
-    * 500×500 vectors — it's a CPU-load canary, not a suite entry. */
-  def probes(sfDir: String): Seq[(String, Double, SparkSession => Long)] = Seq(
-    ("probe_filter", 5.1, { s =>
-      Tables.lineitem(s, sfDir)
-        .filter(col("l_shipdate") <= "1998-09-02" &&
-          col("l_discount").between(0.05, 0.07) && col("l_quantity") < 24)
-        .count()
-    }),
-    ("probe_agg_q1", 1.7, { s =>
-      Tables.lineitem(s, sfDir)
-        .filter(col("l_shipdate") <= "1998-09-02")
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(sum(col("l_quantity")), avg(col("l_extendedprice")), count(lit(1)))
-        .count()
-    }),
-    ("probe_cosine_hof", 4.5, { s =>
-      val e = Tables.embeddings(s, sfDir).filter(col("vec_id") < 500)
-      val a = e.select(col("vec_id").as("ia"), col("embedding").as("ea"))
-      val b = e.select(col("vec_id").as("ib"), col("embedding").as("eb"))
-      val dot = aggregate(zip_with(col("ea"), col("eb"),
-        (x, y) => x.cast("double") * y.cast("double")), lit(0.0), (acc, x) => acc + x)
-      val cos = dot / (sqrt(aggregate(col("ea"), lit(0.0),
-        (acc, x) => acc + x.cast("double") * x.cast("double"))) *
-        sqrt(aggregate(col("eb"), lit(0.0),
-          (acc, x) => acc + x.cast("double") * x.cast("double"))))
-      a.join(b, col("ia") < col("ib")).filter(cos >= 0.35).count()
-    }))
 
   /** Join-strategy fingerprint of an executed plan: the distinct physical
     * join operators present, worst-first. Emitted per headline query into
@@ -399,6 +116,50 @@ object Bench {
     // final plan — surfaced here so artifacts record WHEN the automatic
     // skew arm actually fired (the stress skew sweep's pass marker).
     if (plan.contains("skew=true")) base + "+skew" else base
+  }
+
+  /** One timed row: wall seconds (-1 when the query failed — a crash
+    * mid-query must be machine-visible, never its partial elapsed time
+    * folded into a green-looking total, ADVICE r2), post-AQE join
+    * strategies ("err" on failure), GC seconds inside the timed window,
+    * and the work counters of the row's stages. */
+  private final case class Row(name: String, sec: Double, strategy: String,
+      gcSec: Double, m: RunMetrics)
+
+  /** The per-row maps of one tier, keyed by query: seconds under
+    * `secKey`, every other map under `prefix` + its name. */
+  private def rowFields(rows: Seq[Row], secKey: String, prefix: String): JObject = {
+    def byRow(f: Row => JValue) = JObject(rows.map(r => r.name -> f(r)).toList)
+    def round3(x: Double) = JDouble(math.round(x * 1000) / 1000.0)
+    (secKey -> byRow(r => JDouble(r.sec))) ~
+      (s"${prefix}strategies" -> byRow(r => JString(r.strategy))) ~
+      (s"${prefix}gc_sec" -> byRow(r => JDouble(r.gcSec))) ~
+      (s"${prefix}cpu_share" -> byRow(r => round3(r.m.cpuShare))) ~
+      (s"${prefix}task_sec" -> byRow(r => JDouble(r.m.executorRunMillis / 1e3))) ~
+      (s"${prefix}cpu_sec" -> byRow(r => round3(r.m.executorCpuNanos / 1e9))) ~
+      (s"${prefix}stages" -> byRow(r => JInt(r.m.stages))) ~
+      (s"${prefix}shuffle_write_bytes" -> byRow(r => JInt(r.m.shuffleWriteBytes)))
+  }
+
+  private def errorsJson(errors: Seq[(String, String)]): JObject =
+    JObject(errors.map { case (k, v) => k -> (JString(v): JValue) }.toList)
+
+  /** The heavy tier's fields, spliced verbatim into the parent's line.
+    * `heavy_gc_total` sums the same rows as `heavy_total` (failed rows
+    * excluded), or artifact_check's gc-vs-excess breach fingerprint
+    * would compare GC from N rows against elapsed from N−1. */
+  private def heavyFields(rows: Seq[Row], errors: Seq[(String, String)],
+      setupSec: Double, extraFailed: Seq[String] = Nil): JObject = {
+    val ok = rows.filter(_.sec >= 0)
+    rowFields(rows, "heavy", "heavy_") ~
+      ("heavy_spill_bytes" -> JObject(rows.map(r =>
+        r.name -> (JInt(r.m.diskSpillBytes + r.m.memorySpillBytes): JValue)).toList)) ~
+      ("heavy_gc_total" -> ok.map(_.gcSec).sum) ~
+      ("heavy_failed" -> (rows.filter(_.sec < 0).map(_.name) ++ extraFailed).toList) ~
+      ("heavy_errors" -> errorsJson(errors)) ~
+      ("heavy_total" -> ok.map(_.sec).sum) ~
+      ("heavy_jvm_setup_sec" -> setupSec) ~
+      ("heavy_budget_sec" -> HeavyBudgetSec)
   }
 
   def main(args: Array[String]): Unit = {
@@ -424,19 +185,17 @@ object Bench {
     // registry: shared code can shift any row.
     val changedArg = args.find(a => a == "--changed" || a.startsWith("--changed="))
     val changedMode = changedArg.isDefined
-    // --heavy-tier=<path>: INTERNAL child mode (r17 — VERDICT r16 #1).
-    // The canonical run spawns a FRESH JVM for the heavy tier and this
-    // is its entry: run ONLY the tier (catalog analyze, serial +
-    // saturating brackets, the conf-swapped heavy suite), write the
-    // tier's JSON fields to <path>, exit. See the spawn site for why a
-    // fresh JVM (not a fresh context) is the only condition that
-    // restores the calibrated probe anchor.
+    // --heavy-tier=<path>: INTERNAL child mode (r17). The canonical run
+    // spawns a FRESH JVM for the heavy tier and this is its entry: run
+    // ONLY the tier (catalog analyze, the conf-swapped heavy suite),
+    // write the tier's JSON fields to <path>, exit. See the spawn site
+    // for why the tier runs in its own process.
     val heavyTierArg = args.find(_.startsWith("--heavy-tier="))
     val heavyTierMode = heavyTierArg.isDefined
     // Bench-time broadcast pin (VERDICT r3 #1): the gates Q.maybeBroadcast
     // reads are set EXPLICITLY on every session this run builds, so no
-    // earlier conf drift in a long run can flip join_range_binned's probe
-    // broadcast. The probe's est rows (~10k at sf0.1, bounded by its
+    // earlier conf drift in a long run can flip join_range_binned's
+    // broadcast side. Its est rows (~10k at sf0.1, bounded by its
     // one-month filter) sit far below both gates.
     def mkSession(): SparkSession = {
       val b = SparkSession.builder()
@@ -447,10 +206,10 @@ object Bench {
       // Child isolation: registerAndAnalyze CTASes single-file sources
       // into managed `graft_*` warehouse tables, so a child sharing the
       // parent's spark-warehouse would DELETE the parent's table files
-      // under its still-cached listings (measured: the parent's
-      // end-of-run probe died on FILE_NOT_EXIST reading graft_lineitem
-      // after the child re-registered it). The tier child gets its own
-      // temp warehouse; the copy cost lands in heavy_jvm_setup_sec.
+      // under its still-cached listings (measured: the parent's next
+      // read died on FILE_NOT_EXIST reading graft_lineitem after the
+      // child re-registered it). The tier child gets its own temp
+      // warehouse; the copy cost lands in heavy_jvm_setup_sec.
       if (heavyTierMode)
         b.config("spark.sql.warehouse.dir",
           java.nio.file.Files.createTempDirectory("graft_heavy_wh_")
@@ -462,12 +221,8 @@ object Bench {
       s
     }
     val spark = mkSession()
-    // Per-query task metrics (round 4): executor CPU vs task wall time.
-    // cpu_share ≈ 1 → the measured seconds were real compute; ≪ 1 → the
-    // OS descheduled the worker threads (external host load). This is
-    // the missing datum in the r3 59 s join_range_binned anomaly — the
-    // strategy field proved the PLAN was right; cpu_share proves whether
-    // the TIME was the query's fault.
+    // Per-query stage metrics (round 4): executor task time, CPU time,
+    // stages and shuffle bytes — the work behind each row's seconds.
     val metricsListener = new RunMetricsListener
     spark.sparkContext.addSparkListener(metricsListener)
     def time(body: => Unit): Double = {
@@ -486,35 +241,6 @@ object Bench {
         .asScala.map(_.getCollectionTime).filter(_ > 0).sum
     }
 
-    // Probes FIRST, ANALYZE second (ADVICE r6): the probe anchors were
-    // measured with probe_filter absorbing the session's first parquet
-    // read; r6 ran registerAndAnalyze ahead of them, which pre-warmed
-    // that read and biased host_factor low (inflating total_normalized
-    // vs the r1–r5 artifacts it must stay comparable with). The probes
-    // therefore run on plain path reads — CatalogDirKey is still unset —
-    // under exactly the anchor conditions.
-    val probeResults =
-      if (heavyTierMode) Nil
-      else probes(sfDir).map { case (name, base, run) =>
-        (name, base, time(run(spark)))
-      }
-    // r16 (VERDICT r15 #1): the saturating probe that defines
-    // host_factor — runs after the serial probes, parquet warm, under
-    // exactly the anchor's calibration condition. The first TWO passes
-    // are DISCARDED warm-up (they carry one-time JIT that the
-    // late-session heavy brackets never pay — without the discard the
-    // two factors would disagree ~1.6× on an idle host and the
-    // artifact_check agreement pin would gate on JIT, not contention);
-    // the third pass is the measured one, matching ProbeCalib's
-    // steady-state anchor.
-    val parallelThreads = cpus.toInt
-    val probeParallel =
-      if (heavyTierMode) -1.0
-      else {
-        parallelProbe(spark, sfDir, parallelThreads)
-        parallelProbe(spark, sfDir, parallelThreads)
-        parallelProbe(spark, sfDir, parallelThreads)
-      }
     // ANALYZE at load time, outside every per-query window (the
     // one-scan-per-table cost a warehouse pays once per load, reported
     // separately like bucket_setup_sec): the measured queries then plan
@@ -538,12 +264,6 @@ object Bench {
         } catch { case e: Throwable =>
           System.err.println(s"[bench] warehouse setup failed: $e") }
       }
-    // A failed query records -1 (sentinel), never its partial elapsed
-    // time: a crash mid-query must be machine-visible in the artifact,
-    // not silently folded into a green-looking total (ADVICE r2). Each
-    // query also records the join strategies of its EXECUTED (post-AQE)
-    // plan — the self-diagnosis that separates "host was loaded" from
-    // "the planner flipped the join" when an entry spikes.
     val changedFiles: Seq[String] =
       if (!changedMode) Nil
       else {
@@ -606,284 +326,75 @@ object Bench {
     // The exception rides in the artifact so a failed run explains
     // itself.
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    def jsonEsc(s: String): String =
-      s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case '\n' | '\r' => " "
-        case c if c < ' ' => ""
-        case c => c.toString
-      }
-    def runSuite(names: Seq[String]) = names.map { name =>
-      val fn = SparkEntry.queries(name)
-      var exec: Option[org.apache.spark.sql.DataFrame] = None
-      org.apache.spark.graftbridge.ListenerDrain.drain(spark.sparkContext)
-      metricsListener.snapshotAndReset()
+    // Each query is one checksum-forced execution (Profile.forced) with
+    // the runner's cache and checkpoint hygiene after it; the GC delta
+    // covers the timed window only, not the hygiene's collection.
+    def runSuite(names: Seq[String]): Seq[Row] = names.map { name =>
       val gc0 = gcMillis()
-      val t0 = System.nanoTime()
-      val ok =
-        try {
-          // Checksum-forced execution (r5 — found via StressBench):
-          // under a bare groupBy().count(), column pruning deletes any
-          // computation the row count doesn't depend on (a window rank
-          // that's projected but never filtered, session ids, EWMA
-          // values), so several entries were measuring little more than
-          // the scan. xxhash64 over the full row struct makes every
-          // output column load-bearing; hash cost is noise next to the
-          // operators. This raises window/event-family numbers vs
-          // rounds 1–4 BY MEASURING THEM — a methodology fix, not a
-          // regression; the cast to double avoids ANSI sum overflow.
-          val df = fn(spark, sfDir)
-          val agg = df.agg(count(lit(1)).as("n"),
-            sum(xxhash64(struct(df.columns.map(col): _*)).cast("double")).as("chk"))
-          // collect(), not head(): head() executes a separate limit(1)
-          // QueryExecution, so THIS plan's AQE would stay unfinalized
-          // and the recorded strategy would be the pre-adaptive guess
-          agg.collect()
-          exec = Some(agg)
-          true
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] $name failed: $e")
-            errors(name) = jsonEsc(e.toString.take(300))
-            false
-        }
-      val t = (System.nanoTime() - t0) / 1e9
-      val gcSec = (gcMillis() - gc0) / 1e3
-      org.apache.spark.graftbridge.ListenerDrain.drain(spark.sparkContext)
-      val rm = metricsListener.snapshotAndReset()
-      val strategy = exec.map(a =>
-        joinStrategies(a.queryExecution.executedPlan.toString)).getOrElse("err")
-      // runner owns cache lifecycle for operator-persisted intermediates;
-      // fixpoints' final checkpoints live outside the CacheManager and
-      // are drained separately (ADVICE r13)
-      spark.catalog.clearCache()
-      Q.drainCheckpoints(spark)
-      // Untimed GC between queries: Spark's ContextCleaner only reaps a
-      // dead broadcast's torrent blocks after the JVM notices the
-      // Broadcast object is unreachable — 26 queries' worth of broadcast
-      // build sides otherwise accumulate in the block manager and the
-      // tail queries pay the eviction/collection bill inside their
-      // TIMED window.
-      exec = None
-      System.gc()
-      (name, if (ok) t else -1.0, strategy, gcSec, rm)
+      def gcSec = (gcMillis() - gc0) / 1e3
+      try Profile.forced(spark, metricsListener,
+          SparkEntry.queries(name)(spark, sfDir)) { r =>
+        Row(name, r.sec, joinStrategies(r.executed), gcSec, r.metrics)
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] $name failed: $e")
+          errors(name) = e.toString.take(300)
+          org.apache.spark.graftbridge.ListenerDrain.drain(spark.sparkContext)
+          Row(name, -1.0, "err", gcSec, metricsListener.snapshotAndReset())
+      }
     }
 
     if (heavyTierMode) {
-      // Child JVM: the heavy tier at the FRESH calibration condition.
-      // ANALYZE first (stats-informed plans, parity with the parent's
-      // strategy pins; also warms the parquet the serial warm anchors
-      // assume), then serial + saturating brackets, the conf-swapped
-      // scale arms, brackets again.
+      // Child JVM: ANALYZE first (stats-informed plans, parity with the
+      // parent's strategy pins), then the tier. It benchmarks the
+      // conf-swapped SCALE arms of the two CC-backed entries (r11 —
+      // VERDICT r10 #1): pipeline_curate's banded-LSH pair stage and
+      // dedup_components over the LSH candidate stream (both
+      // parity/property-tested; the exact oracle arms stay in Verify and
+      // bench_all, where these confs are never set) — the tier prices
+      // the 100 TB composition, not the sf0.1 oracle stand-in.
       val outPath = heavyTierArg.get.split("=", 2)(1)
       val setupSec = time(sources.CatalogStats.registerAndAnalyze(spark, sfDir))
-      def heavyProbeRun(): Seq[(String, Double)] = probes(sfDir).collect {
-        case (n, _, run) if HeavyProbeAnchors.contains(n) => (n, time(run(spark)))
-      }
-      val heavyProbesPre = heavyProbeRun()
-      val heavyProbePre = heavyProbesPre.map(_._2).sum
-      // Each bracket = one discarded warm-up burst (first-burst JIT,
-      // page-in) + BracketPasses measured passes, median taken (r17 —
-      // VERDICT r16 #1a); every pass rides the artifact for
-      // tools/artifact_check.py's spread gate.
-      def bracketParallel(): Seq[Double] = {
-        parallelProbe(spark, sfDir, parallelThreads)
-        Seq.fill(BracketPasses)(parallelProbe(spark, sfDir, parallelThreads))
-      }
-      val heavyParallelPre = bracketParallel()
-      // The tier benchmarks the conf-swapped SCALE arms of the two
-      // CC-backed entries (r11 — VERDICT r10 #1): pipeline_curate's
-      // banded-LSH pair stage and dedup_components over the LSH
-      // candidate stream (both parity/property-tested; the exact
-      // oracle arms stay in Verify and bench_all, where these confs
-      // are never set) — the tier prices the 100 TB composition, not
-      // the sf0.1 oracle stand-in.
       spark.conf.set("spark.graft.curate.pairStrategy", "lsh")
       spark.conf.set("spark.graft.components.pairStrategy", "lsh")
-      // r18: per-row instrumentation (see BoundaryProbeAnchorSec's
-      // design note) — a /proc/stat+own-CPU snapshot brackets each
-      // row's window (probes and GC excluded), and one saturating
-      // probe pass runs between consecutive rows. Neither is inside
-      // any timed window.
-      val heavyNames = heavy.filter(SparkEntry.queries.contains)
-      val midPasses = scala.collection.mutable.ArrayBuffer[Double]()
-      val extShares = scala.collection.mutable.ArrayBuffer[Double]()
-      val heavyResults =
-        try heavyNames.zipWithIndex.map { case (name, i) =>
-          val s0 = readStatSnap()
-          val res = runSuite(Seq(name)).head
-          val s1 = readStatSnap()
-          extShares += extShare(s0, s1, parallelThreads)
-          if (i < heavyNames.length - 1)
-            midPasses += parallelProbe(spark, sfDir, parallelThreads)
-          res
-        }
+      val rows =
+        try runSuite(heavy.filter(SparkEntry.queries.contains))
         finally {
           spark.conf.unset("spark.graft.curate.pairStrategy")
           spark.conf.unset("spark.graft.components.pairStrategy")
         }
-      val heavyProbesPost = heavyProbeRun()
-      val heavyProbePost = heavyProbesPost.map(_._2).sum
-      val heavyParallelPost = bracketParallel()
-      val hq = heavyResults.map { case (k, v, _, _, _) => "\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
-      val hs = heavyResults.map { case (k, _, s, _, _) =>
-        "\"" + k + "\":\"" + s + "\"" }.mkString("{", ",", "}")
-      val hc = heavyResults.map { case (k, _, _, _, m) =>
-        "\"" + k + "\":" + (math.round(m.cpuShare * 1000) / 1000.0) }
-        .mkString("{", ",", "}")
-      // gc + spill per heavy entry (VERDICT r9 #1): a budget breach
-      // must self-attribute — high gc/spill with flat task_sec = memory
-      // stall; flat gc with grown task_sec = real plan regression.
-      val hg = heavyResults.map { case (k, _, _, g, _) =>
-        "\"" + k + "\":" + g }.mkString("{", ",", "}")
-      val hSpill = heavyResults.map { case (k, _, _, _, m) =>
-        "\"" + k + "\":" + (m.diskSpillBytes + m.memorySpillBytes) }
-        .mkString("{", ",", "}")
-      val hTask = heavyResults.map { case (k, _, _, _, m) =>
-        "\"" + k + "\":" + (m.executorRunMillis / 1e3) }
-        .mkString("{", ",", "}")
-      val hFailed = heavyResults.collect {
-        case (k, v, _, _, _) if v < 0 => "\"" + k + "\"" }
-        .mkString("[", ",", "]")
-      val hTotal = heavyResults.map(_._2).filter(_ >= 0).sum
-      // Same summed set as heavy_total (failed entries excluded), or
-      // the gc-vs-excess breach fingerprint in artifact_check would
-      // compare GC from N entries against elapsed from N−1.
-      val hGcTotal = heavyResults.collect {
-        case (_, v, _, g, _) if v >= 0 => g }.sum
-      // Tier-local host factors. Consumers (tools/artifact_check.py)
-      // normalize the budget gate by the parallel factor ONLY when it
-      // exceeds 1 AND the breach fingerprint is not self-inflicted —
-      // heavy_total_normalized below is ILLUSTRATIVE (unconditional
-      // division); read it next to heavy_total, never instead of it.
-      val hProbeBaseline = 2 * HeavyProbeAnchors.values.sum
-      val hHostFactorSerial = (heavyProbePre + heavyProbePost) / hProbeBaseline
-      // r17 (redesigned at closeout — see ParallelProbeChildAnchorSec):
-      // the factor is the PRE bracket median over the child-condition
-      // anchor. Pre-only is deliberate: the pre bracket measures the
-      // one deterministic point in the child's life (post-setup, pre-
-      // tier), so it reads the HOST's condition; the post bracket
-      // additionally carries within-tier JVM aging (~1.5× idle), so
-      // folding it in would book aging as contention. The post bracket
-      // instead feeds artifact_check's post/pre DRIFT gate — the
-      // tripwire for contention arriving mid-tier — and both sides
-      // keep the per-pass spread gate.
-      val heavyParallelPreMed = median(heavyParallelPre)
-      val heavyParallelPostMed = median(heavyParallelPost)
-      val hHostFactor = heavyParallelPreMed / ParallelProbeChildAnchorSec
-      // r18 per-row normalization factors (BoundaryProbeAnchorSec doc):
-      // each row is bracketed by the probe passes on its two sides
-      // (row 0's lead-in is the pre bracket on its own fresh-child
-      // anchor; the last row's tail is the post bracket median), takes
-      // min(before, after) as its probe factor, an ext-share-based
-      // factor from the linear machine-share model, and normalizes by
-      // the max of the two, floored at 1.
-      val preRatio = heavyParallelPreMed / ParallelProbeChildAnchorSec
-      val postRatio = heavyParallelPostMed / BoundaryProbeAnchorSec
-      val midRatios = midPasses.map(_ / BoundaryProbeAnchorSec).toIndexedSeq
-      val rowFactors = heavyResults.indices.map { i =>
-        val before = if (i == 0) preRatio else midRatios(i - 1)
-        val after = if (i == midRatios.length) postRatio else midRatios(i)
-        val fProbe = math.min(before, after)
-        val ext = if (i < extShares.length) extShares(i) else 0.0
-        val fExt = 1.0 / math.max(0.1, 1.0 - math.min(0.9, ext))
-        math.max(1.0, math.max(fProbe, fExt))
-      }
-      val hNormTotal = heavyResults.zip(rowFactors).collect {
-        case ((_, v, _, _, _), f) if v >= 0 => v / f }.sum
-      val hNormSuspect = heavyResults.indices.exists { i =>
-        val before = if (i == 0) preRatio else midRatios(i - 1)
-        val after = if (i == midRatios.length) postRatio else midRatios(i)
-        val ext = if (i < extShares.length) extShares(i) else 0.0
-        math.min(before, after) > 1.5 && ext < 0.02
-      }
-      val hExtJson = heavyResults.map(_._1).zipWithIndex.map { case (k, i) =>
-        "\"" + k + "\":" + (math.round(
-          (if (i < extShares.length) extShares(i) else 0.0) * 10000) / 10000.0)
-      }.mkString("{", ",", "}")
-      val hFactorJson = heavyResults.map(_._1).zip(rowFactors).map {
-        case (k, f) => "\"" + k + "\":" + (math.round(f * 1000) / 1000.0)
-      }.mkString("{", ",", "}")
-      val hErrors = errors.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
-        .mkString("{", ",", "}")
-      val frag =
-        s""""heavy":$hq,"heavy_strategies":$hs,"heavy_cpu_share":$hc,""" +
-          s""""heavy_gc_sec":$hg,"heavy_spill_bytes":$hSpill,""" +
-          s""""heavy_task_sec":$hTask,"heavy_gc_total":$hGcTotal,""" +
-          s""""heavy_failed":$hFailed,"heavy_errors":$hErrors,""" +
-          s""""heavy_total":$hTotal,""" +
-          s""""heavy_probe_pre":$heavyProbePre,""" +
-          s""""heavy_probe_post":$heavyProbePost,""" +
-          s""""heavy_probes_pre":${heavyProbesPre.map { case (k, v) =>
-            "\"" + k + "\":" + v }.mkString("{", ",", "}")},""" +
-          s""""heavy_probes_post":${heavyProbesPost.map { case (k, v) =>
-            "\"" + k + "\":" + v }.mkString("{", ",", "}")},""" +
-          s""""heavy_probe_baseline":$hProbeBaseline,""" +
-          s""""heavy_jvm_setup_sec":$setupSec,""" +
-          s""""heavy_parallel_pre":$heavyParallelPreMed,""" +
-          s""""heavy_parallel_post":$heavyParallelPostMed,""" +
-          s""""heavy_parallel_pre_passes":${heavyParallelPre
-            .mkString("[", ",", "]")},""" +
-          s""""heavy_parallel_post_passes":${heavyParallelPost
-            .mkString("[", ",", "]")},""" +
-          s""""heavy_host_factor":$hHostFactor,""" +
-          s""""heavy_host_factor_serial":$hHostFactorSerial,""" +
-          s""""heavy_probe_mid_passes":${midPasses.mkString("[", ",", "]")},""" +
-          s""""heavy_probe_mid_anchor":$BoundaryProbeAnchorSec,""" +
-          s""""heavy_ext_share":$hExtJson,""" +
-          s""""heavy_row_factor":$hFactorJson,""" +
-          s""""heavy_norm_suspect":$hNormSuspect,""" +
-          s""""heavy_total_normalized":$hNormTotal,""" +
-          s""""heavy_budget_sec":$HeavyBudgetSec,"""
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), frag)
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath),
+        compact(render(heavyFields(rows, errors.toSeq, setupSec))))
       spark.stop()
       return
     }
 
     val results = runSuite(suite)
     // Heavy tier AFTER the headline, in a FRESH CHILD JVM (r17 —
-    // VERDICT r16 #1); skipped in --all mode where every registry
-    // entry runs anyway. Why a process, not a context restart: the
-    // post-suite JVM runs the 32-way saturating burst persistently
-    // slower than a fresh one even idle, and the r17 ProbeCalib
-    // aged-mode sweep (all conditions in ONE JVM, one host window)
-    // measured fresh 1.47 s → aged 2.30 → restarted-context 2.42 →
-    // after-3-full-GCs 2.58: neither a context restart nor explicit
-    // collection recovers the fresh state (it is JVM-level — JIT/
-    // allocation-path aging, not Spark state), so the r16 aged anchor
-    // could only ever be a high-variance statistical patch (its
-    // bracket passes spanned 2.0–3.2 s idle; the agreement gate read
-    // 1.37 of 1.5). The fork fixes the CONDITION, not the level: the
-    // child starts at the same JVM-life point every run, and the
-    // tier's raw cost returns to fresh-session level (the headroom
-    // VERDICT r16 #1b asked for) — but the closeout measurements
-    // showed a host-window churn component SURVIVES the fork (see
-    // ParallelProbeChildAnchorSec), so the tier normalizes by its own
-    // envelope-centered anchor rather than the parent's, and the
-    // mid-run tripwire is the within-tier post/pre drift gate, not a
-    // cross-JVM factor-agreement pin (which the measured inversion —
-    // aged parent 0.89 s vs fresh child 2.36 s in one idle hour —
-    // falsified). The child inherits this JVM's flags/classpath/env,
-    // runs ONLY the tier (--heavy-tier mode above), and writes its
-    // JSON fields to a temp file the parent splices verbatim; child
-    // stdout is redirected to OUR stderr so the parent's one-line JSON
-    // contract stays clean. Spawn/exit anomalies surface as a
+    // VERDICT r16 #1); skipped in --all/--changed mode where every
+    // affected entry runs anyway. A fresh process does two things a
+    // context restart cannot: a JVM that has executed the 35-query
+    // headline runs the tier's parallel bursts persistently slower even
+    // idle (JIT/allocation-path aging, measured r17: neither a context
+    // restart nor explicit full GCs recover it), so the fork keeps that
+    // aging out of the tier's raw seconds; and the child's own
+    // warehouse keeps its catalog CTAS from deleting the parent's
+    // tables. The child inherits this JVM's flags/classpath/env, runs
+    // ONLY the tier (--heavy-tier mode above), and writes its JSON
+    // fields to a temp file the parent splices in; child stdout is
+    // redirected to OUR stderr so the parent's one-line JSON contract
+    // stays clean. Spawn/exit anomalies surface as a
     // "__heavy_tier_process" entry in heavy_failed — loud, never
-    // silently green.
-    def spawnHeavyTier(): String = {
+    // silently green. The child's session build + ANALYZE is
+    // `heavy_jvm_setup_sec`, outside every budget window.
+    def spawnHeavyTier(): JObject = {
       import scala.jdk.CollectionConverters._
       val tmp = java.nio.file.Files.createTempFile("graft_heavy_", ".json")
-      val errFragment = {
-        val names = heavy.filter(SparkEntry.queries.contains)
-        val empty = names.map(n => "\"" + n + "\":-1").mkString("{", ",", "}")
-        s""""heavy":$empty,"heavy_strategies":{},"heavy_cpu_share":{},""" +
-          s""""heavy_gc_sec":{},"heavy_spill_bytes":{},"heavy_task_sec":{},""" +
-          s""""heavy_gc_total":-1,"heavy_failed":["__heavy_tier_process"],""" +
-          s""""heavy_errors":{},"heavy_total":-1.0,""" +
-          s""""heavy_budget_sec":$HeavyBudgetSec,"""
-      }
+      val errFragment = heavyFields(
+        heavy.filter(SparkEntry.queries.contains).map(n =>
+          Row(n, -1.0, "err", 0.0, RunMetrics(0, 0, 0, 0, 0, 0, 0, 0))),
+        Nil, -1.0, Seq("__heavy_tier_process")) merge
+        JObject("heavy_total" -> JDouble(-1.0))
       try {
         val javaBin = java.nio.file.Paths.get(
           System.getProperty("java.home"), "bin", "java").toString
@@ -912,7 +423,7 @@ object Bench {
             s"(timedOut=${!done}, exit=${if (done) p.exitValue() else -1}, " +
             s"fragBytes=${frag.length})")
           errFragment
-        } else frag
+        } else parse(frag).asInstanceOf[JObject]
       } catch { case e: Throwable =>
         System.err.println(s"[bench] heavy-tier spawn failed: $e")
         errFragment
@@ -921,39 +432,12 @@ object Bench {
         catch { case _: Throwable => }
       }
     }
-    val heavyFragment =
-      if (allMode || changedMode) "" else spawnHeavyTier()
+    val modeFields: JObject =
+      if (changedMode) ("mode" -> "changed") ~ ("changed_files" -> changedFiles.toList)
+      else if (allMode) JObject("mode" -> JString("all"))
+      else spawnHeavyTier()
     val heavyOk = changedMode || allMode ||
-      heavyFragment.contains("\"heavy_failed\":[]")
-    val failed = results.collect { case (k, v, _, _, _) if v < 0 => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
-    val qs = results.map { case (k, v, _, _, _) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val strategies = results.map { case (k, _, s, _, _) => "\"" + k + "\":\"" + s + "\"" }
-      .mkString("{", ",", "}")
-    val gcs = results.map { case (k, _, _, g, _) => "\"" + k + "\":" + g }
-      .mkString("{", ",", "}")
-    val cpuShares = results.map { case (k, _, _, _, m) =>
-      "\"" + k + "\":" + (math.round(m.cpuShare * 1000) / 1000.0) }
-      .mkString("{", ",", "}")
-    val taskSecs = results.map { case (k, _, _, _, m) =>
-      "\"" + k + "\":" + (m.executorRunMillis / 1e3) }
-      .mkString("{", ",", "}")
-    // End-of-run probe repeat: the start probes measure host load BEFORE
-    // the suite; contention rising mid-run (seen in r3) is only visible
-    // by re-measuring after. end/start >> 1 → the host degraded, the
-    // tail entries are inflated for environmental reasons.
-    val probeEnd = time(probes(sfDir).head._3(spark))
-    val ps = probeResults.map { case (k, _, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
-    val probeTotal = probeResults.map(_._3).sum
-    val probeBaseline = probeResults.map(_._2).sum
-    // r16: host_factor is PARALLEL-throughput-based (see parallelProbe's
-    // design note); the serial ratio stays as host_factor_serial for
-    // cross-round comparability back to r1.
-    val hostFactorSerial = probeTotal / probeBaseline
-    val hostFactor = probeParallel / ParallelProbeAnchorSec
+      (modeFields \ "heavy_failed") == JArray(Nil)
     // Comparability contract (ADVICE r7): `value` sums only the queries
     // that ran, so a run with failures is NOT comparable to a clean one
     // — the r7 contended artifact read as a 40% "speedup" because 8
@@ -961,31 +445,19 @@ object Bench {
     // make the summed set explicit and `complete` is the machine gate:
     // artifact consumers (tools/artifact_check.py) must reject
     // complete=false as a canonical artifact.
-    val nOk = results.count(_._2 >= 0)
-    val errJson = errors.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
-      .mkString("{", ",", "}")
-    val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-      s""""strategies":$strategies,"gc_sec":$gcs,""" +
-      s""""cpu_share":$cpuShares,"task_sec":$taskSecs,""" +
-      s""""probe_end_filter":$probeEnd,""" +
-      s""""n_queries":${results.length},"n_ok":$nOk,""" +
-      s""""errors":$errJson,""" +
-      s""""failed":$failed,"bucket_setup_sec":$bucketSetupSec,""" +
-      s""""analyze_sec":$analyzeSec,""" +
-      s""""probes":$ps,"probe_total":$probeTotal,"probe_baseline":$probeBaseline,""" +
-      s""""probe_parallel":$probeParallel,""" +
-      s""""probe_parallel_anchor":$ParallelProbeAnchorSec,""" +
-      s""""probe_parallel_threads":$parallelThreads,""" +
-      s""""host_factor":$hostFactor,"host_factor_serial":$hostFactorSerial,""" +
-      s""""total_normalized":${total / hostFactor},""" +
-      (if (changedMode) {
-        val cf = changedFiles.map(f => "\"" + jsonEsc(f) + "\"")
-          .mkString("[", ",", "]")
-        s""""mode":"changed","changed_files":$cf,"""
-      } else if (allMode) s""""mode":"all",""" else heavyFragment) +
-      s""""complete":${results.forall(_._2 >= 0) && heavyOk},""" +
-      s""""sf":"$sfDir"}"""
+    val ok = results.filter(_.sec >= 0)
+    val line = compact(render(
+      ("metric" -> "total") ~ ("value" -> ok.map(_.sec).sum) ~ ("unit" -> "sec") ~
+        rowFields(results, "queries", "") ~
+        ("n_queries" -> results.length) ~ ("n_ok" -> ok.length) ~
+        ("errors" -> errorsJson(errors.toSeq)) ~
+        ("failed" -> results.filter(_.sec < 0).map(_.name).toList) ~
+        ("bucket_setup_sec" -> bucketSetupSec) ~ ("analyze_sec" -> analyzeSec) ~
+        ("cpus" -> cpus.toInt) ~
+        ("shuffle_partitions" -> spark.conf.get("spark.sql.shuffle.partitions").toInt) ~
+        modeFields ~
+        ("complete" -> (ok.length == results.length && heavyOk)) ~
+        ("sf" -> sfDir)))
     println(line)
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       if (changedMode) "bench_changed.json"

@@ -2,8 +2,9 @@ package graft
 
 import scala.collection.mutable
 
+import org.apache.spark.graftbridge.ListenerDrain
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
 import org.json4s._
@@ -71,29 +72,16 @@ object Profile {
     try queries.map { query =>
       val fn = SparkEntry.queries(query)
       // The result frame's plan is taken after the timed section but
-      // before the hygiene below, so it still sees the query's caches.
+      // before the hygiene, so it still sees the query's caches.
       def once(explain: Boolean): Rep = {
-        org.apache.spark.graftbridge.ListenerDrain.drain(sc)
-        metrics.snapshotAndReset()
         jobLog.reset()
-        val t0 = System.nanoTime()
-        val df = fn(spark, sfDir)
-        val agg = df.agg(count(lit(1)).as("n"),
-          sum(xxhash64(struct(df.columns.map(col): _*)).cast("double")).as("chk"))
-        val r = agg.collect()(0)
-        val sec = (System.nanoTime() - t0) / 1e9
-        org.apache.spark.graftbridge.ListenerDrain.drain(sc)
-        val executed = agg.queryExecution.executedPlan.toString
-        val rep = Rep(sec, r.getLong(0),
-          if (r.isNullAt(1)) 0.0 else r.getDouble(1),
-          metrics.snapshotAndReset(), Bench.joinStrategies(executed),
-          executed, jobLog.jobsJson, jobLog.stagesJson,
-          if (explain) Some(df.queryExecution.explainString(
-            ExplainMode.fromString("formatted"))) else None)
-        spark.catalog.clearCache()
-        Q.drainCheckpoints(spark)
-        System.gc()
-        rep
+        forced(spark, metrics, fn(spark, sfDir)) { f =>
+          Rep(f.sec, f.rows, f.checksum, f.metrics,
+            Bench.joinStrategies(f.executed), f.executed, jobLog.jobsJson,
+            jobLog.stagesJson,
+            if (explain) Some(f.result.queryExecution.explainString(
+              ExplainMode.fromString("formatted"))) else None)
+        }
       }
       once(explain = false) // untimed warm-up
       val runs = (1 to reps).map(i =>
@@ -111,7 +99,48 @@ object Profile {
     }
   }
 
-  /** One checksum-forced execution. */
+  /** One checksum-forced execution: wall seconds, the checksum
+    * aggregate's row count and hash sum, the stages' metrics, the
+    * result frame, and the AQE-final plan of the aggregate. */
+  private[graft] final case class Forced(sec: Double, rows: Long,
+      checksum: Double, metrics: RunMetrics, result: DataFrame,
+      executed: String)
+
+  /** Runs `query` once, checksum-forced, as Bench and Profile measure
+    * it: row count plus the sum of `xxhash64` over every column, so
+    * column pruning cannot delete work the count does not depend on
+    * (a projected window rank, an EWMA state), and `collect` rather
+    * than `head`, whose separate limit(1) plan would leave this plan's
+    * AQE unfinalized. `metrics` is reset first. `inspect` sees the run
+    * before the runner's hygiene, which follows every execution, a
+    * failed one too: operator-persisted caches and fixpoint checkpoints
+    * are released, and a GC lets the context cleaner reap dead
+    * broadcast blocks before the next timed window instead of inside
+    * it. */
+  private[graft] def forced[T](spark: SparkSession,
+      metrics: RunMetricsListener, query: => DataFrame)(inspect: Forced => T): T = {
+    val sc = spark.sparkContext
+    ListenerDrain.drain(sc)
+    metrics.snapshotAndReset()
+    try {
+      val t0 = System.nanoTime()
+      val df = query
+      // double: a BIGINT sum of hashes overflows, and ANSI mode throws
+      val agg = df.agg(count(lit(1)).as("n"),
+        sum(xxhash64(struct(df.columns.map(col): _*)).cast("double")).as("chk"))
+      val r = agg.collect()(0)
+      val sec = (System.nanoTime() - t0) / 1e9
+      ListenerDrain.drain(sc)
+      inspect(Forced(sec, r.getLong(0), if (r.isNullAt(1)) 0.0 else r.getDouble(1),
+        metrics.snapshotAndReset(), df, agg.queryExecution.executedPlan.toString))
+    } finally {
+      spark.catalog.clearCache()
+      Q.drainCheckpoints(spark)
+      System.gc()
+    }
+  }
+
+  /** One profiled execution. */
   private case class Rep(sec: Double, rows: Long, checksum: Double,
       m: RunMetrics, strategies: String, executed: String, jobs: JArray,
       stages: JArray, formatted: Option[String]) {

@@ -226,43 +226,21 @@ object StressBench {
         .asScala.map(_.getCollectionTime).filter(_ > 0).sum
     }
 
+    // One checksum-forced execution (Profile.forced, the Bench and
+    // Profile measurement) with the runner's hygiene after it; a failed
+    // point records the -1 sentinel.
     def measure(mk: () => org.apache.spark.sql.DataFrame): Entry = {
-      org.apache.spark.graftbridge.ListenerDrain.drain(spark.sparkContext)
-      metricsListener.snapshotAndReset()
       val gc0 = gcMillis()
-      val t0 = System.nanoTime()
-      var rows = -1L
-      var strategy = "err"
-      try {
-        // Force EVERY output column through a checksum, not
-        // groupBy().count(): under a bare count, column pruning deletes
-        // any computation the row count doesn't depend on — a window
-        // rank that is projected but never filtered, session ids, EWMA
-        // values — and the "measurement" collapses to a parquet count
-        // (caught in r5: event_sessionize at s10 read 0.20 s flat).
-        // xxhash64 over the full row struct makes all columns
-        // load-bearing; its per-row cost is noise next to the operator.
-        val df = mk()
-        val agg = df.agg(count(lit(1)).as("n"),
-          // cast to double: a BIGINT sum of hashes overflows, and under
-          // ANSI (Spark 4 default) that throws instead of wrapping
-          sum(xxhash64(struct(df.columns.map(col): _*)).cast("double")).as("chk"))
-        // collect(), not head(): head() runs a separate limit(1) plan,
-        // leaving this plan's AQE unfinalized — the strategy field must
-        // be the FINAL adaptive plan
-        rows = agg.collect()(0).getLong(0)
-        strategy = Bench.joinStrategies(agg.queryExecution.executedPlan.toString)
+      def gcSec = (gcMillis() - gc0) / 1e3
+      try Profile.forced(spark, metricsListener, mk()) { r =>
+        Entry(r.sec, r.rows, Bench.joinStrategies(r.executed), gcSec,
+          r.metrics.cpuShare)
       } catch {
-        case e: Throwable => System.err.println(s"[stress] failed: $e")
+        case e: Throwable =>
+          System.err.println(s"[stress] failed: $e")
+          org.apache.spark.graftbridge.ListenerDrain.drain(spark.sparkContext)
+          Entry(-1.0, -1L, "err", gcSec, metricsListener.snapshotAndReset().cpuShare)
       }
-      val sec = (System.nanoTime() - t0) / 1e9
-      val gcSec = (gcMillis() - gc0) / 1e3
-      org.apache.spark.graftbridge.ListenerDrain.drain(spark.sparkContext)
-      val m = metricsListener.snapshotAndReset()
-      spark.catalog.clearCache()
-      Q.drainCheckpoints(spark)
-      System.gc()
-      Entry(if (rows >= 0) sec else -1.0, rows, strategy, gcSec, m.cpuShare)
     }
 
     /** Times a driver-side action that is NOT a DataFrame collect (the

@@ -281,7 +281,7 @@ object Dedup {
     val perDoc = Q.ownPersist(sigsAndToks(docs)).df
     val cands = lshCandidatePairs(
       perDoc.select(col("doc_id"), col("sig")), lshBands(docs))
-    verifyPairs(cands, perDoc, thresh)
+    verifyPairs(cands, perDoc, perDoc, thresh)
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
@@ -307,25 +307,27 @@ object Dedup {
       graft.plans.VectorExprs.tokenHashesSorted(
         array_distinct(split(col("text"), " "))).as("toks"))
 
-  /** Signature-estimate pre-filter + exact-Jaccard verification over a
-    * PRECOMPUTED per-doc frame (doc_id, sig, toks) — the shared core of
-    * [[minhashLsh]] and the streaming near-dedup sink
+  /** Signature-estimate pre-filter + exact-Jaccard verification over
+    * PRECOMPUTED per-doc frames (doc_id, sig, toks), one per pair side —
+    * the shared core of [[minhashLsh]] and the streaming near-dedup sink
     * ([[graft.streaming.NearDedupStream]]): ONE code path, so the
     * stream's cross-epoch verdicts are bit-parity with the batch
-    * operator by construction, not by re-implementation. The frame is
-    * broadcast once per side (lever 4); the estimate filter stays
-    * ahead of the Jaccard merge scan, so most sub-threshold candidates
-    * never touch a token array. Output: (doc_a, doc_b, jaccard
-    * round-4dp), unordered. */
-  private[graft] def verifyPairs(cands: DataFrame, perDoc: DataFrame,
-      thresh: Double): DataFrame = {
+    * operator by construction, not by re-implementation. `perDocA` must
+    * hold every candidate's doc_a and `perDocB` every doc_b; the batch
+    * operator passes one frame for both, the sink only its batch as the
+    * doc_b side (every doc_b is a batch doc). Each side is broadcast
+    * once (lever 4); the estimate filter stays ahead of the Jaccard
+    * merge scan, so most sub-threshold candidates never touch a token
+    * array. Output: (doc_a, doc_b, jaccard round-4dp), unordered. */
+  private[graft] def verifyPairs(cands: DataFrame, perDocA: DataFrame,
+      perDocB: DataFrame, thresh: Double): DataFrame = {
     val minMatches = math.ceil((thresh - 0.10) * MinHashK).toInt
-    def side(s: String) = Q.maybeBroadcast(perDoc.select(
+    def side(perDoc: DataFrame, s: String) = Q.maybeBroadcast(perDoc.select(
       col("doc_id").as(s"doc_$s"), col("sig").as(s"sig_$s"),
       col("toks").as(s"t$s")))
     cands
-      .join(side("a"), "doc_a")
-      .join(side("b"), "doc_b")
+      .join(side(perDocA, "a"), "doc_a")
+      .join(side(perDocB, "b"), "doc_b")
       .filter(graft.plans.VectorExprs.sigMatch(col("sig_a"), col("sig_b")) >= minMatches)
       .withColumn("jaccard", graft.plans.VectorExprs.jaccardSorted(col("ta"), col("tb")))
       .filter(col("jaccard") >= thresh)

@@ -533,7 +533,12 @@ object Similarity {
     // extra pass over the adjacency per round (5 rounds × nk rows) that
     // bought nothing but eagerness (guide §5: one materialization pass
     // per round). Release ordering is unchanged: the caller releases
-    // `und` only after the round's checkpoint materializes.
+    // `und` only after the round's checkpoint materializes. Caveat: the
+    // compute-once guarantee of a cold cache holds per block manager,
+    // so on a multi-executor cluster (unlike the local[N] runs) both
+    // self-join sides can recompute the persisted subtree on different
+    // executors inside that one job — duplicated work, not wrong
+    // results (ROADMAP Open item 1).
     // Self-join over a FLAT LEAF of the materialized cache, not the
     // persisted plan (r18): when `edges` is a partitioning-claimed
     // checkpoint leaf, the analyzer's self-join dedup rewrites one

@@ -207,8 +207,10 @@ object NearDedupStream {
           .distinct())
       }
     // Payload rows for the cross-candidates' store side, pruned to the
-    // doc buckets that actually hold candidates.
-    val (perDoc, crossCands) = crossPairs match {
+    // doc buckets that actually hold candidates. They only ever join
+    // as doc_a: every doc_b, within-batch or cross-epoch, is a batch
+    // doc, so the doc_b side of the verify broadcasts the batch alone.
+    val (perDocA, crossCands) = crossPairs match {
       case None => (prep.df, None)
       case Some(cp) =>
         val cpOwned = Q.ownPersist(cp)
@@ -225,7 +227,7 @@ object NearDedupStream {
     val cands = crossCands.map(c => candsWithin.union(c.df))
       .getOrElse(candsWithin)
     // The SHARED verification core — bit-parity with minhashLsh.
-    val pairs = Dedup.verifyPairs(cands, perDoc, thresh)
+    val pairs = Dedup.verifyPairs(cands, perDocA, prep.df, thresh)
     val verdicts = Dedup.verdictsFromPairs(
       prep.df.select(col("doc_id")), pairs)
     // Per-epoch overwrites (idempotent under replay), ledger LAST.

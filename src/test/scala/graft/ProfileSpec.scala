@@ -82,7 +82,7 @@ class ProfileSpec extends SparkSpec {
 
   test("main entry points under src/main are limited to the allowlist") {
     val allowed = Set("Bench", "StressBench", "StressGen", "Verify",
-      "ProbeCalib", "Profile")
+      "Profile")
     val root = java.nio.file.Paths.get("src/main")
     assert(java.nio.file.Files.isDirectory(root), s"no $root under the cwd")
     val objectRe = """\bobject\s+(\w+)""".r

@@ -50,8 +50,8 @@ def heavy_breach_fingerprint(bench):
          material fraction of the tier itself. Likewise spill: a few
          stray MB on one entry is incidental, not memory pressure — a
          genuinely host-stalled run with a tiny spill must not be
-         misattributed as self-inflicted and lose its normalization
-         (ADVICE r11). The sf0.1 heavy tier's working set is O(100 MB);
+         misattributed as a memory stall (ADVICE r11). The sf0.1 heavy
+         tier's working set is O(100 MB);
          spill below ~a tier partition's worth is noise.)
       2. time-weighted mean heavy cpu_share < 0.7      -> host stall
          (the OS descheduled the worker threads; external load)
@@ -90,6 +90,18 @@ def heavy_breach_fingerprint(bench):
         return ""
     return ("plan regression (task_sec grew with gc/spill flat and "
             f"cpu_share {mean_share:.2f} — an arm's plan got slower)")
+
+
+def heaviest_task_row(bench):
+    """The heavy row that spent the most executor task-seconds, with the
+    tier's total, e.g. "pipeline_curate 710.2 of 1300.9 task-s"; "" when
+    the artifact carries no heavy_task_sec."""
+    task = {k: v for k, v in (bench.get("heavy_task_sec") or {}).items()
+            if isinstance(v, (int, float)) and v >= 0}
+    if not task:
+        return ""
+    name = max(task, key=task.get)
+    return f"{name} {task[name]:.1f} of {sum(task.values()):.1f} task-s"
 
 
 def load(name):
@@ -510,105 +522,17 @@ if stress is not None:
             f"(basis points): {p16_low}")
 
 # --- bench.json: headline + heavy tier -------------------------------
+# Gated on RAW seconds. Host-normalizing factors are gone: in the r17
+# and r18 driver runs they credited pipeline_curate's duplicated work
+# (597.7 and 710.2 executor task-s, vs ~28 task-s at 8 cores) to host
+# contention and let the tier under its budget. The per-row task
+# seconds name the row that did the work instead.
 bench = load("bench.json")
 if bench is not None:
-    # ADVICE r7: the round-7 driver snapshot committed a contended-host
-    # run (host_factor 2.18, 8 plan-time failures) as the canonical
-    # artifact. A canonical bench.json must be complete AND from a
-    # near-idle host — value sums only non-failed queries, so either
-    # condition makes totals incomparable across rounds.
+    # ADVICE r7: value sums only the queries that ran, so a run with
+    # failures is not comparable across rounds and is not canonical.
     if bench.get("complete") is False:
         failures.append("bench.json: complete=false (run had failures)")
-    hf = bench.get("host_factor")
-    if hf is not None and hf > 1.5:
-        failures.append(
-            f"bench.json: host_factor {hf:.2f} > 1.5 — contended-host run, "
-            f"not canonical; re-run idle (ADVICE r7)")
-    # r16 (VERDICT r15 #1): both factors now measure the same saturating
-    # quantity (parallelProbe passes over one idle anchor), so within
-    # one canonical run they must agree — the r15 artifacts carried
-    # 0.91-headline vs 1.57-heavy inside ONE run because the old serial
-    # probes could not see parallel-bound contention. Disagreement past
-    # 1.5× means contention changed mid-run (not canonical — re-run) or
-    # a probe regressed.
-    if hf is not None and "probe_parallel" not in bench:
-        failures.append(
-            "bench.json: probe_parallel absent — host_factor predates the "
-            "r16 saturating-probe definition; re-run Bench at HEAD")
-    # ADVICE r16 (medium): the parallel-probe anchors were calibrated at
-    # 32 threads (ProbeCalib, local[32]); a Bench run at any other
-    # SPARK_GRAFT_CPUS silently produces a miscalibrated host_factor —
-    # and with it a bogus total_normalized, the cross-round comparison
-    # currency. Pin the anchor condition in the canonical artifact.
-    ppt = bench.get("probe_parallel_threads")
-    if "probe_parallel" in bench and ppt != 32:
-        failures.append(
-            f"bench.json: probe_parallel_threads={ppt} but the parallel "
-            f"anchors are calibrated at 32 (ProbeCalib) — host_factor/"
-            f"total_normalized are miscalibrated; re-run with "
-            f"SPARK_GRAFT_CPUS=32 (ADVICE r16)")
-    # r17 closeout: the r16-era cross-tier agreement pin (headline vs
-    # heavy factor within 1.5×) is GONE — measured in one idle hour it
-    # compared different physical conditions (aged parent probe 0.89 s
-    # vs fresh child pre bracket 2.36 s after the same driver-shaped
-    # churn; standalone child pre 1.55 s), so it gated host-window
-    # churn, not contention, and would have failed every realistic
-    # driver run. Its two replacements below gate what it was for:
-    # (1) heavy_host_factor ≤ 1.5 — the child's PRE bracket vs the
-    #     envelope-centered child anchor (Bench.scala
-    #     ParallelProbeChildAnchorSec = 1.9; measured idle envelope
-    #     1.47–2.36 s ⇒ factor 0.77–1.24): tripping requires a pre
-    #     bracket ≳ 2.9 s, outside every measured idle condition.
-    # (2) within-tier post/pre drift ≤ 2.2 — contention arriving UNDER
-    #     the tier; idle runs read 1.1–1.6× (within-tier JVM aging),
-    #     the r17 contended run read 6.5×.
-    hhf_gate = bench.get("heavy_host_factor")
-    # r18: with per-row normalization present (heavy_row_factor +
-    # heavy_ext_share, unsuspect), a contended tier START is handled by
-    # the row factors themselves — the global-hf canonicality bar only
-    # hard-fails beyond 3.0 (the whole tier drowned; even per-row credit
-    # is then extrapolating) or, as before, at 1.5 when the artifact
-    # predates the per-row fields.
-    if hhf_gate is not None:
-        has_row_norm = ("heavy_row_factor" in bench
-                        and not bench.get("heavy_norm_suspect"))
-        bound = 3.0 if has_row_norm else 1.5
-        if hhf_gate > bound:
-            failures.append(
-                f"bench.json: heavy_host_factor {hhf_gate:.2f} > {bound} — "
-                f"child pre bracket outside the measured idle envelope; "
-                f"contended tier start, re-run idle (r17 closeout, r18 "
-                f"per-row relaxation)")
-    hpre, hpost = bench.get("heavy_parallel_pre"), bench.get("heavy_parallel_post")
-    if hpre and hpost and hpre > 0:
-        drift = hpost / hpre
-        if drift > 2.2:
-            failures.append(
-                f"bench.json: heavy tier bracket drift {drift:.2f}× "
-                f"(pre {hpre:.2f} s → post {hpost:.2f} s, > 2.2) — "
-                f"contention arrived mid-tier; not canonical, re-run "
-                f"(r17 closeout)")
-    # r17 (VERDICT r16 #1a): heavy_host_factor is the median of
-    # BracketPasses=3 saturating passes per side; the artifact must
-    # carry every pass, and a wide within-side spread means the host
-    # changed UNDER the bracket — the median is then anchored to
-    # nothing and the run is not canonical. Threshold 2.0×: idle calib
-    # passes span 0.88–1.39 s (1.6×), a mid-bracket contention swing
-    # reads well past 2×.
-    if hhf_gate is not None:
-        for side in ("heavy_parallel_pre_passes", "heavy_parallel_post_passes"):
-            passes = bench.get(side)
-            if not isinstance(passes, list) or len(passes) < 3:
-                failures.append(
-                    f"bench.json: '{side}' absent or short ({passes}) — "
-                    f"heavy_host_factor predates the r17 median-of-3 "
-                    f"bracket; re-run Bench at HEAD")
-            elif min(passes) > 0 and max(passes) / min(passes) > 2.0:
-                failures.append(
-                    f"bench.json: {side} spread "
-                    f"{max(passes) / min(passes):.2f}× > 2.0 "
-                    f"({[round(p, 2) for p in passes]}) — host changed "
-                    f"under the bracket; not canonical, re-run")
     if bench.get("failed"):
         failures.append(f"bench.json: failed queries {bench['failed']}")
     if bench.get("heavy_failed"):
@@ -617,65 +541,17 @@ if bench is not None:
     if total is None or budget is None:
         failures.append("bench.json: heavy tier absent (heavy_total/"
                         "heavy_budget_sec) — Bench.scala docstring cites it")
-    else:
-        # VERDICT r10 #1(b): the heavy tier is gated on its HOST-NORMALIZED
-        # total when the artifact carries the tier-local probe anchors
-        # (heavy_host_factor from probes bracketing the tier, exactly as
-        # the headline normalizes by probe_baseline). The r9/r10 driver
-        # breaches were both host stalls (cpu_share 0.46–0.60) on runs
-        # whose HEADLINE probes saw an idle host — contention arrived
-        # mid-run, which only a tier-local anchor can see. Normalization
-        # only ever DIVIDES by a factor > 1 (an idle-or-faster host never
-        # shrinks the gate), and the raw total still rides in the artifact.
-        hhf = bench.get("heavy_host_factor")
-        # VERDICT r9 item 3 + r10 #2: a breach must self-attribute, in
-        # evidence order (spill/gc, then cpu_share, then plan). The
-        # fingerprint is computed BEFORE the normalization decision:
-        # a JVM memory stall is SELF-inflicted, and its heap pressure
-        # also inflates the post-tier probe pass — normalizing by that
-        # inflated factor would launder the regression into "host
-        # load". A plan regression is self-inflicted too (the arm got
-        # slower at healthy gc/cpu; a transient probe hiccup must not
-        # normalize it away). Only a host-stall-attributed breach — or
-        # an unattributable pre-observability artifact, where the
-        # factor's slow anchors are the only evidence there is — gets
-        # the tier-local host normalization.
+    elif total > budget:
+        # VERDICT r9 item 3 + r10 #2: a breach must self-attribute — the
+        # row that spent the most task-seconds, and the ordered
+        # spill/gc, cpu_share, plan fingerprint.
+        top = heaviest_task_row(bench)
         attrib = heavy_breach_fingerprint(bench)
-        self_inflicted = (attrib.startswith("JVM memory stall")
-                          or attrib.startswith("plan regression"))
-        # r18 (VERDICT r17 #1): prefer the PER-ROW normalized total when
-        # the artifact carries it — each row normalized by max(1,
-        # measured external-CPU share credit, boundary-probe factor); it
-        # equals the raw total on a clean run and, unlike the global
-        # heavy_host_factor divide, sees a contention wave that lives
-        # inside one row (the r17 breach shape). A suspect flag (probe
-        # and ext signals disagreeing) disqualifies it. Self-inflicted
-        # breaches (gc/spill stall, plan regression) never normalize,
-        # as before.
-        per_row = bench.get("heavy_total_normalized")
-        suspect = bench.get("heavy_norm_suspect")
-        has_per_row = (per_row is not None
-                       and "heavy_row_factor" in bench and not suspect)
-        if suspect:
-            failures.append(
-                "bench.json: heavy_norm_suspect — the boundary-probe and "
-                "external-CPU contention signals disagree (>1.5x probe "
-                "factor at <2% measured external share); run is not "
-                "canonical, re-run (r18)")
-        if has_per_row and not self_inflicted:
-            effective = per_row
-            norm = (f" (per-row normalized {effective:.1f}s, raw "
-                    f"{total:.1f}s)") if effective != total else ""
-        else:
-            normalize = hhf is not None and hhf > 1.0 and not self_inflicted
-            effective = total / hhf if normalize else total
-            norm = (f" (normalized {effective:.1f}s at heavy_host_factor "
-                    f"{hhf:.2f})" if normalize else "")
-        if effective > budget:
-            failures.append(
-                f"bench.json: heavy_total {total:.1f}s{norm} breaches its "
-                f"{budget:.0f}s budget — an arm regressed (Bench.scala "
-                f"contract)" + (f" [{attrib}]" if attrib else ""))
+        failures.append(
+            f"bench.json: heavy_total {total:.1f}s breaches its "
+            f"{budget:.0f}s budget — an arm regressed (Bench.scala "
+            f"contract)" + (f"; most work: {top}" if top else "")
+            + (f" [{attrib}]" if attrib else ""))
     # r10: the heavy tier must carry its own gc/spill observability
     # (VERDICT r9 item 1) — a bench.json without them cannot attribute
     # the next breach and is not a canonical artifact.
@@ -727,35 +603,26 @@ if ball is not None:
     # VERDICT r11 #5: the full-registry sweep grew +52% in one round
     # (232 → 353 s raw); give it an explicit envelope so growth is a
     # deliberate re-budget, not silent drift toward a 10-minute sweep.
-    # Normalization follows the heavy tier's documented policy: divide
-    # by host_factor ONLY when it exceeds 1 (a contended run gets
-    # relief; a faster-than-baseline probe run must not INFLATE the
-    # gated number — an hf 0.75 probe window would otherwise read a
-    # healthy 354 s sweep as 474 s). 500 s ≈ the r12 169-row sweep
-    # (~354 s raw) + ~40% headroom for the ambient host windows the
-    # r11 memory documented (same-HEAD raw totals swung 275→368 s).
-    # Raising this number requires a sentence in SURVEY justifying
-    # what was added — that is the point of the gate.
-    # r16 deliberate re-budget 500 → 575: the registry grew 169 → 179
-    # rows since the 500 s number was set (r13–r16 added the graph
-    # family's composed arms and six verdict rows, each individually
-    # priced in bench_all), and the r16 idle raw totals read 476–500 s
-    # — the old envelope's headroom was gone on registry GROWTH, not
-    # row regression. 575 ≈ the r16 idle sweep + ~15% window headroom;
-    # justification sentence mirrored in SURVEY round 16.
-    bt, bhf = ball.get("value"), ball.get("host_factor")
-    if bt is None or bhf is None:
+    # Gated on the raw total, like the heavy tier. r16 deliberate
+    # re-budget 500 → 575: the registry grew 169 → 179 rows since the
+    # 500 s number was set (r13–r16 added the graph family's composed
+    # arms and six verdict rows, each individually priced in
+    # bench_all), and the r16 idle raw totals read 476–500 s — the old
+    # envelope's headroom was gone on registry GROWTH, not row
+    # regression. 575 ≈ the r16 idle sweep + ~15% window headroom;
+    # justification sentence mirrored in SURVEY round 16. Raising this
+    # number requires a sentence in SURVEY justifying what was added —
+    # that is the point of the gate.
+    bt = ball.get("value")
+    if bt is None:
         failures.append(
-            "bench_all.json: value/host_factor absent — the sweep "
-            "envelope gate (VERDICT r11 #5) needs them")
-    else:
-        beff = bt / bhf if bhf > 1.0 else bt
-        if beff > 575.0:
-            failures.append(
-                f"bench_all.json: effective total {beff:.0f}s (raw "
-                f"{bt:.0f}s at host_factor {bhf:.2f}) breaches the 575 s "
-                f"envelope (VERDICT r11 #5) — a row regressed or the "
-                f"registry outgrew the budget; re-budget deliberately")
+            "bench_all.json: value absent — the sweep envelope gate "
+            "(VERDICT r11 #5) needs it")
+    elif bt > 575.0:
+        failures.append(
+            f"bench_all.json: total {bt:.0f}s breaches the 575 s envelope "
+            f"(VERDICT r11 #5) — a row regressed or the registry outgrew "
+            f"the budget; re-budget deliberately")
 
 if failures:
     print("ARTIFACT CHECK FAILED:")

@@ -1,10 +1,12 @@
 #!/usr/bin/env python3
-"""Fixture tests for artifact_check.heavy_breach_fingerprint (VERDICT r10 #2).
+"""Fixture tests for tools/artifact_check.py.
 
-The r10 driver breach (cpu_share 0.57/0.60, gc 4.3 s, zero spill against a
+Cases 1-7 test heavy_breach_fingerprint (VERDICT r10 #2): the r10
+driver breach (cpu_share 0.57/0.60, gc 4.3 s, zero spill against a
 33 s excess) was mislabeled "JVM memory stall" by the old gc-only
-fingerprint. Each fixture below is shaped like a real observed breach
-class; the test asserts the ordered diagnosis names the right culprit.
+fingerprint. Each fixture is shaped like a real observed breach class;
+the test asserts the ordered diagnosis names the right culprit. Cases
+8-10 run the whole checker against doctored artifacts.
 
 Run: python3 tools/test_artifact_check.py   (exit 0 = all pass)
 """
@@ -107,7 +109,7 @@ check("spill-no-gc",
 # 6d. ADVICE r11: a genuinely host-stalled run (cpu_share 0.55/0.60)
 #     with INCIDENTAL spill (1 MiB on one entry, far below the material
 #     threshold) must read as a host stall — the old spill>0 test
-#     misattributed it as self-inflicted and blocked normalization.
+#     misattributed it as a JVM memory stall.
 tiny = bench(100.0, 90.0, 2.0, 0,
              [0.55, 0.60], {"a": 60.0, "b": 40.0})
 tiny["heavy_spill_bytes"] = {"a": 1 << 20, "b": 0}
@@ -120,102 +122,101 @@ wt = bench(100.0, 90.0, 2.0, 0,
            {"slow": 70.0, "f1": 2.0, "f2": 2.0, "f3": 2.0, "f4": 2.0})
 check("time-weighted", fp(wt), "host stall")
 
-# 8. End-to-end normalization policy (r11 review pass): run the whole
-#    checker against a doctored repo root. A breach the fingerprint
-#    attributes to the PLAN must fail even when heavy_host_factor > 1
-#    would bring it under budget (self-inflicted regressions are never
-#    normalized away); the identical numbers attributed to a HOST
-#    stall must normalize and pass.
+# End-to-end cases run the whole checker against a temp repo root.
+# Each builds its bench.json from its own artifact — a committed
+# BENCH_r*.json driver record, never the live bench.json — so a new
+# committed bench.json cannot break them; BENCH_stress.json and
+# bench_all.json are the committed ones unless a case doctors them.
 import json
 import shutil
 import subprocess
 import tempfile
 
 repo = os.path.join(os.path.dirname(__file__), "..")
-for label, shares, want_rc in (("plan-not-normalized", [0.97, 0.95], 1),
-                               ("host-stall-normalized", [0.55, 0.60], 0)):
+
+
+def parsed(name):
+    with open(os.path.join(repo, name)) as f:
+        return json.load(f)["parsed"]
+
+
+def run_check(bench_obj, stress_obj=None):
     tmp = tempfile.mkdtemp()
     try:
-        for f in ("BENCH_stress.json", "bench_all.json"):
-            shutil.copy(os.path.join(repo, f), os.path.join(tmp, f))
-        doct = json.load(open(os.path.join(repo, "bench.json")))
-        doct.update(bench(95.0, 90.0, 1.0, 0, shares,
-                          {"a": 60.0, "b": 35.0}))
-        doct["heavy_host_factor"] = 1.12  # 95/1.12 = 84.8 < 90
-        json.dump(doct, open(os.path.join(tmp, "bench.json"), "w"))
-        r = subprocess.run(
+        shutil.copy(os.path.join(repo, "bench_all.json"), tmp)
+        if stress_obj is None:
+            shutil.copy(os.path.join(repo, "BENCH_stress.json"), tmp)
+        else:
+            with open(os.path.join(tmp, "BENCH_stress.json"), "w") as f:
+                json.dump(stress_obj, f)
+        with open(os.path.join(tmp, "bench.json"), "w") as f:
+            json.dump(bench_obj, f)
+        return subprocess.run(
             [sys.executable,
              os.path.join(os.path.dirname(__file__), "artifact_check.py"),
              tmp],
             capture_output=True, text=True)
-        if r.returncode != want_rc:
-            failures.append(
-                f"{label}: expected exit {want_rc}, got {r.returncode} "
-                f"({r.stdout.strip().splitlines()[-1] if r.stdout else ''})")
     finally:
         shutil.rmtree(tmp)
 
-# 8b. r17 closeout gates, end-to-end: (i) a heavy_host_factor outside
-#     the measured idle envelope (child pre bracket ≳ 2.9 s ⇒ factor
-#     > 1.5) and (ii) within-tier post/pre bracket drift past 2.2×
-#     must each fail BY NAME. Both doctor the committed canonical
-#     bench.json, so the fixtures also pin that the real artifact sits
-#     inside both gates.
-for label, patch, want in (
-        ("child-factor-contended", {"heavy_host_factor": 1.8},
-         "heavy_host_factor"),
-        ("mid-tier-drift", {"heavy_parallel_pre": 1.4,
-                            "heavy_parallel_post": 3.5}, "drift")):
-    tmp = tempfile.mkdtemp()
-    try:
-        for f in ("BENCH_stress.json", "bench_all.json"):
-            shutil.copy(os.path.join(repo, f), os.path.join(tmp, f))
-        doct = json.load(open(os.path.join(repo, "bench.json")))
-        doct.update(patch)
-        json.dump(doct, open(os.path.join(tmp, "bench.json"), "w"))
-        r = subprocess.run(
-            [sys.executable,
-             os.path.join(os.path.dirname(__file__), "artifact_check.py"),
-             tmp],
-            capture_output=True, text=True)
-        if r.returncode == 0:
-            failures.append(f"{label}: doctored artifact passed the check")
-        elif want not in r.stdout:
-            failures.append(
-                f"{label}: failure output does not name '{want}':\n"
-                f"{r.stdout}")
-    finally:
-        shutil.rmtree(tmp)
+
+def bench_lines(r):
+    return [l for l in r.stdout.splitlines() if "bench.json:" in l
+            and "bench_all.json:" not in l]
+
+
+# 8. The heavy budget gates the RAW total: a 95 s tier breaches the
+#    90 s budget even when the artifact carries a heavy_host_factor
+#    (1.12 would have normalized it to 84.8 s) and cpu_share says the
+#    plan, not the host, spent the time.
+doct = parsed("BENCH_r18_c8.json")
+doct.update(bench(95.0, 90.0, 1.0, 0, [0.97, 0.95], {"a": 60.0, "b": 35.0}))
+doct["heavy_host_factor"] = 1.12
+r = run_check(doct)
+if r.returncode != 1 or not any("breaches its 90s budget" in l
+                                for l in bench_lines(r)):
+    failures.append(f"plan-not-normalized: expected a budget failure, got "
+                    f"exit {r.returncode}:\n{r.stdout}")
+
+# 8b. The r17 and r18 32-core driver runs: both breached the budget raw
+#     (107.9 s and 148.1 s) while their host factors normalized them
+#     under it. The budget line must name the row that did the work —
+#     pipeline_curate, duplicating work across 32 threads.
+for art, want in (("BENCH_r17.json", "pipeline_curate 597.7 of"),
+                  ("BENCH_r18.json", "pipeline_curate 710.2 of")):
+    r = run_check(parsed(art))
+    budget = [l for l in bench_lines(r) if "budget" in l]
+    if r.returncode != 1 or not any(want in l for l in budget):
+        failures.append(f"{art}: expected exit 1 with a budget line naming "
+                        f"'{want}', got exit {r.returncode}:\n{r.stdout}")
+
+# 8c. The 8-core driver runs of the same rounds (48.8 s and 40.8 s raw)
+#     pass the bench.json section.
+for art in ("BENCH_r17_c8.json", "BENCH_r18_c8.json"):
+    r = run_check(parsed(art))
+    if bench_lines(r):
+        failures.append(f"{art}: bench.json section failed:\n{r.stdout}")
 
 # 9. Stress-freshness gate (VERDICT r12 #2): a BENCH_stress.json whose
 #    sweep predates a stress-armed registry row must fail BY NAME —
 #    the silent-staleness class the bench_all newest-row pin already
 #    stops. Doctor the committed artifact by deleting one armed row.
-tmp = tempfile.mkdtemp()
-try:
-    for f in ("bench.json", "bench_all.json"):
-        shutil.copy(os.path.join(repo, f), os.path.join(tmp, f))
-    stale = json.load(open(os.path.join(repo, "BENCH_stress.json")))
-    stale.get("queries", {}).pop("graph_components_nnd", None)
-    # drop the recorded knn_* round series too — a pre-r13 sweep has
-    # neither, and both absences must be named
-    stale["cc_rounds"] = {k: v for k, v in stale.get("cc_rounds", {}).items()
-                          if not k.startswith("knn_")}
-    json.dump(stale, open(os.path.join(tmp, "BENCH_stress.json"), "w"))
-    r = subprocess.run(
-        [sys.executable,
-         os.path.join(os.path.dirname(__file__), "artifact_check.py"), tmp],
-        capture_output=True, text=True)
-    if r.returncode == 0:
-        failures.append("stale-stress: doctored artifact passed the check")
-    else:
-        for want in ("graph_components_nnd", "knn_*"):
-            if want not in r.stdout:
-                failures.append(
-                    f"stale-stress: failure output does not name '{want}':\n"
-                    f"{r.stdout}")
-finally:
-    shutil.rmtree(tmp)
+with open(os.path.join(repo, "BENCH_stress.json")) as f:
+    stale = json.load(f)
+stale.get("queries", {}).pop("graph_components_nnd", None)
+# drop the recorded knn_* round series too — a pre-r13 sweep has
+# neither, and both absences must be named
+stale["cc_rounds"] = {k: v for k, v in stale.get("cc_rounds", {}).items()
+                      if not k.startswith("knn_")}
+r = run_check(parsed("BENCH_r18_c8.json"), stale)
+if r.returncode == 0:
+    failures.append("stale-stress: doctored artifact passed the check")
+else:
+    for want in ("graph_components_nnd", "knn_*"):
+        if want not in r.stdout:
+            failures.append(
+                f"stale-stress: failure output does not name '{want}':\n"
+                f"{r.stdout}")
 
 # 10. Single-point allowlist (VERDICT r13 #5): a row truncated to ONE
 #     valid scale point must fail BY NAME unless it is in
@@ -223,32 +224,23 @@ finally:
 #     coverage. Doctor the committed artifact by dropping all but one
 #     point of a multi-point row; the allowlisted graph_components_knn
 #     (still single-point in the same artifact) must NOT be named.
-tmp = tempfile.mkdtemp()
-try:
-    for f in ("bench.json", "bench_all.json"):
-        shutil.copy(os.path.join(repo, f), os.path.join(tmp, f))
-    doct = json.load(open(os.path.join(repo, "BENCH_stress.json")))
-    pr = doct["queries"]["graph_pagerank"]
-    for k in [k for k in pr if k.startswith("s") and k != "s1"]:
-        del pr[k]
-    json.dump(doct, open(os.path.join(tmp, "BENCH_stress.json"), "w"))
-    r = subprocess.run(
-        [sys.executable,
-         os.path.join(os.path.dirname(__file__), "artifact_check.py"), tmp],
-        capture_output=True, text=True)
-    if r.returncode == 0:
-        failures.append("single-point: doctored artifact passed the check")
-    else:
-        if "graph_pagerank' carries a single valid scale point" not in r.stdout:
-            failures.append(
-                "single-point: failure output does not name the truncated "
-                f"row:\n{r.stdout}")
-        if "graph_components_knn' carries a single" in r.stdout:
-            failures.append(
-                "single-point: the allowlisted anchor row was flagged — "
-                "SINGLE_POINT_OK is not consulted")
-finally:
-    shutil.rmtree(tmp)
+with open(os.path.join(repo, "BENCH_stress.json")) as f:
+    doct = json.load(f)
+pr = doct["queries"]["graph_pagerank"]
+for k in [k for k in pr if k.startswith("s") and k != "s1"]:
+    del pr[k]
+r = run_check(parsed("BENCH_r18_c8.json"), doct)
+if r.returncode == 0:
+    failures.append("single-point: doctored artifact passed the check")
+else:
+    if "graph_pagerank' carries a single valid scale point" not in r.stdout:
+        failures.append(
+            "single-point: failure output does not name the truncated "
+            f"row:\n{r.stdout}")
+    if "graph_components_knn' carries a single" in r.stdout:
+        failures.append(
+            "single-point: the allowlisted anchor row was flagged — "
+            "SINGLE_POINT_OK is not consulted")
 
 if failures:
     print("FINGERPRINT FIXTURES FAILED:")
