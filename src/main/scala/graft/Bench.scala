@@ -192,6 +192,9 @@ object Bench {
     // for why the tier runs in its own process.
     val heavyTierArg = args.find(_.startsWith("--heavy-tier="))
     val heavyTierMode = heavyTierArg.isDefined
+    // The tier child's own warehouse (see mkSession), deleted once its session stops.
+    val heavyWarehouse = Option.when(heavyTierMode)(
+      java.nio.file.Files.createTempDirectory("graft_heavy_wh_").toFile)
     // Bench-time broadcast pin (VERDICT r3 #1): the gates Q.maybeBroadcast
     // reads are set EXPLICITLY on every session this run builds, so no
     // earlier conf drift in a long run can flip join_range_binned's
@@ -210,10 +213,7 @@ object Bench {
       // read died on FILE_NOT_EXIST reading graft_lineitem after the
       // child re-registered it). The tier child gets its own temp
       // warehouse; the copy cost lands in heavy_jvm_setup_sec.
-      if (heavyTierMode)
-        b.config("spark.sql.warehouse.dir",
-          java.nio.file.Files.createTempDirectory("graft_heavy_wh_")
-            .toString)
+      heavyWarehouse.foreach(w => b.config("spark.sql.warehouse.dir", w.toString))
       val s = b.getOrCreate()
       s.sparkContext.setLogLevel("WARN")
       s.conf.set(Q.BroadcastSideThresholdKey, "8000000")
@@ -354,18 +354,17 @@ object Bench {
       // bench_all, where these confs are never set) — the tier prices
       // the 100 TB composition, not the sf0.1 oracle stand-in.
       val outPath = heavyTierArg.get.split("=", 2)(1)
-      val setupSec = time(sources.CatalogStats.registerAndAnalyze(spark, sfDir))
-      spark.conf.set("spark.graft.curate.pairStrategy", "lsh")
-      spark.conf.set("spark.graft.components.pairStrategy", "lsh")
-      val rows =
-        try runSuite(heavy.filter(SparkEntry.queries.contains))
-        finally {
-          spark.conf.unset("spark.graft.curate.pairStrategy")
-          spark.conf.unset("spark.graft.components.pairStrategy")
-        }
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath),
-        compact(render(heavyFields(rows, errors.toSeq, setupSec))))
-      spark.stop()
+      try {
+        val setupSec = time(sources.CatalogStats.registerAndAnalyze(spark, sfDir))
+        spark.conf.set("spark.graft.curate.pairStrategy", "lsh")
+        spark.conf.set("spark.graft.components.pairStrategy", "lsh")
+        val rows = runSuite(heavy.filter(SparkEntry.queries.contains))
+        java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath),
+          compact(render(heavyFields(rows, errors.toSeq, setupSec))))
+      } finally {
+        spark.stop()
+        heavyWarehouse.foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+      }
       return
     }
 

@@ -151,14 +151,16 @@ object Q {
     }
   }
 
-  def maybeBroadcast(side: DataFrame): DataFrame = {
+  /** `fanOut` scales both estimates for a side that explodes k rows per
+    * input row: Spark estimates a Generate at one row per input row. */
+  def maybeBroadcast(side: DataFrame, fanOut: Int = 1): DataFrame = {
     val conf = side.sparkSession.conf
     val rowThreshold = conf.get(BroadcastSideThresholdKey, "8000000").toLong
     val byteThreshold = conf
       .get(BroadcastSideMaxBytesKey, (256L * 1024 * 1024).toString).toLong
     val st = side.queryExecution.optimizedPlan.stats
-    val estRows = st.rowCount.getOrElse(st.sizeInBytes / EstRowBytes)
+    val estRows = st.rowCount.getOrElse(st.sizeInBytes / EstRowBytes) * fanOut
     if (estRows <= BigInt(rowThreshold) &&
-        st.sizeInBytes <= BigInt(byteThreshold)) broadcast(side) else side
+        st.sizeInBytes * fanOut <= BigInt(byteThreshold)) broadcast(side) else side
   }
 }

@@ -194,41 +194,67 @@ object Dedup {
       graft.plans.VectorExprs.minhashSig(
         array_distinct(split(col("text"), " ")), MinHashK).as("sig"))
 
+  /** The one banded-candidate operator behind every LSH arm: each row
+    * of `keyed` carries one key per band (`keys`, evaluated on `keyed`),
+    * and a pair is a candidate iff it shares at least one band's key.
+    * The keys ride flat beside a posexplode of (band, band key); the
+    * self-join on (band, band key) with `a.id < b.id` emits each pair
+    * EXACTLY once by a linear first-shared-band rule,
+    * `a.band = coalesce(when(a.k0 = b.k0, 0), …, when(a.k{n-2} = b.k{n-2}, n-2), n-1)`,
+    * in place of a whole-stream `distinct()` shuffle (lever 2 of
+    * [[minhashLsh]]); a pairwise "no earlier band matches" predicate
+    * says the same in O(bands²).
+    *
+    * No broadcast hint by default: Spark's 10 MB threshold decides, and
+    * past it both sides shuffle on the band key (at StressBench s10,
+    * 16 bands × 200 k vectors, as fast as a hinted broadcast, with a
+    * lower memory peak). `hintBroadcast` sends the b side through
+    * [[graft.Q.maybeBroadcast]] at bands × its estimate (Spark estimates
+    * a posexplode at one row per input row); the verdict arms set it,
+    * which at sf0.1 spares their banding exchange.
+    *
+    * Output: `pair._1` (the smaller id), `pair._2`, then `<c>_a`, `<c>_b`
+    * per `carry` column, each from its own side. */
+  private[graft] def bandedPairs(keyed: DataFrame, id: String, keys: Seq[Column],
+      pair: (String, String), carry: Seq[String] = Nil,
+      hintBroadcast: Boolean = false): DataFrame = {
+    val ks = keys.indices.map(b => s"_bp_k$b")
+    require(!(id +: carry).exists(_.startsWith("_bp_")), "bandedPairs reserves _bp_ names")
+    val kept = (id +: carry ++: ks).map(col)
+    val banded = keyed
+      .select(col(id) +: carry.map(col) ++: keys.zip(ks).map { case (k, n) => k.as(n) }: _*)
+      .select(kept :+ posexplode(array(ks.map(col): _*)).as(Seq("_bp_band", "_bp_key")): _*)
+    // The last band needs no compare: a match there whose earlier
+    // bands all differ IS its first shared band.
+    val firstShared = coalesce(ks.init.zipWithIndex.map { case (k, b) =>
+      when(col(s"a.$k") === col(s"b.$k"), b) } :+ lit(ks.size - 1): _*)
+    val bSide = if (hintBroadcast) Q.maybeBroadcast(banded, fanOut = ks.size) else banded
+    banded.as("a").join(bSide.as("b"),
+      col("a._bp_band") === col("b._bp_band") && col("a._bp_key") === col("b._bp_key") &&
+        col(s"a.$id") < col(s"b.$id") && col("a._bp_band") === firstShared)
+      .select(col(s"a.$id").as(pair._1) +: col(s"b.$id").as(pair._2) +:
+        carry.flatMap(c => Seq(col(s"a.$c").as(s"${c}_a"), col(s"b.$c").as(s"${c}_b"))): _*)
+  }
+
+  /** MinHash band keys: xxhash64 of each band's `MinHashK / nBands`-long
+    * signature slice — an 8-byte join key instead of a ~120-char concat
+    * string. A hash collision can only ADD a candidate, and every
+    * candidate is exact-verified, so correctness is unaffected. One
+    * spelling for [[lshCandidatePairs]] and the streaming sink's band
+    * store: cross-epoch candidates must be the relation the within-batch
+    * banding finds. */
+  private[graft] def minhashBandKeys(sig: Column, nBands: Int): Seq[Column] = {
+    val rows = MinHashK / nBands
+    (0 until nBands).map(b => xxhash64(slice(sig, b * rows + 1, rows)))
+  }
+
   /** Banded candidate stage of [[minhashLsh]] — (doc_a, doc_b) emitted
     * exactly once per banding match, BEFORE any verification. Split out
     * so scale instrumentation (StressBench) can count candidates with
     * the same code the operator runs: the candidate count is THE number
-    * that must grow sub-quadratically for the banding claim to hold.
-    *
-    * Band key = xxhash64 of the 12-long signature slice: an 8-byte join
-    * key instead of a ~120-char concat string — smaller banding exchange
-    * and cheaper equality. A hash collision can only ADD a candidate,
-    * and every candidate is exact-verified by the caller, so correctness
-    * is unaffected. The `firstMatchOnly` predicate accepts a (band, key)
-    * match only when no EARLIER band also matches — exactly-once
-    * emission evaluated inside the hash join on flat longs, replacing a
-    * whole-stream distinct() (round 4, lever 2). */
-  private[graft] def lshCandidatePairs(sigs: DataFrame, nBands: Int): DataFrame = {
-    val rows = MinHashK / nBands
-    val keyCols = (0 until nBands).map(b => s"k$b")
-    val keyed = sigs.select(col("doc_id") +:
-      (0 until nBands).map(b =>
-        xxhash64(slice(col("sig"), b * rows + 1, rows)).as(keyCols(b))): _*)
-    val banded = keyed
-      .select((col("doc_id") +: keyCols.map(col)) :+
-        posexplode(array(keyCols.map(col): _*)): _*)
-      .select(Seq(col("doc_id"), col("pos").as("band"),
-        col("col").as("band_key")) ++ keyCols.map(col): _*)
-    val firstMatchOnly: Column = (1 until nBands).map { i =>
-      (col("a.band") === i) &&
-        (0 until i).map(j => col(s"a.k$j") =!= col(s"b.k$j")).reduce(_ && _)
-    }.foldLeft((col("a.band") === 0): Column)(_ || _)
-    banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.band_key") === col("b.band_key") &&
-        col("a.doc_id") < col("b.doc_id") && firstMatchOnly)
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-  }
+    * that must grow sub-quadratically for the banding claim to hold. */
+  private[graft] def lshCandidatePairs(sigs: DataFrame, nBands: Int): DataFrame =
+    bandedPairs(sigs, "doc_id", minhashBandKeys(col("sig"), nBands), ("doc_a", "doc_b"))
 
   /** Candidate pairs straight from a documents frame — the
     * instrumentation entry point ([[lshCandidatePairs]] over
@@ -243,15 +269,17 @@ object Dedup {
    * Four scale levers (each measured at sf0.1 — the naive version spent
    * ~230 s in the verification join alone):
    *  1. banding bounds candidate generation (never all-pairs);
-   *  2. FIRST-MATCHING-BAND dedup (round 4): a pair agreeing on k bands
-   *     would surface k times; instead of a `distinct()` over the whole
+   *  2. FIRST-SHARED-BAND dedup: a pair agreeing on k bands would
+   *     surface k times; instead of a `distinct()` over the whole
    *     candidate stream (was ~2.2 s of the 3.4 s total at sf0.1 — the
-   *     single largest stage), the join predicate only accepts a match at
-   *     band b when every earlier band's keys differ, so each pair is
-   *     emitted EXACTLY once and the shuffle disappears. The per-band
-   *     keys ride as flat long columns (codegen'd compares, no array
-   *     allocation — an array/zip_with spelling of the same predicate
-   *     measured 1.7× SLOWER than the distinct it replaces);
+   *     single largest stage), [[bandedPairs]] — the banding operator
+   *     every LSH arm shares — keeps a match at band b only when b is
+   *     the first band whose keys agree (one linear `coalesce` over the
+   *     per-band key compares), so each pair is emitted EXACTLY once
+   *     and the shuffle disappears. The per-band keys ride as flat
+   *     long columns (codegen'd compares, no array allocation — an
+   *     array/zip_with spelling of the band compares measured 1.7×
+   *     SLOWER than the distinct it replaces);
    *  3. the MinHash estimate (matching signature fraction) is a 60-long
    *     compare per candidate — it discards most sub-threshold candidates
    *     before any token array is touched (0.10 slack ≈ 3σ of the
@@ -403,17 +431,15 @@ object Dedup {
    */
   def simhashPairs(docs: DataFrame, maxHamming: Int): DataFrame = {
     require(maxHamming <= 3, "4-band pigeonhole is only exact for hamming <= 3")
-    val sh = simhash(docs)
-    val banded = sh.select(col("doc_id"), col("simhash"),
-      posexplode(expr("transform(sequence(0, 3), b -> (simhash >> (b * 16)) & 65535)")))
-      .select(col("doc_id"), col("simhash"), col("pos").as("band"), col("col").as("bkey"))
-    banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).cast("long").as("hamming"))
-      .distinct()
+    // A null sketch has null band keys and never pairs, so the copy the
+    // pairs carry may read 0 there. Non-null, it spares the planner an
+    // inferred isnotnull filter that evaluates the sketch a second time.
+    val sh = simhash(docs).withColumn("sh", coalesce(col("simhash"), lit(0L)))
+    bandedPairs(sh, "doc_id",
+      (0 until 4).map(b => shiftright(col("simhash"), b * 16).bitwiseAND(65535L)),
+      ("doc_a", "doc_b"), carry = Seq("sh"))
+      .select(col("doc_a"), col("doc_b"),
+        bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).cast("long").as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .orderBy(col("doc_a"), col("doc_b"))
   }
@@ -464,16 +490,8 @@ object Dedup {
     val bk = Q.ownPersist(sigs.select(col("doc_id") +:
       (0 until bands).map(b => md5(concat(
         (b * rows until (b + 1) * rows).map(i => col(s"h$i")): _*)).as(s"k$b")): _*)).df
-    // Candidate stream: one equi self-join per band, deduped once. The
-    // per-doc band frame rides the conf-gated broadcast; above the gate
-    // the planner shuffles on the band key — the scale-safe shape.
-    val cand = (0 until bands).map { b =>
-      bk.select(col("doc_id").as("doc_a"), col(s"k$b").as("bkey"))
-        .join(Q.maybeBroadcast(
-          bk.select(col("doc_id").as("doc_b"), col(s"k$b").as("bkey"))), Seq("bkey"))
-        .filter(col("doc_a") < col("doc_b"))
-        .select(col("doc_a"), col("doc_b"))
-    }.reduce(_ union _).distinct()
+    val cand = bandedPairs(bk, "doc_id", (0 until bands).map(b => col(s"k$b")),
+      ("doc_a", "doc_b"), hintBroadcast = true)
     // Exact verification rides the codegen'd sorted-xxhash64 merge scan
     // (the dedup_near pattern, oracle-proven: identical token-set
     // cardinalities ⇒ identical jaccard VALUE as the oracle's
@@ -525,16 +543,10 @@ object Dedup {
     val bk = Q.ownPersist(sk.select(col("doc_id") +: col("sk") +:
       (0 until 4).map(b =>
         shiftright(col("sk"), b * 15).bitwiseAND(lit(32767L)).as(s"k$b")): _*)).df
-    val cand = (0 until 4).map { b =>
-      bk.select(col("doc_id").as("doc_a"), col("sk").as("ska"), col(s"k$b").as("bkey"))
-        .join(Q.maybeBroadcast(bk.select(
-          col("doc_id").as("doc_b"), col("sk").as("skb"), col(s"k$b").as("bkey"))),
-          Seq("bkey"))
-        .filter(col("doc_a") < col("doc_b"))
-        .select(col("doc_a"), col("doc_b"), col("ska"), col("skb"))
-    }.reduce(_ union _).distinct()
+    val cand = bandedPairs(bk, "doc_id", (0 until 4).map(b => col(s"k$b")),
+      ("doc_a", "doc_b"), carry = Seq("sk"), hintBroadcast = true)
     cand
-      .withColumn("hamming", bit_count(col("ska").bitwiseXOR(col("skb"))).cast("long"))
+      .withColumn("hamming", bit_count(col("sk_a").bitwiseXOR(col("sk_b"))).cast("long"))
       .filter(col("hamming") <= maxHamming)
       .select(col("doc_a"), col("doc_b"), col("hamming"))
       .orderBy(col("doc_a"), col("doc_b"))

@@ -272,32 +272,24 @@ object Similarity {
         lit(0), (acc, x) => acc * 2 + x))
   }
 
-  /** LSH candidate pairs + exact verified cosine ≥ thresh. Candidate
-    * generation is a band-key self-join (one shuffle by band key, never
-    * all-pairs); verification attaches vectors per side — broadcast at
-    * this sf, flips to a shuffle join on vec_id once the corpus outgrows
-    * broadcast (same note as minhash_lsh). */
   /** Band-bucket candidate stage of [[hyperplanePairs]] — split out so
     * scale instrumentation (StressBench) counts candidates with the same
     * code the operator runs (the sub-quadratic growth claim is about
     * THIS frame, not the verified output). */
-  private[graft] def hyperplaneCandidatePairs(sigs: DataFrame): DataFrame = {
-    val banded = sigs
-      .select(col("vec_id"), posexplode(col("bands")))
-      .select(col("vec_id"), col("pos").as("band"), col("col").as("bkey"))
-    banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-        col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
-      .distinct()
-  }
+  private[graft] def hyperplaneCandidatePairs(sigs: DataFrame): DataFrame =
+    Dedup.bandedPairs(sigs, "vec_id", (0 until HplBands).map(b => col("bands")(b)),
+      ("vec_a", "vec_b"))
 
   /** Candidate pairs straight from an embeddings frame — the
     * instrumentation entry point. */
   def lshCandidates(emb: DataFrame): DataFrame =
     hyperplaneCandidatePairs(hyperplaneSigs(emb))
 
+  /** LSH candidate pairs + exact verified cosine ≥ thresh. Candidate
+    * generation is the banded self-join of [[hyperplaneCandidatePairs]]
+    * (never all-pairs, each pair once); verification attaches vectors
+    * per side — broadcast at this sf, flips to a shuffle join on vec_id
+    * once the corpus outgrows broadcast (same note as minhash_lsh). */
   def hyperplanePairs(emb: DataFrame, thresh: Double): DataFrame = {
     // Persisted for the same reason as minhashLsh's per-doc frame: four
     // subtrees (both banding sides + both verify sides) would recompute
@@ -944,13 +936,8 @@ object Similarity {
         .reduce(_ + _).as("k0"),
       (8 until 16).map(j => when(col(s"s$j") > 0, lit(1L << (j - 8))).otherwise(lit(0L)))
         .reduce(_ + _).as("k1"))).df
-    val cand = Seq("k0", "k1").map { kc =>
-      bk.select(col("vec_id").as("vec_a"), col(kc).as("bkey"))
-        .join(Q.maybeBroadcast(
-          bk.select(col("vec_id").as("vec_b"), col(kc).as("bkey"))), Seq("bkey"))
-        .filter(col("vec_a") < col("vec_b"))
-        .select(col("vec_a"), col("vec_b"))
-    }.reduce(_ union _).distinct()
+    val cand = Dedup.bandedPairs(bk, "vec_id", Seq(col("k0"), col("k1")), ("vec_a", "vec_b"),
+      hintBroadcast = true)
     cand
       .join(codes.select(col("vec_id").as("vec_a"), col("i"), col("c").as("ca")), Seq("vec_a"))
       .join(codes.select(col("vec_id").as("vec_b"), col("i"), col("c").as("cb")), Seq("vec_b", "i"))

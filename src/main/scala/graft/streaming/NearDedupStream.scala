@@ -131,18 +131,15 @@ object NearDedupStream {
       fs.mkdirs(marker.getParent); fs.create(marker, true).close()
     }
     val nBands = Dedup.lshBands(batch)
-    val rows = Dedup.MinHashK / nBands
     // One scan computes both per-doc artifacts (signature + sorted
     // token hashes); persisted — it feeds banding, both verify sides,
     // the verdict frame, and the payload write.
     val prep = Q.ownPersist(Dedup.sigsAndToks(batch).dropDuplicates("doc_id"))
     val sigsB = prep.df.select(col("doc_id"), col("sig"))
-    // Band keys in EXACTLY lshCandidatePairs' form (xxhash64 of the
-    // band's signature slice) — cross-epoch candidates must be the
-    // same relation the within-batch banding finds.
+    // Band keys of lshCandidatePairs (one spelling), so cross-epoch
+    // candidates are the same relation the within-batch banding finds.
     val bandsB = Q.ownPersist(sigsB
-      .select(col("doc_id"), posexplode(array((0 until nBands).map(b =>
-        xxhash64(slice(col("sig"), b * rows + 1, rows))): _*)))
+      .select(col("doc_id"), posexplode(array(Dedup.minhashBandKeys(col("sig"), nBands): _*)))
       .select(col("doc_id"), col("pos").as("band"), col("col").as("band_key"))
       .withColumn("_bucket",
         pmod(xxhash64(col("band"), col("band_key")), lit(nBuckets))

@@ -75,6 +75,39 @@ class LlmSpec extends SparkSpec {
     }
   }
 
+  test("bandedPairs: each pair sharing >= 1 band emitted exactly once, 2/4/5/16 bands (literal frames)") {
+    val s = spark
+    import s.implicits._
+    for (nBands <- Seq(2, 4, 5, 16)) {
+      // Keys from a 3-letter alphabet make pairs share 0, 1, several or
+      // all bands; rows 1-3 pin the edge cases explicitly: 1 and 2 share
+      // every band, 1 and 3 only the last one.
+      val rnd = new scala.util.Random(nBands)
+      val rows = Seq(
+        1L -> Seq.fill(nBands)(7L),
+        2L -> Seq.fill(nBands)(7L),
+        3L -> (Seq.fill(nBands - 1)(8L) :+ 7L)) ++
+        (4L to 40L).map(i => i -> Seq.fill(nBands)(rnd.nextInt(3).toLong))
+      val banded = Dedup.bandedPairs(rows.toDF("id", "ks"), "id",
+        (0 until nBands).map(b => col("ks")(b)), ("id_a", "id_b"), carry = Seq("ks"))
+      assert(banded.columns.toSeq === Seq("id_a", "id_b", "ks_a", "ks_b"))
+      val out = banded.collect().map(r => (r.getLong(0), r.getLong(1),
+        r.getSeq[Long](2), r.getSeq[Long](3))).toSeq
+      val keys = rows.toMap
+      val brute = (for {
+        (a, ka) <- rows; (b, kb) <- rows
+        if a < b && ka.zip(kb).exists { case (x, y) => x == y }
+      } yield (a, b)).toSet
+      val pairs = out.map(r => (r._1, r._2))
+      assert(pairs.size === pairs.distinct.size,
+        s"$nBands bands: duplicate pair rows")
+      assert(pairs.toSet === brute, s"$nBands bands: banded != brute force")
+      assert(pairs.toSet.contains((1L, 2L)) && pairs.toSet.contains((1L, 3L)))
+      assert(out.forall(r => r._3 == keys(r._1) && r._4 == keys(r._2)),
+        s"$nBands bands: carried columns not from their own side")
+    }
+  }
+
   test("simhash_pairs: banded hamming join recovers near-identical docs, exactly for radius 3 (literal frames)") {
     val s = spark
     import s.implicits._
@@ -84,8 +117,10 @@ class LlmSpec extends SparkSpec {
       (3L, "join filter window agg scan sort merge stream"),  // one token off
       (4L, "zebra yak xylophone walrus vulture termite")      // disjoint
     ).toDF("doc_id", "text")
-    val out = Dedup.simhashPairs(docs, 3).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    val rows = Dedup.simhashPairs(docs, 3).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))
+    val out = rows.toMap
+    assert(rows.length === out.size, "duplicate pair rows")
     assert(out.contains((1L, 2L)) && out((1L, 2L)) === 0L,
       "identical docs not recovered at hamming 0")
     // exactness: the banded join must emit exactly the pairs within the
@@ -140,8 +175,10 @@ class LlmSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val docs = graft.Tables.documents(spark, sf0001)
-    val out = Dedup.simhashPairsVerdict(docs, 3).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    val rows = Dedup.simhashPairsVerdict(docs, 3).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))
+    val out = rows.toMap
+    assert(rows.length === out.size, "duplicate pair rows")
     // Pigeonhole exactness for radius ≤ 3: the banded join must emit
     // EXACTLY the pairs a brute-force hamming scan over the same md5
     // sketch finds (the simhash_pairs exactness pin, verdict family).

@@ -284,6 +284,76 @@ class PlanShapeSpec extends SparkSpec {
       "sig/token side tables should broadcast")
   }
 
+  test("banded candidate stages emit each pair once: no aggregate over the pair columns") {
+    // The shared banding operator dedups inside the join (first shared
+    // band); a distinct() over the candidate stream would show up as a
+    // HashAggregate grouping by the pair ids.
+    def pairAggs(df: org.apache.spark.sql.DataFrame, ids: Set[String]) =
+      Aqe.collect(df.queryExecution.executedPlan) {
+        case a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+            if a.groupingExpressions.exists(_.references.exists(r => ids(r.name))) => a
+      }
+    val sh = SparkEntry.queries("simhash_pairs")(spark, sf0001)
+    assert(pairAggs(sh, Set("doc_a", "doc_b")).isEmpty,
+      "simhash_pairs aggregates its candidate pairs")
+    val hp = graft.llm.Similarity.lshCandidates(Tables.embeddings(spark, sf0001))
+    assert(pairAggs(hp, Set("vec_a", "vec_b")).isEmpty,
+      "hyperplane candidates aggregate their pairs")
+  }
+
+  test("bandedPairs adds no broadcast hint by default: with auto-broadcast off its band join shuffles") {
+    // The candidate arms leave the banding join to Spark's own threshold,
+    // so past it they shuffle instead of broadcasting bands x rows.
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions.col
+    val nBands = 8
+    val keyed = (1L to 1000L).map(i => i -> Seq.fill(nBands)(i % 7)).toDF("id", "ks")
+    val k = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(k)
+    spark.conf.set(k, "-1")
+    try {
+      val p = graft.llm.Dedup.bandedPairs(keyed, "id",
+          (0 until nBands).map(b => col("ks")(b)), ("id_a", "id_b"))
+        .queryExecution.executedPlan.toString
+      assert(!p.contains("BroadcastHashJoin"), "banded side broadcast by a hint")
+      assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"),
+        "banding join did not plan as a shuffle join")
+    } finally prev match {
+      case Some(v) => spark.conf.set(k, v)
+      case None => spark.conf.unset(k)
+    }
+  }
+
+  test("bandedPairs' broadcast hint judges the gate at the exploded side's size (bands x rows)") {
+    // Spark estimates the posexplode as one row per input row, so a gate
+    // read off that estimate alone would admit a side nBands times larger.
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions.col
+    val nBands = 8
+    val keyed = (1L to 1000L).map(i => i -> Seq.fill(nBands)(i % 7)).toDF("id", "ks")
+    def bSide(): (Boolean, BigInt) = {
+      val j = graft.llm.Dedup.bandedPairs(keyed, "id",
+          (0 until nBands).map(b => col("ks")(b)), ("id_a", "id_b"), hintBroadcast = true)
+        .queryExecution.optimizedPlan
+        .collectFirst { case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }.get
+      (j.hint.rightHint.exists(_.strategy.contains(
+        org.apache.spark.sql.catalyst.plans.logical.BROADCAST)), j.right.stats.sizeInBytes)
+    }
+    val (hinted, side) = bSide()
+    assert(hinted, "small banded side should broadcast under the default gate")
+    def withByteGate(bytes: BigInt): Boolean = {
+      spark.conf.set(Q.BroadcastSideMaxBytesKey, bytes.toString)
+      try bSide()._1 finally spark.conf.unset(Q.BroadcastSideMaxBytesKey)
+    }
+    // The side in the joined plan may be pruned narrower than the one
+    // the gate judged, never wider: a gate of half the exploded estimate
+    // must refuse, twice the exploded estimate must admit.
+    assert(!withByteGate(side * nBands / 2), "gate ignores the explode fan-out")
+    assert(withByteGate(side * nBands * 2), "gate over-counts the explode fan-out")
+  }
+
   test("LSH verify joins are conf-gated: low broadcastSideThreshold flips them to shuffle joins") {
     // Below the row threshold the per-doc side tables broadcast (the
     // default plan, pinned above); above it graft.Q.maybeBroadcast emits

@@ -10,23 +10,10 @@ the test asserts the ordered diagnosis names the right culprit. Cases
 
 Run: python3 tools/test_artifact_check.py   (exit 0 = all pass)
 """
-import importlib.util
 import os
 import sys
 
-spec = importlib.util.spec_from_file_location(
-    "artifact_check_mod",
-    os.path.join(os.path.dirname(__file__), "artifact_check.py"))
-# artifact_check runs its checks at import time against sys.argv[1] (the
-# repo root); point it at the real repo so import doesn't fail, then use
-# only the pure fingerprint function.
-sys.argv = [sys.argv[0], os.path.join(os.path.dirname(__file__), "..")]
-mod = importlib.util.module_from_spec(spec)
-try:
-    spec.loader.exec_module(mod)
-except SystemExit:
-    pass  # the import-time gate may exit non-zero mid-round; irrelevant here
-fp = mod.heavy_breach_fingerprint
+from artifact_check import heavy_breach_fingerprint as fp
 
 
 def bench(total, budget, gc, spill_each, shares, secs):
