@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.Profile.Measured
 import org.json4s._
 import org.json4s.JsonDSL._
 import org.json4s.jackson.JsonMethods.{compact, parse, render}
@@ -102,61 +102,42 @@ object Bench {
     * in the heavy-tier child below), cutting the idle tier to ~half. */
   val HeavyBudgetSec = 90.0
 
-  /** Join-strategy fingerprint of an executed plan: the distinct physical
-    * join operators present, worst-first. Emitted per headline query into
-    * the bench JSON so a flipped join strategy is machine-visible in the
-    * artifact itself (VERDICT r3 #1 — a 59 s entry that reproduces at 4 s
-    * standalone is undiagnosable without knowing which plan actually ran). */
-  def joinStrategies(plan: String): String = {
-    val tokens = Seq("BroadcastNestedLoopJoin", "CartesianProduct",
-      "SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin")
-    val found = tokens.filter(plan.contains)
-    val base = if (found.isEmpty) "none" else found.mkString("+")
-    // AQE's OptimizeSkewedJoin tags split partitions `skew=true` in the
-    // final plan — surfaced here so artifacts record WHEN the automatic
-    // skew arm actually fired (the stress skew sweep's pass marker).
-    if (plan.contains("skew=true")) base + "+skew" else base
-  }
-
-  /** One timed row: wall seconds (-1 when the query failed — a crash
-    * mid-query must be machine-visible, never its partial elapsed time
-    * folded into a green-looking total, ADVICE r2), post-AQE join
-    * strategies ("err" on failure), GC seconds inside the timed window,
-    * and the work counters of the row's stages. */
-  private final case class Row(name: String, sec: Double, strategy: String,
-      gcSec: Double, m: RunMetrics)
-
   /** The per-row maps of one tier, keyed by query: seconds under
     * `secKey`, every other map under `prefix` + its name. */
-  private def rowFields(rows: Seq[Row], secKey: String, prefix: String): JObject = {
-    def byRow(f: Row => JValue) = JObject(rows.map(r => r.name -> f(r)).toList)
-    def round3(x: Double) = JDouble(math.round(x * 1000) / 1000.0)
-    (secKey -> byRow(r => JDouble(r.sec))) ~
-      (s"${prefix}strategies" -> byRow(r => JString(r.strategy))) ~
-      (s"${prefix}gc_sec" -> byRow(r => JDouble(r.gcSec))) ~
-      (s"${prefix}cpu_share" -> byRow(r => round3(r.m.cpuShare))) ~
-      (s"${prefix}task_sec" -> byRow(r => JDouble(r.m.executorRunMillis / 1e3))) ~
-      (s"${prefix}cpu_sec" -> byRow(r => round3(r.m.executorCpuNanos / 1e9))) ~
-      (s"${prefix}stages" -> byRow(r => JInt(r.m.stages))) ~
-      (s"${prefix}shuffle_write_bytes" -> byRow(r => JInt(r.m.shuffleWriteBytes)))
+  private def rowFields(rows: Seq[(String, Measured)], secKey: String,
+      prefix: String): JObject = {
+    def byRow(f: Measured => JValue) = JObject(rows.map { case (n, m) => n -> f(m) }.toList)
+    (secKey -> byRow(m => JDouble(m.sec))) ~
+      (s"${prefix}strategies" -> byRow(m => JString(m.strategy))) ~
+      (s"${prefix}gc_sec" -> byRow(m => JDouble(m.gcSec))) ~
+      (s"${prefix}cpu_share" -> byRow(m => Profile.round3(m.metrics.cpuShare))) ~
+      (s"${prefix}task_sec" -> byRow(m => JDouble(m.metrics.executorRunMillis / 1e3))) ~
+      (s"${prefix}cpu_sec" -> byRow(m => Profile.round3(m.metrics.executorCpuNanos / 1e9))) ~
+      (s"${prefix}stages" -> byRow(m => JInt(m.metrics.stages))) ~
+      (s"${prefix}shuffle_write_bytes" -> byRow(m => JInt(m.metrics.shuffleWriteBytes)))
   }
 
-  private def errorsJson(errors: Seq[(String, String)]): JObject =
-    JObject(errors.map { case (k, v) => k -> (JString(v): JValue) }.toList)
+  /** Per-query failure messages, not just the -1 sentinel: a failed run
+    * explains itself in the artifact. */
+  private def errorsJson(rows: Seq[(String, Measured)]): JObject =
+    JObject(rows.flatMap { case (n, m) => m.error.map(e => n -> (JString(e): JValue)) }.toList)
+
+  private def failed(rows: Seq[(String, Measured)]): List[String] =
+    rows.collect { case (n, m) if !m.ok => n }.toList
 
   /** The heavy tier's fields, spliced verbatim into the parent's line.
     * `heavy_gc_total` sums the same rows as `heavy_total` (failed rows
     * excluded), or artifact_check's gc-vs-excess breach fingerprint
     * would compare GC from N rows against elapsed from N−1. */
-  private def heavyFields(rows: Seq[Row], errors: Seq[(String, String)],
-      setupSec: Double, extraFailed: Seq[String] = Nil): JObject = {
-    val ok = rows.filter(_.sec >= 0)
+  private def heavyFields(rows: Seq[(String, Measured)], setupSec: Double,
+      extraFailed: Seq[String] = Nil): JObject = {
+    val ok = rows.map(_._2).filter(_.ok)
     rowFields(rows, "heavy", "heavy_") ~
-      ("heavy_spill_bytes" -> JObject(rows.map(r =>
-        r.name -> (JInt(r.m.diskSpillBytes + r.m.memorySpillBytes): JValue)).toList)) ~
+      ("heavy_spill_bytes" -> JObject(rows.map { case (n, m) =>
+        n -> (JInt(m.metrics.diskSpillBytes + m.metrics.memorySpillBytes): JValue) }.toList)) ~
       ("heavy_gc_total" -> ok.map(_.gcSec).sum) ~
-      ("heavy_failed" -> (rows.filter(_.sec < 0).map(_.name) ++ extraFailed).toList) ~
-      ("heavy_errors" -> errorsJson(errors)) ~
+      ("heavy_failed" -> (failed(rows) ++ extraFailed)) ~
+      ("heavy_errors" -> errorsJson(rows)) ~
       ("heavy_total" -> ok.map(_.sec).sum) ~
       ("heavy_jvm_setup_sec" -> setupSec) ~
       ("heavy_budget_sec" -> HeavyBudgetSec)
@@ -166,25 +147,15 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // --all (or SPARK_GRAFT_BENCH_ALL=1): full-registry coverage mode
-    // (VERDICT r4 item 6) — every SparkEntry query, not just the 33
+    // (VERDICT r4 item 6) — every SparkEntry query, not just the
     // headline entries, with the same per-query strategy/gc/cpu_share
     // self-diagnosis fields. The headline artifact stays the driver
     // contract; this mode exists so NON-headline operators have a perf
     // regression signal too, written to bench_all.json by default so it
-    // never clobbers the driver's bench.json.
+    // never clobbers the driver's bench.json. To re-time a few rows,
+    // name them to `graft.Profile`.
     val allMode = args.contains("--all") ||
       sys.env.get("SPARK_GRAFT_BENCH_ALL").contains("1")
-    // --changed[=ref]: registry rows whose DEFINING FILE differs from
-    // <ref> (default HEAD) per git — the mid-round iteration tier
-    // (VERDICT r9 #8: the full 153-query sweep crosses 5 minutes within
-    // two rounds; a one-family change only needs that family re-timed).
-    // Output goes to bench_changed.json, NEVER bench_all.json — the
-    // committable artifacts remain the full headline and --all sweeps,
-    // which still run at round end. A diff touching shared non-family
-    // source (Q, Tables, plans/, sources/) falls back to the full
-    // registry: shared code can shift any row.
-    val changedArg = args.find(a => a == "--changed" || a.startsWith("--changed="))
-    val changedMode = changedArg.isDefined
     // --heavy-tier=<path>: INTERNAL child mode (r17). The canonical run
     // spawns a FRESH JVM for the heavy tier and this is its entry: run
     // ONLY the tier (catalog analyze, the conf-swapped heavy suite),
@@ -192,35 +163,18 @@ object Bench {
     // for why the tier runs in its own process.
     val heavyTierArg = args.find(_.startsWith("--heavy-tier="))
     val heavyTierMode = heavyTierArg.isDefined
-    // The tier child's own warehouse (see mkSession), deleted once its session stops.
+    // Child isolation: registerAndAnalyze CTASes single-file sources
+    // into managed `graft_*` warehouse tables, so a child sharing the
+    // parent's spark-warehouse would DELETE the parent's table files
+    // under its still-cached listings (measured: the parent's next
+    // read died on FILE_NOT_EXIST reading graft_lineitem after the
+    // child re-registered it). The tier child gets its own temp
+    // warehouse, deleted once its session stops; the copy cost lands in
+    // heavy_jvm_setup_sec.
     val heavyWarehouse = Option.when(heavyTierMode)(
       java.nio.file.Files.createTempDirectory("graft_heavy_wh_").toFile)
-    // Bench-time broadcast pin (VERDICT r3 #1): the gates Q.maybeBroadcast
-    // reads are set EXPLICITLY on every session this run builds, so no
-    // earlier conf drift in a long run can flip join_range_binned's
-    // broadcast side. Its est rows (~10k at sf0.1, bounded by its
-    // one-month filter) sit far below both gates.
-    def mkSession(): SparkSession = {
-      val b = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-      // Child isolation: registerAndAnalyze CTASes single-file sources
-      // into managed `graft_*` warehouse tables, so a child sharing the
-      // parent's spark-warehouse would DELETE the parent's table files
-      // under its still-cached listings (measured: the parent's next
-      // read died on FILE_NOT_EXIST reading graft_lineitem after the
-      // child re-registered it). The tier child gets its own temp
-      // warehouse; the copy cost lands in heavy_jvm_setup_sec.
-      heavyWarehouse.foreach(w => b.config("spark.sql.warehouse.dir", w.toString))
-      val s = b.getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s.conf.set(Q.BroadcastSideThresholdKey, "8000000")
-      s.conf.set(Q.BroadcastSideMaxBytesKey, (256L * 1024 * 1024).toString)
-      s
-    }
-    val spark = mkSession()
+    val spark = Profile.session(cpus.toInt,
+      heavyWarehouse.map(w => "spark.sql.warehouse.dir" -> w.toString).toSeq: _*)
     // Per-query stage metrics (round 4): executor task time, CPU time,
     // stages and shuffle bytes — the work behind each row's seconds.
     val metricsListener = new RunMetricsListener
@@ -229,16 +183,6 @@ object Bench {
       val t0 = System.nanoTime()
       body
       (System.nanoTime() - t0) / 1e9
-    }
-    // Cumulative JVM GC wall time: the per-query delta separates "the
-    // host was slow" from "the JVM was collecting" when an entry spikes
-    // (round 4 — the r3 59 s join_range_binned anomaly reproduced WITH
-    // the correct BroadcastHashJoin recorded, so the plan was never the
-    // problem; the artifact must say what was).
-    def gcMillis(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).filter(_ > 0).sum
     }
 
     // ANALYZE at load time, outside every per-query window (the
@@ -264,84 +208,14 @@ object Bench {
         } catch { case e: Throwable =>
           System.err.println(s"[bench] warehouse setup failed: $e") }
       }
-    val changedFiles: Seq[String] =
-      if (!changedMode) Nil
-      else {
-        val ref = changedArg.get.split("=", 2) match {
-          case Array(_, r) => r
-          case _ => "HEAD"
-        }
-        try {
-          // stderr NOT merged: a failed git (bad ref, not a repo) must
-          // not have its fatal-message lines parsed as file names; a
-          // nonzero exit falls back to the full registry explicitly.
-          val p = new ProcessBuilder("git", "diff", "--name-only", ref).start()
-          val out = new String(p.getInputStream.readAllBytes())
-          val err = new String(p.getErrorStream.readAllBytes())
-          if (p.waitFor() != 0) {
-            System.err.println(
-              s"[bench] git diff exited nonzero (${err.trim.take(200)}) — " +
-                "running full registry")
-            Nil
-          } else out.linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] git diff failed ($e) — running full registry")
-          Nil
-        }
-      }
-    val suite =
-      if (changedMode) {
-        val files = SparkEntry.queryFiles
-        val familyFiles = files.values.toSet
-        val sharedTouched = changedFiles.exists(f =>
-          f.startsWith("src/main/") && !familyFiles.contains(f))
-        if (sharedTouched || changedFiles.isEmpty) {
-          System.err.println("[bench] --changed: shared source touched " +
-            "(or empty diff) — running the full registry")
-          SparkEntry.queries.keys.toSeq.sorted
-        } else {
-          // ADVICE r10: expand by the static cross-family call graph —
-          // a Dedup-only diff also re-times the Curate/Similarity rows
-          // whose pipelines call into it.
-          val hit = changedFiles.toSet ++
-            changedFiles.flatMap(f => SparkEntry.familyDeps.getOrElse(f, Nil))
-          val affected = files.collect { case (q, f) if hit(f) => q }.toSeq.sorted
-          if (affected.isEmpty)
-            // Diff touches only tests/tools/docs: nothing to re-time.
-            // Say so loudly — an empty queries map in bench_changed.json
-            // must read as "no registry row affected", never as a
-            // zero-regression signal.
-            System.err.println("[bench] --changed: diff touches no " +
-              "operator-family file — no registry rows to re-time " +
-              s"(changed: ${changedFiles.mkString(", ")})")
-          affected
-        }
-      }
-      else if (allMode) SparkEntry.queries.keys.toSeq.sorted
-      else headline.filter(SparkEntry.queries.contains)
-    // Per-query failure MESSAGE, not just the -1 sentinel (ADVICE r7):
-    // the r7 contended-host artifact recorded 8 events-family queries as
-    // `err` with zero task seconds — plan-time failures — and nothing
-    // else; root-causing required stderr that no round artifact keeps.
-    // The exception rides in the artifact so a failed run explains
-    // itself.
-    val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     // Each query is one checksum-forced execution (Profile.forced) with
-    // the runner's cache and checkpoint hygiene after it; the GC delta
-    // covers the timed window only, not the hygiene's collection.
-    def runSuite(names: Seq[String]): Seq[Row] = names.map { name =>
-      val gc0 = gcMillis()
-      def gcSec = (gcMillis() - gc0) / 1e3
-      try Profile.forced(spark, metricsListener,
-          SparkEntry.queries(name)(spark, sfDir)) { r =>
-        Row(name, r.sec, joinStrategies(r.executed), gcSec, r.metrics)
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] $name failed: $e")
-          errors(name) = e.toString.take(300)
-          org.apache.spark.graftbridge.ListenerDrain.drain(spark.sparkContext)
-          Row(name, -1.0, "err", gcSec, metricsListener.snapshotAndReset())
-      }
+    // the runner's cache and checkpoint hygiene after it. A name missing
+    // from the registry fails its row instead of vanishing from the suite.
+    def runSuite(names: Seq[String]): Seq[(String, Measured)] = names.map { name =>
+      val m = Profile.forced(spark, metricsListener,
+        SparkEntry.queries(name)(spark, sfDir))
+      m.error.foreach(e => System.err.println(s"[bench] $name failed: $e"))
+      name -> m
     }
 
     if (heavyTierMode) {
@@ -358,9 +232,8 @@ object Bench {
         val setupSec = time(sources.CatalogStats.registerAndAnalyze(spark, sfDir))
         spark.conf.set("spark.graft.curate.pairStrategy", "lsh")
         spark.conf.set("spark.graft.components.pairStrategy", "lsh")
-        val rows = runSuite(heavy.filter(SparkEntry.queries.contains))
         java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath),
-          compact(render(heavyFields(rows, errors.toSeq, setupSec))))
+          compact(render(heavyFields(runSuite(heavy), setupSec))))
       } finally {
         spark.stop()
         heavyWarehouse.foreach(org.apache.commons.io.FileUtils.deleteQuietly)
@@ -368,10 +241,10 @@ object Bench {
       return
     }
 
-    val results = runSuite(suite)
+    val results = runSuite(if (allMode) SparkEntry.queries.keys.toSeq.sorted else headline)
     // Heavy tier AFTER the headline, in a FRESH CHILD JVM (r17 —
-    // VERDICT r16 #1); skipped in --all/--changed mode where every
-    // affected entry runs anyway. A fresh process does two things a
+    // VERDICT r16 #1); skipped in --all mode where every entry runs
+    // anyway. A fresh process does two things a
     // context restart cannot: a JVM that has executed the 35-query
     // headline runs the tier's parallel bursts persistently slower even
     // idle (JIT/allocation-path aging, measured r17: neither a context
@@ -390,9 +263,9 @@ object Bench {
       import scala.jdk.CollectionConverters._
       val tmp = java.nio.file.Files.createTempFile("graft_heavy_", ".json")
       val errFragment = heavyFields(
-        heavy.filter(SparkEntry.queries.contains).map(n =>
-          Row(n, -1.0, "err", 0.0, RunMetrics(0, 0, 0, 0, 0, 0, 0, 0))),
-        Nil, -1.0, Seq("__heavy_tier_process")) merge
+        heavy.map(_ -> Measured(-1.0, -1L, 0, "err", 0.0,
+          RunMetrics(0, 0, 0, 0, 0, 0, 0, 0), Some("heavy-tier child failed"))),
+        -1.0, Seq("__heavy_tier_process")) merge
         JObject("heavy_total" -> JDouble(-1.0))
       try {
         val javaBin = java.nio.file.Paths.get(
@@ -432,11 +305,8 @@ object Bench {
       }
     }
     val modeFields: JObject =
-      if (changedMode) ("mode" -> "changed") ~ ("changed_files" -> changedFiles.toList)
-      else if (allMode) JObject("mode" -> JString("all"))
-      else spawnHeavyTier()
-    val heavyOk = changedMode || allMode ||
-      (modeFields \ "heavy_failed") == JArray(Nil)
+      if (allMode) JObject("mode" -> JString("all")) else spawnHeavyTier()
+    val heavyOk = allMode || (modeFields \ "heavy_failed") == JArray(Nil)
     // Comparability contract (ADVICE r7): `value` sums only the queries
     // that ran, so a run with failures is NOT comparable to a clean one
     // — the r7 contended artifact read as a 40% "speedup" because 8
@@ -444,13 +314,13 @@ object Bench {
     // make the summed set explicit and `complete` is the machine gate:
     // artifact consumers (tools/artifact_check.py) must reject
     // complete=false as a canonical artifact.
-    val ok = results.filter(_.sec >= 0)
+    val ok = results.map(_._2).filter(_.ok)
     val line = compact(render(
       ("metric" -> "total") ~ ("value" -> ok.map(_.sec).sum) ~ ("unit" -> "sec") ~
         rowFields(results, "queries", "") ~
         ("n_queries" -> results.length) ~ ("n_ok" -> ok.length) ~
-        ("errors" -> errorsJson(errors.toSeq)) ~
-        ("failed" -> results.filter(_.sec < 0).map(_.name).toList) ~
+        ("errors" -> errorsJson(results)) ~
+        ("failed" -> failed(results)) ~
         ("bucket_setup_sec" -> bucketSetupSec) ~ ("analyze_sec" -> analyzeSec) ~
         ("cpus" -> cpus.toInt) ~
         ("shuffle_partitions" -> spark.conf.get("spark.sql.shuffle.partitions").toInt) ~
@@ -459,8 +329,7 @@ object Bench {
         ("sf" -> sfDir)))
     println(line)
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      if (changedMode) "bench_changed.json"
-      else if (allMode) "bench_all.json" else "bench.json")
+      if (allMode) "bench_all.json" else "bench.json")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(out), line + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] write $out failed: $e") }
     // VERDICT r13 #6: the driver's stdout-tail parser has never worked

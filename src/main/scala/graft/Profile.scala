@@ -12,17 +12,20 @@ import org.json4s.JsonDSL._
 import org.json4s.jackson.JsonMethods.{compact, render}
 
 /**
- * Query profiler: the one answer to "why was this query slow". Per
- * registry query it runs one untimed warm-up and then `reps`
- * checksum-forced executions (row count plus the sum of `xxhash64` over
- * every column, Bench's methodology, so column pruning cannot delete
- * unmeasured work) and returns one JSON object holding
+ * Query profiler and the one measuring core: [[session]] builds the
+ * session, [[measure]] / [[forced]] time one run into a [[Measured]]
+ * row, and Bench and StressBench are drivers over them. Per registry
+ * query it runs one untimed warm-up and then `reps` checksum-forced
+ * executions (row count plus the exact sum of `xxhash64` over every
+ * column, so column pruning cannot delete unmeasured work) and returns
+ * one JSON object holding
  *
  *  - `session`: master, cpus, shuffle partitions, whether the tables
  *    plan on ANALYZE stats, and the pinned confs — the context a number
  *    is read against;
- *  - `reps`: per rep wall s, rows, checksum, the [[RunMetrics]] fields,
- *    cpu share and the post-AQE join strategies;
+ *  - `reps`: per rep the [[Measured]] row — wall s, rows, checksum, the
+ *    [[RunMetrics]] fields, cpu share, the post-AQE join strategies, GC
+ *    seconds and the failure message;
  *  - `jobs` / `stages`: the last rep's per-job log (job id, stage ids,
  *    call site, seconds — `null` when the job's start was never seen)
  *    and per-stage name and shuffle-write bytes, which attribute a
@@ -43,6 +46,25 @@ object Profile {
 
   private val Usage = "usage: Profile <query>... <sfDir> [--reps=N] " +
     "[--cpus=N] [--no-analyze] [-c k=v ...] [--plans=<dir>]"
+
+  /** The one session every measuring runner builds: `local[cpus]`,
+    * `cpus` shuffle partitions, UTC, UI off, WARN logging, and the gates
+    * [[Q.maybeBroadcast]] reads pinned explicitly, so no conf drift in a
+    * long run can flip a broadcast side. `confs` are set on the builder
+    * (Bench's heavy-tier child passes its own warehouse). */
+  def session(cpus: Int, confs: (String, String)*): SparkSession = {
+    val b = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+    confs.foreach { case (k, v) => b.config(k, v) }
+    val s = b.getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s.conf.set(Q.BroadcastSideThresholdKey, "8000000")
+    s.conf.set(Q.BroadcastSideMaxBytesKey, (256L * 1024 * 1024).toString)
+    s
+  }
 
   /** Profile `queries` on a caller-owned session: the session's confs
     * and listeners are as they were when this returns. `confs` (the
@@ -71,27 +93,28 @@ object Profile {
     sc.addSparkListener(jobLog)
     try queries.map { query =>
       val fn = SparkEntry.queries(query)
-      // The result frame's plan is taken after the timed section but
-      // before the hygiene, so it still sees the query's caches.
-      def once(explain: Boolean): Rep = {
+      // What the last rep's inspection saw before the hygiene (so the
+      // result frame's plan still sees the query's caches): the
+      // aggregate's executed plan, the formatted plan when asked, and
+      // the job log. Empty when the rep failed.
+      var seen: Option[(String, Option[String], JArray, JArray)] = None
+      def once(explain: Boolean): Measured = {
         jobLog.reset()
-        forced(spark, metrics, fn(spark, sfDir)) { f =>
-          Rep(f.sec, f.rows, f.checksum, f.metrics,
-            Bench.joinStrategies(f.executed), f.executed, jobLog.jobsJson,
-            jobLog.stagesJson,
-            if (explain) Some(f.result.queryExecution.explainString(
-              ExplainMode.fromString("formatted"))) else None)
-        }
+        seen = None
+        forced(spark, metrics, fn(spark, sfDir), (df, executed) =>
+          seen = Some((executed, Option.when(explain)(df.queryExecution
+            .explainString(ExplainMode.fromString("formatted"))),
+            jobLog.jobsJson, jobLog.stagesJson)))
       }
       once(explain = false) // untimed warm-up
       val runs = (1 to reps).map(i =>
         once(explain = i == reps && plansDir.nonEmpty))
-      val last = runs.last
-      val planFile = for (dir <- plansDir; formatted <- last.formatted)
-        yield writePlan(dir, query, sfDir, session, formatted, last.executed)
+      val planFile = for (dir <- plansDir; (executed, Some(f), _, _) <- seen)
+        yield writePlan(dir, query, sfDir, session, f, executed)
       ("query" -> query) ~ ("sf_dir" -> sfDir) ~ ("session" -> session) ~
         ("reps" -> JArray(runs.map(_.json).toList)) ~
-        ("jobs" -> last.jobs) ~ ("stages" -> last.stages) ~
+        ("jobs" -> seen.fold(JArray(Nil))(_._3)) ~
+        ("stages" -> seen.fold(JArray(Nil))(_._4)) ~
         ("plan_file" -> planFile.map(JString(_)).getOrElse(JNull))
     } finally {
       sc.removeSparkListener(metrics)
@@ -99,40 +122,59 @@ object Profile {
     }
   }
 
-  /** One checksum-forced execution: wall seconds, the checksum
-    * aggregate's row count and hash sum, the stages' metrics, the
-    * result frame, and the AQE-final plan of the aggregate. */
-  private[graft] final case class Forced(sec: Double, rows: Long,
-      checksum: Double, metrics: RunMetrics, result: DataFrame,
-      executed: String)
+  /** One measured run, the row every runner records: wall seconds (-1
+    * when the run failed — a crash mid-query must be machine-visible,
+    * never its partial elapsed time folded into a green-looking total),
+    * rows (-1 on failure), the checksum, the post-AQE join strategies
+    * ("err" on failure), JVM GC seconds inside the timed window, the
+    * work counters of the run's stages, and the failure message. */
+  final case class Measured(sec: Double, rows: Long, checksum: BigInt,
+      strategy: String, gcSec: Double, metrics: RunMetrics,
+      error: Option[String] = None) {
+    def ok: Boolean = error.isEmpty
+    def json: JObject =
+      ("sec" -> sec) ~ ("rows" -> rows) ~ ("checksum" -> checksum) ~
+      ("stages" -> metrics.stages) ~
+      ("shuffle_read_bytes" -> metrics.shuffleReadBytes) ~
+      ("shuffle_write_bytes" -> metrics.shuffleWriteBytes) ~
+      ("disk_spill_bytes" -> metrics.diskSpillBytes) ~
+      ("memory_spill_bytes" -> metrics.memorySpillBytes) ~
+      ("peak_execution_memory" -> metrics.peakExecutionMemory) ~
+      ("executor_run_ms" -> metrics.executorRunMillis) ~
+      ("executor_cpu_ns" -> metrics.executorCpuNanos) ~
+      ("cpu_share" -> metrics.cpuShare) ~
+      ("join_strategies" -> strategy) ~ ("gc_sec" -> gcSec) ~
+      ("error" -> error.map(JString(_)).getOrElse(JNull))
+  }
 
-  /** Runs `query` once, checksum-forced, as Bench and Profile measure
-    * it: row count plus the sum of `xxhash64` over every column, so
-    * column pruning cannot delete work the count does not depend on
-    * (a projected window rank, an EWMA state), and `collect` rather
-    * than `head`, whose separate limit(1) plan would leave this plan's
-    * AQE unfinalized. `metrics` is reset first. `inspect` sees the run
-    * before the runner's hygiene, which follows every execution, a
-    * failed one too: operator-persisted caches and fixpoint checkpoints
-    * are released, and a GC lets the context cleaner reap dead
-    * broadcast blocks before the next timed window instead of inside
-    * it. */
-  private[graft] def forced[T](spark: SparkSession,
-      metrics: RunMetricsListener, query: => DataFrame)(inspect: Forced => T): T = {
+  /** The one measuring primitive. `body` runs inside the timed window;
+    * `outcome` reads its result into (rows, checksum, strategies) after
+    * the clock stops. `metrics` is reset first, so the row's counters
+    * are the body's stages alone; the GC delta covers the timed window.
+    * A failure becomes the -1 row with its message. The hygiene follows
+    * every run, a failed one too: operator-persisted caches and fixpoint
+    * checkpoints are released, and a GC lets the context cleaner reap
+    * dead broadcast blocks before the next timed window instead of
+    * inside it. */
+  private[graft] def measure[A](spark: SparkSession,
+      metrics: RunMetricsListener)(body: => A)(
+      outcome: A => (Long, BigInt, String)): Measured = {
     val sc = spark.sparkContext
-    ListenerDrain.drain(sc)
-    metrics.snapshotAndReset()
+    def drained() = { ListenerDrain.drain(sc); metrics.snapshotAndReset() }
+    drained()
+    val gc0 = gcMillis()
+    def gcSec = (gcMillis() - gc0) / 1e3
+    val t0 = System.nanoTime()
     try {
-      val t0 = System.nanoTime()
-      val df = query
-      // double: a BIGINT sum of hashes overflows, and ANSI mode throws
-      val agg = df.agg(count(lit(1)).as("n"),
-        sum(xxhash64(struct(df.columns.map(col): _*)).cast("double")).as("chk"))
-      val r = agg.collect()(0)
+      val a = body
       val sec = (System.nanoTime() - t0) / 1e9
-      ListenerDrain.drain(sc)
-      inspect(Forced(sec, r.getLong(0), if (r.isNullAt(1)) 0.0 else r.getDouble(1),
-        metrics.snapshotAndReset(), df, agg.queryExecution.executedPlan.toString))
+      val gc = gcSec
+      val m = drained()
+      val (rows, checksum, strategy) = outcome(a)
+      Measured(sec, rows, checksum, strategy, gc, m)
+    } catch {
+      case e: Throwable =>
+        Measured(-1.0, -1L, 0, "err", gcSec, drained(), Some(e.toString.take(300)))
     } finally {
       spark.catalog.clearCache()
       Q.drainCheckpoints(spark)
@@ -140,23 +182,60 @@ object Profile {
     }
   }
 
-  /** One profiled execution. */
-  private case class Rep(sec: Double, rows: Long, checksum: Double,
-      m: RunMetrics, strategies: String, executed: String, jobs: JArray,
-      stages: JArray, formatted: Option[String]) {
-    def json: JObject =
-      ("sec" -> sec) ~ ("rows" -> rows) ~ ("checksum" -> checksum) ~
-      ("stages" -> m.stages) ~
-      ("shuffle_read_bytes" -> m.shuffleReadBytes) ~
-      ("shuffle_write_bytes" -> m.shuffleWriteBytes) ~
-      ("disk_spill_bytes" -> m.diskSpillBytes) ~
-      ("memory_spill_bytes" -> m.memorySpillBytes) ~
-      ("peak_execution_memory" -> m.peakExecutionMemory) ~
-      ("executor_run_ms" -> m.executorRunMillis) ~
-      ("executor_cpu_ns" -> m.executorCpuNanos) ~
-      ("cpu_share" -> m.cpuShare) ~
-      ("join_strategies" -> strategies)
+  /** Runs `query` once, checksum-forced, as every runner measures it:
+    * row count plus the exact sum of `xxhash64` over every column (as
+    * DECIMAL(38,0), so the sum cannot overflow and does not depend on
+    * row order), so column pruning cannot delete work the count does
+    * not depend on (a projected window rank, an EWMA state), and
+    * `collect` rather than `head`, whose separate limit(1) plan would
+    * leave this plan's AQE unfinalized. `inspect` sees the result frame
+    * and the AQE-final plan of the aggregate before the hygiene. */
+  private[graft] def forced(spark: SparkSession, metrics: RunMetricsListener,
+      query: => DataFrame,
+      inspect: (DataFrame, String) => Unit = (_, _) => ()): Measured =
+    measure(spark, metrics) {
+      val df = query
+      val h = df.select(xxhash64(struct(df.columns.map(col): _*)).as("h"))
+      // The DOUBLE sum is order-sensitive on purpose: the optimizer
+      // drops a Sort under an aggregate whose functions all ignore row
+      // order, and the run must keep the result frame's ORDER BY work.
+      val agg = h.agg(count(lit(1)).as("n"),
+        sum(col("h").cast("decimal(38,0)")).as("chk"),
+        sum(col("h").cast("double")).as("keep_order"))
+      (df, agg, agg.collect()(0))
+    } { case (df, agg, r) =>
+      val executed = agg.queryExecution.executedPlan.toString
+      inspect(df, executed)
+      (r.getLong(0),
+        if (r.isNullAt(1)) BigInt(0) else BigInt(r.getDecimal(1).toBigInteger),
+        joinStrategies(executed))
+    }
+
+  /** Join-strategy fingerprint of an executed plan: the distinct physical
+    * join operators present, worst-first, so a flipped join strategy is
+    * machine-visible in every artifact row. */
+  def joinStrategies(plan: String): String = {
+    val tokens = Seq("BroadcastNestedLoopJoin", "CartesianProduct",
+      "SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin")
+    val found = tokens.filter(plan.contains)
+    val base = if (found.isEmpty) "none" else found.mkString("+")
+    // AQE's OptimizeSkewedJoin tags split partitions `skew=true` in the
+    // final plan — surfaced here so artifacts record WHEN the automatic
+    // skew arm actually fired (the stress skew sweep's pass marker).
+    if (plan.contains("skew=true")) base + "+skew" else base
   }
+
+  /** Cumulative JVM GC wall time: a row's delta separates "the host was
+    * slow" from "the JVM was collecting" when an entry spikes. */
+  private def gcMillis(): Long = {
+    import scala.jdk.CollectionConverters._
+    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
+      .asScala.map(_.getCollectionTime).filter(_ > 0).sum
+  }
+
+  /** A figure rounded to 3 decimals; NaN and infinities are `null`. */
+  def round3(d: Double): JValue =
+    if (d.isNaN || d.isInfinite) JNull else JDouble(math.round(d * 1000) / 1000.0)
 
   private def writePlan(dir: String, query: String, sfDir: String,
       session: JObject, formatted: String, executed: String): String = {
@@ -268,17 +347,8 @@ object Profile {
     require(live.forall(_ == s"local[$cpus]"),
       s"a live session runs at ${live.getOrElse("")}, not local[$cpus]; " +
         s"stop it before profiling at $cpus cores")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-profile")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = session(cpus.toInt)
     try {
-      spark.sparkContext.setLogLevel("WARN")
-      spark.conf.set(Q.BroadcastSideThresholdKey, "8000000")
-      spark.conf.set(Q.BroadcastSideMaxBytesKey, (256L * 1024 * 1024).toString)
       if (!flags.contains("--no-analyze"))
         sources.CatalogStats.registerAndAnalyze(spark, sfDir)
       confs.foreach { case (k, v) => spark.conf.set(k, v) }

@@ -39,57 +39,7 @@ object SparkEntry {
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, QFn] = groups.map(_._1).reduce(_ ++ _)
 
-  /** Query name → defining source file (repo-relative), for Bench's
-    * `--changed` mode: a git-diff touching a family file re-benches
-    * exactly that family's rows. Kept beside [[groups]] so adding a
-    * family updates both or SparkEntrySpec fails the coverage check. */
-  private[graft] def queryFiles: Map[String, String] = {
-    val base = "src/main/scala/graft/"
-    Seq(
-      operators.Relational.queries -> (base + "operators/Relational.scala"),
-      operators.Aggregates.queries -> (base + "operators/Aggregates.scala"),
-      operators.Windows.queries -> (base + "operators/Windows.scala"),
-      operators.SetOps.queries -> (base + "operators/SetOps.scala"),
-      operators.Reshape.queries -> (base + "operators/Reshape.scala"),
-      operators.Profiling.queries -> (base + "operators/Profiling.scala"),
-      operators.Sql.queries -> (base + "operators/Sql.scala"),
-      operators.Layout.queries -> (base + "operators/Layout.scala"),
-      functions.ScalarFns.queries -> (base + "functions/ScalarFns.scala"),
-      streaming.EventOps.queries -> (base + "streaming/EventOps.scala"),
-      sources.SourceOps.queries -> (base + "sources/SourceOps.scala"),
-      llm.TextOps.queries -> (base + "llm/TextOps.scala"),
-      llm.Dedup.queries -> (base + "llm/Dedup.scala"),
-      llm.Curate.queries -> (base + "llm/Curate.scala"),
-      llm.Similarity.queries -> (base + "llm/Similarity.scala"),
-      llm.Multimodal.queries -> (base + "llm/Multimodal.scala"),
-      llm.Graph.queries -> (base + "llm/Graph.scala")
-    ).flatMap { case (qs, f) => qs.keys.map(_ -> f) }.toMap
-  }
-
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] = groups.map(_._2).reduce(_ ++ _)
-
-  /** Cross-family call graph for Bench's `--changed` mode (ADVICE r10):
-    * [[queryFiles]] maps each row to ONE defining file, but some
-    * families call into others — Curate's pipeline runs Dedup's
-    * minhashLsh/componentsOverTokenPairs and TextOps' stopCnt/
-    * QualityBpSql; Similarity's semanticDedup runs Dedup's
-    * connectedComponents. A diff touching only the callee file must
-    * re-time the CALLER's rows too, or bench_changed.json reads as
-    * "no regression" for rows the change governs. Key = changed file,
-    * value = family files whose rows are also affected.
-    * (Multimodal computes vec_norm via Similarity.sumSq —
-    * Multimodal.scala:85 — hence the Similarity edge; Graph's kNN
-    * pagerank runs Similarity.knnGraph, hence the Graph edge.) */
-  private[graft] val familyDeps: Map[String, Seq[String]] = {
-    val base = "src/main/scala/graft/"
-    Map(
-      base + "llm/Dedup.scala" -> Seq(
-        base + "llm/Curate.scala", base + "llm/Similarity.scala",
-        base + "llm/Multimodal.scala"),
-      base + "llm/TextOps.scala" -> Seq(base + "llm/Curate.scala"),
-      base + "llm/Similarity.scala" -> Seq(
-        base + "llm/Multimodal.scala", base + "llm/Graph.scala"))
-  }
 }

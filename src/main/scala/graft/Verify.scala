@@ -1,6 +1,9 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import org.json4s._
+import org.json4s.JsonDSL._
+import org.json4s.jackson.JsonMethods.{compact, render}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -71,34 +74,23 @@ object Verify {
       spark.catalog.clearCache()
       Q.drainCheckpoints(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // json4s escapes backslashes, quotes and every control char, so a
+    // tab or CR in builder-authored SQL cannot break the driver's
+    // json.load and silently zero the round's correctness.
+    val json = compact(render(JObject(SparkEntry.oracleSql.toList.map {
+      case (k, v) => k -> JString(v) })))
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val hist = history
-      .map { case (k, (st, at, ms, err, m)) =>
-        s"${q(k)}: {\"status\": ${q(st)}, \"attempts\": $at," +
-        s" \"millis\": $ms, \"error\": ${q(err)}," +
-        s" \"stages\": ${m.stages}," +
-        s" \"shuffle_read_bytes\": ${m.shuffleReadBytes}," +
-        s" \"shuffle_write_bytes\": ${m.shuffleWriteBytes}," +
-        s" \"disk_spill_bytes\": ${m.diskSpillBytes}," +
-        s" \"memory_spill_bytes\": ${m.memorySpillBytes}," +
-        s" \"peak_execution_memory\": ${m.peakExecutionMemory}," +
-        s" \"executor_run_millis\": ${m.executorRunMillis}," +
-        s" \"executor_cpu_millis\": ${m.executorCpuNanos / 1000000}}" }
-      .mkString("{", ",", "}")
+    val hist = compact(render(JObject(history.toList.map {
+      case (k, (st, at, ms, err, m)) => k -> (
+        ("status" -> st) ~ ("attempts" -> at) ~ ("millis" -> ms) ~
+        ("error" -> err) ~ ("stages" -> m.stages) ~
+        ("shuffle_read_bytes" -> m.shuffleReadBytes) ~
+        ("shuffle_write_bytes" -> m.shuffleWriteBytes) ~
+        ("disk_spill_bytes" -> m.diskSpillBytes) ~
+        ("memory_spill_bytes" -> m.memorySpillBytes) ~
+        ("peak_execution_memory" -> m.peakExecutionMemory) ~
+        ("executor_run_millis" -> m.executorRunMillis) ~
+        ("executor_cpu_millis" -> m.executorCpuNanos / 1000000)) })))
     Files.writeString(Paths.get(s"$outDir/run_history.json"), hist)
     spark.stop()
   }

@@ -597,7 +597,7 @@ class PlanShapeSpec extends SparkSpec {
     val agg = SparkEntry.queries("join_range_binned")(spark, sf0001)
       .groupBy().count()
     agg.head()
-    val strategy = Bench.joinStrategies(agg.queryExecution.executedPlan.toString)
+    val strategy = Profile.joinStrategies(agg.queryExecution.executedPlan.toString)
     assert(strategy === "BroadcastHashJoin",
       s"probe broadcast lost after a full headline session: $strategy")
   }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import org.json4s._
 
 /** graft.Profile: the session guards of its `main`, the JSON shape of
@@ -26,7 +27,7 @@ class ProfileSpec extends SparkSpec {
     // parquet read confs on first use, which is not Profile's doing.
     val df = SparkEntry.queries("agg_group")(spark, sf0001)
     val direct = df.agg(count(lit(1)),
-      sum(xxhash64(struct(df.columns.map(col): _*)).cast("double"))).head()
+      sum(xxhash64(struct(df.columns.map(col): _*)).cast("decimal(38,0)"))).head()
     val confsBefore = spark.conf.getAll
     val plans = java.nio.file.Files.createTempDirectory("graft_profile")
     val Seq(p) = Profile.run(spark, sf0001, Seq("agg_group"), 2,
@@ -50,10 +51,11 @@ class ProfileSpec extends SparkSpec {
       for (f <- Seq("sec", "stages", "shuffle_read_bytes",
           "shuffle_write_bytes", "disk_spill_bytes", "memory_spill_bytes",
           "peak_execution_memory", "executor_run_ms", "executor_cpu_ns",
-          "cpu_share", "join_strategies"))
+          "cpu_share", "join_strategies", "gc_sec"))
         assert((r \ f) !== JNothing, s"rep lacks $f")
+      assert((r \ "error") === JNull)
       assert((r \ "rows") === JInt(direct.getLong(0)))
-      assert((r \ "checksum") === JDouble(direct.getDouble(1)))
+      assert((r \ "checksum") === JInt(BigInt(direct.getDecimal(1).toBigInteger)))
     }
 
     // The job log covers exactly the last rep's completed stages.
@@ -78,6 +80,41 @@ class ProfileSpec extends SparkSpec {
     assert(planFile.endsWith("agg_group.txt"))
     assert(body.contains("explain(formatted)") &&
       body.contains("executed-plan Exchange mentions:"), body.take(500))
+  }
+
+  test("the checksum is exact and ignores row order: 1 vs 7 partitions") {
+    // Large-magnitude hashes summed in another partition order round
+    // differently as DOUBLE; the exact sum cannot.
+    val metrics = new RunMetricsListener
+    spark.sparkContext.addSparkListener(metrics)
+    try {
+      def rows(parts: Int) = spark.range(0, 50000, 1, parts)
+        .select(col("id"), (col("id") * 7919).as("v"))
+      val Seq(one, seven) = Seq(1, 7).map(p =>
+        Profile.forced(spark, metrics, rows(p)))
+      assert(one.ok && seven.ok, s"${one.error} ${seven.error}")
+      assert(one.rows === 50000L && seven.rows === 50000L)
+      assert(one.checksum === seven.checksum)
+      val df = rows(3)
+      val direct = df.agg(sum(xxhash64(struct(df.columns.map(col): _*))
+        .cast("decimal(38,0)"))).head().getDecimal(0)
+      assert(one.checksum === BigInt(direct.toBigInteger))
+    } finally spark.sparkContext.removeSparkListener(metrics)
+  }
+
+  test("a failed body is the -1 row with its message, and the hygiene still runs") {
+    val metrics = new RunMetricsListener
+    spark.sparkContext.addSparkListener(metrics)
+    try {
+      val cached = spark.range(10).toDF("x").cache()
+      cached.count()
+      val m = Profile.forced(spark, metrics,
+        throw new IllegalStateException("boom"))
+      assert(!m.ok && m.error.exists(_.contains("boom")), m.error)
+      assert(m.sec === -1.0 && m.rows === -1L && m.strategy === "err")
+      assert(cached.storageLevel === StorageLevel.NONE,
+        "the failed run left the cache in place")
+    } finally spark.sparkContext.removeSparkListener(metrics)
   }
 
   test("main entry points under src/main are limited to the allowlist") {

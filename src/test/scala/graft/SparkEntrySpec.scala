@@ -17,17 +17,13 @@ class SparkEntrySpec extends AnyFunSuite {
   }
 
   test("every bench headline name is a registered query (typos would silently drop a bench entry)") {
-    val missing = Bench.headline.filterNot(SparkEntry.queries.contains)
-    assert(missing.isEmpty, s"headline names not in the registry: $missing")
-  }
-
-  test("queryFiles covers every registry row and points at real files (--changed mode)") {
-    val missing = SparkEntry.queries.keySet -- SparkEntry.queryFiles.keySet
-    assert(missing.isEmpty,
-      s"rows with no --changed file mapping (new family not added to queryFiles?): $missing")
-    val gone = SparkEntry.queryFiles.values.toSet
-      .filterNot(f => new java.io.File(f).isFile)
-    assert(gone.isEmpty, s"queryFiles points at nonexistent files: $gone")
+    for ((runner, names) <- Seq("Bench.headline" -> Bench.headline,
+        "Bench.heavy" -> Bench.heavy,
+        "StressBench" -> StressBench.registryQueries)) {
+      val missing = names.filterNot(SparkEntry.queries.contains)
+      assert(missing.isEmpty, s"$runner names not in the registry: $missing")
+    }
+    assert(StressBench.registryQueries.containsSlice(StressBench.stressQueries))
   }
 
   test("oracle SQL strings are DuckDB-shaped (no read_parquet paths, bare table names)") {
