@@ -29,10 +29,11 @@ import org.json4s.jackson.JsonMethods.{compact, render}
  *
  * Methodology matches Bench: first-touch timings in one warm JVM, each
  * point one [[Profile.forced]] run (row count plus checksum, with the
- * cache/checkpoint/GC hygiene after it) on a [[Profile.session]] at 32
- * cores. The sweep is one table of (scales, rows) blocks ([[sweep]]),
- * and the artifact a pure function of the points ([[artifact]]). The
- * curate pipeline runs its LSH arm
+ * cache/checkpoint/GC hygiene after it) on a [[Profile.session]] at
+ * `SPARK_GRAFT_CPUS` cores (32 when unset; the artifact records the
+ * count as `cpus`). The sweep is one table of (scales, rows) blocks
+ * ([[sweep]]), and the artifact a pure function of the points
+ * ([[artifact]]). The curate pipeline runs its LSH arm
  * (`spark.graft.curate.pairStrategy=lsh`) — the 100 TB configuration,
  * not the small-corpus oracle arm.
  *
@@ -238,13 +239,13 @@ object StressBench {
         decontExactArm, bloomBuild, minhashCandidates, embedCandidates,
         // IVF probe-scan volume BEFORE rerank — the fraction-shrink claim:
         // rows ≈ 10 probes × n × nprobe/nlist ≈ n^¾ ⇒ e_rows ≈ 0.75.
-        Arm("ann_ivf_candidates",
-          Frame((s, d) => llm.Similarity.ivfCandidates(s, d))),
+        Arm("ann_ivf_candidates", Frame((s, d) =>
+          llm.Similarity.ivfCandidates(s, d).select("probe_id", "vec_id"))),
         // SemDeDup's blocked pair volume BEFORE the cosine filter — the
         // Σ|cluster|² ≈ n^1.5 claim measured directly (vs the exact arm's
         // n²): e_rows ≈ 1.5 by design, and the gap to 2.0 is the win.
-        Arm("semantic_candidates",
-          Frame((s, d) => llm.Similarity.semanticCandidates(Tables.embeddings(s, d)))),
+        Arm("semantic_candidates", Frame((s, d) =>
+          llm.Similarity.semanticCandidates(Tables.embeddings(s, d)).select("vec_a", "vec_b"))),
         // Iterative-shuffle evidence (VERDICT r5 item 2): components over
         // the LSH pair graph — the 100 TB composition (the registry
         // entry's exact-jaccard pair source is the small-corpus oracle
@@ -345,7 +346,7 @@ object StressBench {
     * point, then the growth exponents — the least-squares slope of ln(y)
     * on ln(scale factor) over every scale with a valid measurement — and
     * `sec_per_mrow`; figures rounded to 3 decimals, NaN as `null`. */
-  private[graft] def artifact(root: String, scales: Seq[Scale],
+  private[graft] def artifact(root: String, cpus: Int, scales: Seq[Scale],
       results: Seq[(String, Seq[(String, Measured)])],
       ccRounds: Seq[(String, Int)], confNotes: Seq[(String, String)]): JObject = {
     val factor = scales.map(s => s.name -> s.factor).toMap
@@ -378,7 +379,7 @@ object StressBench {
           k -> (JInt(n * s.factor.toInt): JValue) }.toList) ~
         ("skew" -> s.skew))
     }
-    ("metric" -> "stress") ~ ("unit" -> "sec") ~
+    ("metric" -> "stress") ~ ("unit" -> "sec") ~ ("cpus" -> cpus) ~
       ("scales" -> JObject(sizes.toList)) ~
       ("queries" -> JObject(queries.toList)) ~
       ("cc_rounds" -> JObject(ccRounds.map { case (k, n) => k -> (JInt(n): JValue) }.toList)) ~
@@ -404,10 +405,11 @@ object StressBench {
     val (s100, uniform) = scales.map(_.name).partition(_ == "s100")
     require(uniform.nonEmpty,
       s"no stress scale directories under '$root' — run graft.StressGen first")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // Curate runs its LSH arm — the 100 TB configuration, not the
     // small-corpus oracle arm.
     def freshSession(): SparkSession = {
-      val s = Profile.session(32)
+      val s = Profile.session(cpus)
       s.conf.set("spark.graft.curate.pairStrategy", "lsh")
       s
     }
@@ -427,7 +429,7 @@ object StressBench {
     // consume those points).
     val confNotes = mutable.LinkedHashMap.empty[String, String]
     val out = sys.env.getOrElse("SPARK_GRAFT_STRESS_OUT", "BENCH_stress.json")
-    def json(): String = compact(render(artifact(root, scales,
+    def json(): String = compact(render(artifact(root, cpus, scales,
       results.toSeq.map { case (n, pts) => n -> pts.toSeq }, ccRounds.toSeq,
       confNotes.toSeq)))
     // Flush the artifact after EVERY recorded row (r14): the r14 s100
@@ -551,13 +553,13 @@ object StressBench {
     //    OOM'd in the same stage). Broadcasting the vector table is
     //    the FAISS memory model: the wide stream never moves, only the
     //    narrow (src, dst, cos) streams shuffle.
-    //  - shuffle partitions 32 → 128: the ~1.1 G-row/round refine
-    //    candidate stream at 32 partitions puts ~35 M-row working sets
+    //  - shuffle partitions (the core count) → 128: the ~1.1 G-row/round
+    //    refine candidate stream at 32 partitions puts ~35 M-row working sets
     //    on each concurrent task.
     // Launch the sweep at -Xmx32g (the broadcast + torrent blocks need
     // the headroom; 16 g measured insufficient even before this stage).
     val s100Conf = "shuffle.partitions=128, broadcastSideMaxBytes=1.5g, " +
-      "fresh SparkContext (s1-s30 points: 32 / 256m, shared context)"
+      s"fresh SparkContext (s1-s30 points: $cpus / 256m, shared context)"
     for (scale <- s100; arm <- s100FreshArms) {
       val dir = s"$root/$scale"
       // Fresh CONTEXT per row, same warm JVM: a long sweep (and each

@@ -45,10 +45,6 @@ object Similarity {
   def sumSq(a: Column): Column =
     aggregate(a, lit(0.0), (acc, x) => acc + x.cast("double") * x.cast("double"))
 
-  /** cosine(a, b) over float vectors, rounded to 4 dp (§7d rule 3). */
-  def cos4(a: Column, b: Column): Column =
-    round(dotFast(a, b) / (sqrt(dotFast(a, a)) * sqrt(dotFast(b, b))), 4)
-
   /** The calibrated exact near-dup cosine threshold — ONE knob shared by
     * every Spark arm and every oracle spelling that claims "embed_neardup's
     * predicate" (embed_neardup, simjoin_auto, dedup_semantic[_verdict],
@@ -129,18 +125,11 @@ object Similarity {
       .withColumn("crn", row_number().over(wCoarse))
       .filter(col("crn") <= rerankFactor * k)
       .select(col("probe_id"), col("vec_id"))
-    val wTop = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-    cands
-      .join(emb.select(col("vec_id"), col("embedding"), col("sq")), "vec_id")
-      .join(broadcast(probes.select(col("probe_id"), col("p_emb"),
-        col("p_sq"))), "probe_id")
-      .select(col("probe_id"), col("vec_id"),
-        cos4Pre(dotFast(col("p_emb"), col("embedding")), col("p_sq"),
-          col("sq")).as("cos_sim"))
-      .withColumn("rn", row_number().over(wTop).cast("long"))
-      .filter(col("rn") <= k)
-      .orderBy(col("probe_id"), col("rn"))
+    topKByCos(cands
+      .join(emb.select(col("vec_id"), col("embedding").as("eb"), col("sq").as("sqb")),
+        "vec_id")
+      .join(broadcast(probes.select(col("probe_id"), col("p_emb").as("ea"),
+        col("p_sq").as("sqa"))), "probe_id"), ("probe_id", "vec_id"), k)
   }
 
   // ---- Random-hyperplane LSH (pairwise vector near-dup at scale) ----
@@ -350,15 +339,87 @@ object Similarity {
       col("sq").as("sqa"))
     val b = e.select(col("vec_id").as("dst"), col("embedding").as("eb"),
       col("sq").as("sqb"))
-    val w = Window.partitionBy(col("src"))
-      .orderBy(col("cos_sim").desc, col("dst"))
-    a.join(b, col("src") =!= col("dst"))
-      .select(col("src"), col("dst"),
-        cos4Pre(dotFast(col("ea"), col("eb")), col("sqa"), col("sqb"))
-          .as("cos_sim"))
+    topKByCos(a.join(b, col("src") =!= col("dst")), ("src", "dst"), k)
+  }
+
+  /** The one exact-rerank tail of the kNN-graph and ANN arms: each
+    * candidate's rounded cosine from its sides' vectors and squared
+    * norms (`ea`/`sqa` on the `key` side, `eb`/`sqb` on the other), the
+    * `k` best per key (cos desc, ties to the smaller other id), as
+    * (key, other, cos_sim, rn) ordered by (key, rn). The window input
+    * carries only those three narrow columns. */
+  private def topKByCos(cands: DataFrame, ids: (String, String), k: Int): DataFrame = {
+    val (key, other) = ids
+    val w = Window.partitionBy(col(key)).orderBy(col("cos_sim").desc, col(other))
+    cands.select(col(key), col(other),
+        cos4Pre(dotFast(col("ea"), col("eb")), col("sqa"), col("sqb")).as("cos_sim"))
       .withColumn("rn", row_number().over(w).cast("long"))
       .filter(col("rn") <= k)
-      .orderBy(col("src"), col("rn"))
+      .orderBy(col(key), col("rn"))
+  }
+
+  /**
+   * A cell index over the corpus — the blocking shape IVF, SemDeDup and
+   * the fixed-pivot verdict arms share: the cell vectors packed
+   * row-major as floats with their ids, ascending id (the kernels' tie
+   * order); bounded, ≤ 4096 cells × dim floats, so the pack rides into
+   * whole-stage codegen as a plan constant and neither probe choice nor
+   * assignment ever shuffles the corpus. Built by [[pivotIndex]]
+   * (md5-chosen corpus vectors) or [[trainedIndex]] (k-means
+   * centroids); [[cellPairs]] is the join over it.
+   */
+  private[graft] final case class CellIndex(flat: Array[Float], ids: Array[Long], dim: Int) {
+    /** The `nprobe` nearest cells of float vector `v`, nearest first:
+      * full L2 accumulated in double, exact ties to the smaller id — the
+      * (dist, id) order the fixed-pivot oracle ranks by. Bit-parity with
+      * the HOF spelling ([[nearBucketsHofSql]]) is pinned by KernelSpec. */
+    def probe(v: Column, nprobe: Int): Column =
+      graft.plans.VectorExprs.nearestCentroids(v, flat, ids, dim, nprobe)
+
+    /** `frame` with one row per probed cell `cl` of its vector column `v`. */
+    def probeCells(frame: DataFrame, v: String, nprobe: Int): DataFrame =
+      frame.withColumn("cl", explode(probe(col(v), nprobe)))
+
+    /** The argmin cell in the Σc² − 2·x·c form k-means assignment
+      * compares ([[graft.plans.NearestCentroidF32]], ties to the smaller
+      * id) — see [[assignClusters]]. */
+    def argmin(v: Column): Column =
+      graft.plans.VectorExprs.nearestCentroid(v, flat, ids.map(_.toInt), dim)
+  }
+
+  private[graft] object CellIndex {
+    def pack(cells: Seq[(Long, Seq[Float])]): CellIndex = {
+      require(cells.nonEmpty, "no cells to pack")
+      val sorted = cells.sortBy(_._1)
+      CellIndex(sorted.flatMap(_._2).toArray, sorted.map(_._1).toArray,
+        sorted.head._2.length)
+    }
+  }
+
+  /** The one cell-blocked candidate join: every `probes` row (one per
+    * probed cell `cl`) meets every `corpus` row of that cell. Each side
+    * carries its own columns (vectors and norms for an exact rerank, a
+    * LUT or PQ codes for ADC). `ordered` keeps `ids._1 < ids._2` — a
+    * self-join that emits each pair once — else every pair of distinct
+    * ids. A bounded probe set passes `broadcast(probes)`. */
+  private def cellPairs(probes: DataFrame, corpus: DataFrame, ids: (String, String),
+      ordered: Boolean): DataFrame = {
+    val (a, b) = ids
+    probes.join(corpus, Seq("cl"))
+      .filter(if (ordered) col(a) < col(b) else col(a) =!= col(b))
+  }
+
+  /** The kNN-graph candidate stage over a cell index: every vector
+    * probes its `nprobe` nearest cells and pairs with their members,
+    * then the exact top-k tail. */
+  private def knnGraphOver(emb: DataFrame, index: CellIndex, cells: DataFrame,
+      nprobe: Int, k: Int): DataFrame = {
+    val srcs = emb.select(col("vec_id").as("src"), col("embedding").as("ea"),
+      dotFast(col("embedding"), col("embedding")).as("sqa"))
+    val dsts = cells.select(col("cl"), col("vec_id").as("dst"),
+      col("embedding").as("eb"), dotFast(col("embedding"), col("embedding")).as("sqb"))
+    topKByCos(cellPairs(index.probeCells(srcs, "ea", nprobe), dsts, ("src", "dst"),
+      ordered = false), ("src", "dst"), k)
   }
 
   /**
@@ -396,52 +457,12 @@ object Similarity {
    */
   def knnGraphBlocked(emb: DataFrame, k: Int): DataFrame = {
     val (nlist, nprobe) = ivfGeometry(emb, 1)
-    val (centroids, assigned0) = trainAssign(emb, nlist)
+    val (index, cells) = trainedIndex(emb, nlist)
     // Handle intentionally discarded (ADVICE r10): the cache must live
     // until the caller materializes the RESULT frame built over it, so
     // its release belongs to the runner's per-query clearCache, the
     // repo-wide lifecycle for operator-persisted intermediates.
-    val assigned = graft.Q.ownPersist(assigned0).df
-    // Bounded collect (≤ 4096 centroids — same bound as the PQ LUT
-    // literals): the centroid table becomes a per-row expression so
-    // bucket choice never shuffles the corpus.
-    // Float-cast-then-double matches the value the assignment kernel
-    // actually compares against (NearestCentroidF32 carries float
-    // centroids), so a vector's nearest probe bucket agrees with its
-    // own assigned cl up to exact ties.
-    val cb = centroids.collect()
-      .map(r => (r.getInt(0).toLong,
-        r.getSeq[Double](1).map(_.toFloat).toArray))
-      .sortBy(_._1)
-    // r11 (VERDICT r10 #4): bucket choice is the codegen'd top-nprobe
-    // kernel — the centroid matrix rides into whole-stage codegen as a
-    // ≤ 1 MB plan constant exactly like the assignment argmin's, so the
-    // per-row L2-vs-all-centroids argsort that was an interpreted HOF
-    // (transform→array_sort→slice, ~nlist× the work and outside codegen)
-    // is now a tight primitive loop. Bit-parity with the HOF spelling
-    // ([[nearBucketsHofSql]]) is pinned by KernelSpec, including exact
-    // ties (ascending-cl order).
-    val dim = cb.headOption.map(_._2.length).getOrElse(0)
-    val nearBuckets = graft.plans.VectorExprs.nearestCentroids(
-      col("ea"), cb.flatMap(_._2), cb.map(_._1), dim, nprobe)
-    val srcProbes = emb
-      .select(col("vec_id").as("src"), col("embedding").as("ea"),
-        dotFast(col("embedding"), col("embedding")).as("sqa"))
-      .select(col("src"), col("ea"), col("sqa"),
-        explode(nearBuckets).as("cl"))
-    val corpus = assigned.select(col("cl").cast("long").as("cl"),
-      col("vec_id").as("dst"), col("embedding").as("eb"),
-      dotFast(col("embedding"), col("embedding")).as("sqb"))
-    val w = Window.partitionBy(col("src"))
-      .orderBy(col("cos_sim").desc, col("dst"))
-    srcProbes.join(corpus, Seq("cl"))
-      .filter(col("src") =!= col("dst"))
-      .select(col("src"), col("dst"),
-        cos4Pre(dotFast(col("ea"), col("eb")), col("sqa"), col("sqb"))
-          .as("cos_sim"))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
-      .orderBy(col("src"), col("rn"))
+    knnGraphOver(emb, index, graft.Q.ownPersist(cells).df, nprobe, k)
   }
 
   /** The interpreted HOF spelling of the top-nprobe bucket choice that
@@ -853,47 +874,28 @@ object Similarity {
    * its verdict twin the same way in r9). k-means buys recall, not
    * correctness; this arm trades recall for a hash-matchable truth.
    *
-   * Verify-scale arm by design (n×nlist probe-choice frame via a
-   * broadcast cross join — the trained arm's kernel does this inside
-   * codegen); the scale path remains knnGraphBlocked.
+   * Same code as the trained arm past the index ([[knnGraphOver]]):
+   * only the cells differ ([[pivotIndex]]).
    */
   def knnGraphFixedPivots(emb: DataFrame, k: Int): DataFrame = {
-    val pivots = emb
-      .select(col("vec_id").as("pid"), col("embedding").as("pv"))
-      .orderBy(md5(col("pid").cast("string")), col("pid"))
+    val (index, cells) = pivotIndex(emb)
+    knnGraphOver(emb, index, cells, FixedPivotNprobe, k)
+  }
+
+  /** The fixed-pivot cell index: the [[FixedPivotNlist]] vectors with
+    * the smallest md5(vec_id) are the cells (a bounded driver fetch,
+    * packed ascending pid), and a vector's cell is its nearest pivot —
+    * the probe kernel's first entry, i.e. full L2 with ties to the
+    * smaller pid, the oracle's `ROW_NUMBER() OVER (ORDER BY dist, pid)`.
+    * Returns (index, cells (vec_id, embedding, cl)). */
+  private[graft] def pivotIndex(emb: DataFrame): (CellIndex, DataFrame) = {
+    val index = CellIndex.pack(emb
+      .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
       .limit(FixedPivotNlist)
-    val l2 = expr(
-      """aggregate(zip_with(emb_v, pv,
-        |  (x, y) -> (CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) *
-        |            (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))),
-        |  CAST(0.0 AS DOUBLE), (a, v) -> a + v)""".stripMargin)
-    val wNear = Window.partitionBy(col("vec_id"))
-      .orderBy(col("dist").asc, col("pid"))
-    val ranked = emb
-      .select(col("vec_id"), col("embedding").as("emb_v"))
-      .crossJoin(broadcast(pivots))
-      .select(col("vec_id"), col("pid"), l2.as("dist"))
-      .withColumn("r", row_number().over(wNear))
-    val assign = ranked.filter(col("r") === 1)
-      .select(col("vec_id"), col("pid"))
-    val probesF = ranked.filter(col("r") <= FixedPivotNprobe)
-      .select(col("vec_id"), col("pid"))
-    val sides = refineEmbFrame(emb)
-    val wTop = Window.partitionBy(col("src"))
-      .orderBy(col("cos_sim").desc, col("dst"))
-    probesF.select(col("vec_id").as("src"), col("pid"))
-      .join(assign.select(col("vec_id").as("dst"), col("pid")), Seq("pid"))
-      .filter(col("src") =!= col("dst"))
-      .join(sides.select(col("vec_id").as("src"),
-        col("embedding").as("ea"), col("sq").as("sqa")), Seq("src"))
-      .join(sides.select(col("vec_id").as("dst"),
-        col("embedding").as("eb"), col("sq").as("sqb")), Seq("dst"))
-      .select(col("src"), col("dst"),
-        cos4Pre(dotFast(col("ea"), col("eb")), col("sqa"), col("sqb"))
-          .as("cos_sim"))
-      .withColumn("rn", row_number().over(wTop).cast("long"))
-      .filter(col("rn") <= k)
-      .orderBy(col("src"), col("rn"))
+      .select(col("vec_id"), col("embedding")).collect().toSeq
+      .map(r => r.getLong(0) -> r.getSeq[Float](1)))
+    (index, emb.select(col("vec_id"), col("embedding"),
+      element_at(index.probe(col("embedding"), 1), 1).as("cl")))
   }
 
   /** Hyperplane-LSH banding with an ORACLE-EXACT integer spelling
@@ -1028,60 +1030,36 @@ object Similarity {
 
   /** Deterministic fixed-pivot arm of [[annIvf]] (r15 — VERDICT r14
     * #5): the knn_graph_blocked_verdict precedent applied to the IVF
-    * RETRIEVAL path. Pivots are the [[FixedPivotNlist]] smallest
-    * md5(vec_id) vectors (a deterministic spread, no k-means); every
-    * corpus vector is assigned to its nearest pivot's cell (full L2
-    * over double-cast values); the ten probes (vec_id < 10) scan their
+    * RETRIEVAL path. The cells are [[pivotIndex]]'s (the
+    * [[FixedPivotNlist]] smallest md5(vec_id) vectors, a deterministic
+    * spread, no k-means; every corpus vector in its nearest pivot's
+    * cell); the ten probes (vec_id < 10) scan their
     * [[FixedPivotNprobe]] nearest cells and rerank EXACTLY (rounded
     * cosine, ties by vec_id) — so the bucket-prune + rerank MECHANISM
     * of IVF itself gets a hash-matched DuckDB oracle, while the
     * k-means-trained [[annIvf]] keeps its recall property gate (its
-    * clustering buys recall, not correctness). Verify-scale arm by
-    * design (the n×nlist probe-choice frame is a broadcast cross join
-    * — the trained arm does the same argmin inside the
-    * NearestCentroidF32 codegen kernel); the scale path remains
-    * [[annIvf]]. */
+    * clustering buys recall, not correctness). Past the index it is
+    * [[annIvf]]'s code ([[annCandidates]]). */
   def annIvfFixedPivots(emb: DataFrame, k: Int): DataFrame = {
-    val pivots = emb
-      .select(col("vec_id").as("pid"), col("embedding").as("pv"))
-      .orderBy(md5(col("pid").cast("string")), col("pid"))
-      .limit(FixedPivotNlist)
-    val l2 = expr(
-      """aggregate(zip_with(emb_v, pv,
-        |  (x, y) -> (CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) *
-        |            (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))),
-        |  CAST(0.0 AS DOUBLE), (a, v) -> a + v)""".stripMargin)
-    val wNear = Window.partitionBy(col("vec_id"))
-      .orderBy(col("dist").asc, col("pid"))
-    // Persisted: the pivot-distance ranking feeds BOTH the corpus cell
-    // assignment (r = 1) and the probes' cell choice (r <= nprobe);
-    // handle leaked to the runner's per-query clearCache (the
-    // documented convention — the lazy result is built over it).
-    val ranked = graft.Q.ownPersist(emb
-      .select(col("vec_id"), col("embedding").as("emb_v"))
-      .crossJoin(broadcast(pivots))
-      .select(col("vec_id"), col("pid"), l2.as("dist"))
-      .withColumn("r", row_number().over(wNear))).df
-    val assign = ranked.filter(col("r") === 1)
-      .select(col("vec_id"), col("pid"))
-    val probes = ranked
-      .filter(col("vec_id") < 10 && col("r") <= FixedPivotNprobe)
-      .select(col("vec_id").as("probe_id"), col("pid"))
-    val sides = refineEmbFrame(emb)
-    val wTop = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-    probes.join(assign, Seq("pid"))
-      .filter(col("probe_id") =!= col("vec_id"))
-      .join(sides.select(col("vec_id").as("probe_id"),
-        col("embedding").as("ea"), col("sq").as("sqa")), Seq("probe_id"))
-      .join(sides.select(col("vec_id"),
-        col("embedding").as("eb"), col("sq").as("sqb")), Seq("vec_id"))
-      .select(col("probe_id"), col("vec_id"),
-        cos4Pre(dotFast(col("ea"), col("eb")), col("sqa"), col("sqb"))
-          .as("cos_sim"))
-      .withColumn("rn", row_number().over(wTop).cast("long"))
-      .filter(col("rn") <= k)
-      .orderBy(col("probe_id"), col("rn"))
+    val (index, cells) = pivotIndex(emb)
+    topKByCos(annCandidates(emb, index, cells, FixedPivotNprobe),
+      ("probe_id", "vec_id"), k)
+  }
+
+  /** The ANN candidate stage over a cell index: the ten probes
+    * (vec_id < 10, broadcast) scan the members of their `nprobe`
+    * nearest cells — (probe_id, ea, sqa, cl, vec_id, eb, sqb), before
+    * the exact rerank. The corpus side's squared norms are taken after
+    * the join, so only candidates pay them. */
+  private def annCandidates(emb: DataFrame, index: CellIndex, cells: DataFrame,
+      nprobe: Int): DataFrame = {
+    val probes = emb.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("probe_id"), col("embedding").as("ea"),
+        dotFast(col("embedding"), col("embedding")).as("sqa"))
+    cellPairs(broadcast(index.probeCells(probes, "ea", nprobe)),
+        cells.select(col("cl"), col("vec_id"), col("embedding").as("eb")),
+        ("probe_id", "vec_id"), ordered = false)
+      .withColumn("sqb", dotFast(col("eb"), col("eb")))
   }
 
   /** Mean vector per cluster, computed distributed: posexplode to
@@ -1124,35 +1102,18 @@ object Similarity {
     * accepted class as the k-seed fetch above. Metric and tie parity
     * with the r6 frame is bit-exact (float-cast centroids, double
     * accumulation, ties → lowest cl; see the kernel's Scaladoc). */
-  private def assignClusters(emb: DataFrame, centroids: DataFrame): DataFrame = {
-    val (flat, ids, dim) = collectCentroidsF32(centroids)
-    emb.select(col("vec_id"), col("embedding"),
-      graft.plans.VectorExprs.nearestCentroid(col("embedding"), flat, ids, dim)
-        .as("cl"))
-  }
+  private def assignClusters(emb: DataFrame, index: CellIndex): DataFrame =
+    emb.select(col("vec_id"), col("embedding"), index.argmin(col("embedding")).as("cl"))
 
-  /** Pack the (cl, centroid) frame into a row-major float matrix + id
-    * map for [[graft.plans.NearestCentroidF32]], ascending cl (the
-    * kernel's tie order). Bounded: k ≤ 4096 rows × dim floats. */
-  private def collectCentroidsF32(centroids: DataFrame)
-      : (Array[Float], Array[Int], Int) = {
-    val rows = centroids
-      .select(col("cl").cast("int"),
-        expr("transform(centroid, x -> cast(x as float))").as("cf"))
-      .orderBy(col("cl")).collect()
-    require(rows.nonEmpty, "no centroids to pack")
-    val dim = rows(0).getSeq[Float](1).length
-    val ids = rows.map(_.getInt(0))
-    val flat = new Array[Float](rows.length * dim)
-    var c = 0
-    while (c < rows.length) {
-      val v = rows(c).getSeq[Float](1)
-      var j = 0
-      while (j < dim) { flat(c * dim + j) = v(j); j += 1 }
-      c += 1
-    }
-    (flat, ids, dim)
-  }
+  /** Pack the (cl, centroid) frame as a [[CellIndex]]: float-cast
+    * centroids, ascending cl (the kernels' tie order). The float cast is
+    * the value both kernels compare against, so a vector's nearest probe
+    * cell agrees with its own assigned cell up to exact ties. */
+  private def centroidIndex(centroids: DataFrame): CellIndex =
+    CellIndex.pack(centroids
+      .select(col("cl").cast("long"),
+        expr("transform(centroid, x -> cast(x as float))"))
+      .collect().toSeq.map(r => r.getLong(0) -> r.getSeq[Float](1)))
 
   /**
    * Deterministic distributed k-means (Lloyd): init = the k lowest
@@ -1208,7 +1169,7 @@ object Similarity {
       .select(col("cl"),
         expr("transform(embedding, x -> cast(x as double))").as("centroid")))
     for (_ <- 1 to iters)
-      centroids = localize(meanByCluster(assignClusters(emb, centroids)))
+      centroids = localize(meanByCluster(assignClusters(emb, centroidIndex(centroids))))
     // A local relation needs no checkpoint registration — there are no
     // executor-side blocks for the runner drain to reap.
     centroids
@@ -1247,21 +1208,18 @@ object Similarity {
     (nlist, nprobe)
   }
 
-  /** Index build + probe-side bucket choice, shared by [[annIvf]] and
-    * the candidate instrumentation. Returns (assigned corpus, probe
-    * buckets). K-means trains on a deterministic hash SAMPLE of
-    * ≈ nlist × 64 vectors (FAISS's recommended points-per-centroid
-    * band; training on the full corpus would make each Lloyd round
-    * n × nlist — the sample keeps training ∝ 64·nlist² ≈ 64·n̂ linear),
-    * then every corpus vector is assigned once against the final
-    * centroids: n × nlist kernel distances, the textbook IVF-flat
-    * build cost (n^1.5 at nlist=√n) — amortized across every query the
-    * index serves; the per-query win is the n^¾ candidate set. */
-  /** Train k-means on the bounded hash sample (≈ 64 pts/centroid, the
-    * FAISS band) and assign every corpus vector once — the shared build
-    * step of the IVF index and [[semanticDedup]]'s cluster blocking.
-    * Returns (centroids, assigned (vec_id, embedding, cl)). */
-  private def trainAssign(emb: DataFrame, nlist: Int): (DataFrame, DataFrame) = {
+  /** The trained cell index, shared by the IVF arms, the blocked kNN
+    * graph and [[semanticDedup]]'s cluster blocking: k-means trains on a
+    * deterministic hash SAMPLE of ≈ nlist × 64 vectors (FAISS's
+    * recommended points-per-centroid band; training on the full corpus
+    * would make each Lloyd round n × nlist — the sample keeps training
+    * ∝ 64·nlist² ≈ 64·n̂ linear), then every corpus vector is assigned
+    * once against the final centroids ([[assignClusters]]): n × nlist
+    * kernel distances, the textbook IVF-flat build cost (n^1.5 at
+    * nlist=√n) — amortized across every query the index serves; the
+    * per-query win is the n^¾ candidate set. Returns (index, cells
+    * (vec_id, embedding, cl)). */
+  private def trainedIndex(emb: DataFrame, nlist: Int): (CellIndex, DataFrame) = {
     val nEst = graft.plans.StatsEst.estimatedRows(
         emb.queryExecution.optimizedPlan, graft.plans.StatsEst.EstRowBytesVec)
       .max(BigInt(1)).toLong
@@ -1269,12 +1227,15 @@ object Similarity {
     val train =
       if (sampleMod <= 1) emb
       else emb.filter(pmod(xxhash64(col("vec_id")), lit(sampleMod)) === 0)
-    val centroids = kmeans(train, nlist, 3)
-    (centroids, assignClusters(emb, centroids))
+    val index = centroidIndex(kmeans(train, nlist, 3))
+    (index, assignClusters(emb, index).withColumn("cl", col("cl").cast("long")))
   }
 
-  private def ivfParts(s: SparkSession, d: String, minNprobe: Int,
-      nprobeOverride: Option[Int] = None): (DataFrame, DataFrame) = {
+  /** The IVF index of the `embeddings` table at the corpus-sized
+    * geometry ([[ivfGeometry]]) with its probe width. Returns (emb,
+    * index, cells, nprobe). */
+  private def ivfIndex(s: SparkSession, d: String, minNprobe: Int,
+      nprobeOverride: Option[Int] = None): (DataFrame, CellIndex, DataFrame, Int) = {
     val emb = Tables.embeddings(s, d)
     val (nlist, nprobeGeo) = ivfGeometry(emb, minNprobe)
     // Override exists for the recall-vs-nprobe curve (StressBench):
@@ -1283,25 +1244,8 @@ object Similarity {
     // Some(0) would silently produce an empty probe set and a
     // zero-recall row that reads as a regression, not a misuse.
     val nprobe = nprobeOverride.map(_.max(1).min(nlist)).getOrElse(nprobeGeo)
-    val (centroids, assignedRaw) = trainAssign(emb, nlist)
-    val cb = broadcast(centroids)
-    val assigned = assignedRaw
-      .select(col("vec_id"), col("embedding"), col("cl").as("bucket"))
-    // Probes pick their nprobe nearest buckets (same L2 metric as the
-    // corpus assignment), then the caller reranks exactly. The probe
-    // set is 10 × nlist rows — window argmin is fine at that size.
-    val wProbe = Window.partitionBy(col("probe_id"))
-      .orderBy(col("c_dist").asc, col("cl"))
-    val probeBuckets = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"))
-      .crossJoin(cb)
-      .select(col("probe_id"), col("p_emb"), col("cl"),
-        (sumSq(col("centroid")) - lit(2.0) * dot(col("p_emb"), col("centroid")))
-          .as("c_dist"))
-      .withColumn("crn", row_number().over(wProbe))
-      .filter(col("crn") <= nprobe)
-      .select(col("probe_id"), col("p_emb"), col("cl").as("bucket"))
-    (assigned, probeBuckets)
+    val (index, cells) = trainedIndex(emb, nlist)
+    (emb, index, cells, nprobe)
   }
 
   /**
@@ -1321,47 +1265,41 @@ object Similarity {
    * property-gated in LlmSpec (the paper's finding: dup pairs
    * concentrate inside clusters, so the loss is small).
    *
-   * Returns (assigned (vec_id, embedding, cl), verified within-cluster
+   * Returns (cells (vec_id, embedding, cl), verified within-cluster
    * pairs (cl, vec_a, vec_b, cos_sim)).
    */
   private def semanticParts(emb: DataFrame, thresh: Double)
       : (DataFrame, graft.Q.Owned) = {
-    val (nlist, _) = ivfGeometry(emb, 1)
-    // assigned feeds both pair sides and the verdict join — persist, or
-    // each reference re-runs the centroid-argmin scan over the corpus.
-    // Handles here and below intentionally discarded: released by the
-    // runner's per-query clearCache once the caller materializes the
-    // result built over them (ADVICE r10).
-    val (_, assigned0) = trainAssign(emb, nlist)
-    val assigned = graft.Q.ownPersist(assigned0).df
-    val e = assigned.select(col("cl"), col("vec_id"), col("embedding"),
-      dotFast(col("embedding"), col("embedding")).as("sq"))
-    val a = e.select(col("cl"), col("vec_id").as("vec_a"),
-      col("embedding").as("ea"), col("sq").as("sqa"))
-    val b = e.select(col("cl"), col("vec_id").as("vec_b"),
-      col("embedding").as("eb"), col("sq").as("sqb"))
+    val (cells, cands) = semanticBlocks(emb)
     val cos = cos4Pre(dotFast(col("ea"), col("eb")), col("sqa"), col("sqb"))
     // pairs feed connectedComponents' symmetric edge union (2 refs) —
     // persist so the within-cluster join runs once.
-    val pairs = graft.Q.ownPersist(a.join(b, Seq("cl"))
-      .filter(col("vec_a") < col("vec_b") && cos >= thresh)
+    val pairs = graft.Q.ownPersist(cands.filter(cos >= thresh)
       .select(col("cl"), col("vec_a"), col("vec_b"), cos.as("cos_sim")))
-    (assigned, pairs)
+    (cells, pairs)
   }
 
-  /** The UNFILTERED within-cluster pair frame — [[semanticParts]]'
-    * candidate stage before the cosine verify, exposed for the stress
-    * sweep: its row count is the Σ|cluster|² ≈ n^1.5 blocking claim
-    * (the exact arm scans n²). */
-  def semanticCandidates(emb: DataFrame): DataFrame = {
+  /** SemDeDup's cell index and candidate stage: the trained cells at
+    * k ≈ ⌈√n⌉ and their within-cell self-join, each pair once
+    * (cl, vec_a, ea, sqa, vec_b, eb, sqb). The cells are persisted:
+    * they feed both pair sides and the verdict join, and each reference
+    * would otherwise re-run the assignment scan. Handles intentionally
+    * discarded: released by the runner's per-query clearCache once the
+    * caller materializes the result built over them (ADVICE r10). */
+  private def semanticBlocks(emb: DataFrame): (DataFrame, DataFrame) = {
     val (nlist, _) = ivfGeometry(emb, 1)
-    val (_, assigned0) = trainAssign(emb, nlist)
-    val assigned = graft.Q.ownPersist(assigned0).df
-    val a = assigned.select(col("cl"), col("vec_id").as("vec_a"))
-    val b = assigned.select(col("cl"), col("vec_id").as("vec_b"))
-    a.join(b, Seq("cl")).filter(col("vec_a") < col("vec_b"))
-      .select(col("vec_a"), col("vec_b"))
+    val cells = graft.Q.ownPersist(trainedIndex(emb, nlist)._2).df
+    def side(id: String, e: String, sq: String) =
+      cells.select(col("cl"), col("vec_id").as(id), col("embedding").as(e),
+        dotFast(col("embedding"), col("embedding")).as(sq))
+    (cells, cellPairs(side("vec_a", "ea", "sqa"), side("vec_b", "eb", "sqb"),
+      ("vec_a", "vec_b"), ordered = true))
   }
+
+  /** [[semanticParts]]' candidate stage before the cosine verify,
+    * exposed for the stress sweep: its row count is the Σ|cluster|² ≈
+    * n^1.5 blocking claim (the exact arm scans n²). */
+  def semanticCandidates(emb: DataFrame): DataFrame = semanticBlocks(emb)._2
 
   /** [[semanticParts]]' verified pair frame — LlmSpec's recall-gate
     * entry point (compared against [[exactPairs]] at the same
@@ -1390,7 +1328,7 @@ object Similarity {
     // drop it rather than pinning the pair set for the session (the
     // Verify/Bench runners clearCache per query, ad-hoc sessions don't).
     pairsOwned.release()
-    assigned.select(col("vec_id"), col("cl").cast("long").as("cl"))
+    assigned.select(col("vec_id"), col("cl"))
       .join(comps.select(col("doc_id").as("vec_id"), col("component_id")),
         Seq("vec_id"), "left")
       .withColumn("component_id",
@@ -1434,31 +1372,20 @@ object Similarity {
       .orderBy(col("vec_id"))
   }
 
-  /** The candidate frame an IVF probe scans (bucket join, BEFORE exact
-    * rerank) — the scale-instrumentation entry point (StressBench): its
-    * row count over the stress span is the sub-linear-fraction claim. */
-  def ivfCandidates(s: SparkSession, d: String): DataFrame = {
-    val (assigned, probeBuckets) = ivfParts(s, d, 3)
-    assigned.join(broadcast(probeBuckets), "bucket")
-      .filter(col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id"))
+  /** The candidate frame an IVF probe scans (cell join, BEFORE the
+    * exact rerank) — [[annIvf]]'s own candidate stage and the
+    * scale-instrumentation entry point (StressBench): its row count over
+    * the stress span is the sub-linear-fraction claim. */
+  def ivfCandidates(s: SparkSession, d: String, minNprobe: Int = 3): DataFrame = {
+    val (emb, index, cells, nprobe) = ivfIndex(s, d, minNprobe)
+    annCandidates(emb, index, cells, nprobe)
   }
 
   /** IVF-style ANN: corpus-sized k-means buckets ([[ivfGeometry]]) —
     * probes only score vectors in their nprobe nearest buckets.
     * `minNprobe` floors the probe width (recall knob). */
-  def annIvf(s: SparkSession, d: String, k: Int, minNprobe: Int): DataFrame = {
-    val (assigned, probeBuckets) = ivfParts(s, d, minNprobe)
-    val wTop = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-    assigned.join(broadcast(probeBuckets), "bucket")
-      .filter(col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id"),
-        cos4(col("p_emb"), col("embedding")).as("cos_sim"))
-      .withColumn("rn", row_number().over(wTop).cast("long"))
-      .filter(col("rn") <= k)
-      .orderBy(col("probe_id"), col("rn"))
-  }
+  def annIvf(s: SparkSession, d: String, k: Int, minNprobe: Int): DataFrame =
+    topKByCos(ivfCandidates(s, d, minNprobe), ("probe_id", "vec_id"), k)
 
   /**
    * Symmetric int8 scalar quantization of the embedding column — the
@@ -1681,14 +1608,14 @@ object Similarity {
    * ever touch float data again. Non-oracle (k-means codebooks);
    * recall vs the exact [[bruteTopK]] oracle is gated in LlmSpec.
    */
-  /** Probe-side ADC plumbing shared by [[annPq]] and [[annIvfPq]]:
-    * the LUT-builder SQL (dot of each probe subvector against every
-    * codebook centroid — ≤ 8×128 doubles, computed once per probe row),
-    * the ADC score SQL over code columns c0..c7 (8 array lookups, never
-    * a float dot), and the per-subspace centroid counts. Offsets handle
-    * ragged codebooks (empty k-means clusters drop). */
-  private def pqAdcParts(books: Seq[(Array[Float], Int)])
-      : (String, String, Seq[Int]) = {
+  /** Probe-side ADC plumbing shared by [[annPq]] and [[annIvfPq]]: the
+    * ten probes (vec_id < 10) with their LUT — the dot of each probe
+    * subvector against every codebook centroid, ≤ 8×128 doubles computed
+    * once per probe — as (probe_id, p_emb, lut), and the ADC score SQL
+    * over code columns c0..c7 (8 array lookups, never a float dot).
+    * Offsets handle ragged codebooks (empty k-means clusters drop). */
+  private def pqProbes(emb: DataFrame, books: Seq[(Array[Float], Int)])
+      : (DataFrame, String) = {
     val sizes = books.map { case (flat, dim) => flat.length / dim }
     val offs = sizes.scanLeft(0)(_ + _)
     val lutExpr = "flatten(transform(sequence(0, " + (PqM - 1) + "), j -> " +
@@ -1699,7 +1626,13 @@ object Similarity {
       "CAST(0.0 AS DOUBLE), (a, v) -> a + v))))"
     val adcScore = (0 until PqM)
       .map(j => s"element_at(lut, ${offs(j)} + c$j + 1)").mkString(" + ")
-    (lutExpr, adcScore, sizes)
+    val probes = emb.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"))
+      .withColumn("cb", typedlit(pqBookSeq(books)))
+      .withColumn("cbl", typedlit(sizes.map(_ - 1)))
+      .withColumn("lut", expr(lutExpr))
+      .select(col("probe_id"), col("p_emb"), col("lut"))
+    (probes, adcScore)
   }
 
   /** Hard row bound for the UNCONDITIONAL rerank-survivor broadcast in
@@ -1721,49 +1654,49 @@ object Similarity {
         s"not be driver-safe (see MaxRerankBroadcastRows)")
     val emb = Tables.embeddings(s, d)
     val books = pqTrain(emb)
-    val cbSeq = pqBookSeq(books)
-    val (lutExpr, adcScore, sizes) = pqAdcParts(books)
-    val probes = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"))
-      .withColumn("cb", typedlit(cbSeq))
-      .withColumn("cbl", typedlit(sizes.map(_ - 1)))
-      .withColumn("lut", expr(lutExpr))
-      .select(col("probe_id"), col("p_emb"), col("lut"))
+    val (probes, adcScore) = pqProbes(emb, books)
     val codes = pqEncode(emb, books)
       .select(col("vec_id") +: (0 until PqM).map(j => col(s"c$j")): _*)
+    adcRerank(codes.join(broadcast(probes.select(col("probe_id"), col("lut"))),
+      col("vec_id") =!= col("probe_id")), adcScore, emb, probes, rerankFactor, k)
+  }
+
+  /** The PQ arms' tail: ADC-score each (probe, candidate) pair of
+    * `pairs` (probe_id, vec_id, lut, c0..c7), keep the top
+    * rerankFactor·k per probe, and rerank those exactly through
+    * [[topKByCos]]. The ADC stream is cut to (probe_id, vec_id, adc)
+    * BEFORE the per-probe window (ADVICE r9): the LUT lookups happen in
+    * the join projection map-side, so the window's exchange shuffles 3
+    * narrow columns per candidate — never the 64-float probe vector or
+    * the ≤1024-double LUT. Survivors fetch their floats from the corpus
+    * scan, probes theirs from the bounded probe frame (probe_id, p_emb)
+    * (the annMrl pattern); squared norms are taken per survivor and per
+    * probe.
+    *
+    * The survivor broadcast is PINNED (≤ probes·rerankFactor·k rows by
+    * construction, see [[MaxRerankBroadcastRows]]): the optimizer
+    * cannot see the window-rank filter's selectivity, so at large
+    * corpora its estimate crosses the auto-broadcast threshold and the
+    * join flips to shuffling the WHOLE embedding table into a
+    * SortMergeJoin (measured at stress s30 on the IVF-PQ twin: 7.2 →
+    * 21.3 s, VERDICT r11 #8). The hint keeps the corpus scan streaming,
+    * the same discipline as the bounded probe-frame broadcasts. */
+  private def adcRerank(pairs: DataFrame, adcScore: String, emb: DataFrame,
+      probes: DataFrame, rerankFactor: Int, k: Int): DataFrame = {
     val wAdc = Window.partitionBy(col("probe_id"))
       .orderBy(col("adc").desc, col("vec_id"))
-    // ADC stream is cut to (probe_id, vec_id, adc) BEFORE the per-probe
-    // window (ADVICE r9): the LUT lookups happen in the broadcast-join
-    // projection map-side, so the window's exchange shuffles 3 narrow
-    // columns per candidate — never the 64-float probe vector or the
-    // ≤1024-double LUT. p_emb re-joins from the 10-row probe frame only
-    // for the rerankFactor·k survivors (the annMrl pattern).
-    val cands = codes
-      .join(broadcast(probes.select(col("probe_id"), col("lut"))),
-        col("vec_id") =!= col("probe_id"))
+    val cands = pairs
       .withColumn("adc", expr(adcScore))
       .select(col("probe_id"), col("vec_id"), col("adc"))
       .withColumn("crn", row_number().over(wAdc))
       .filter(col("crn") <= rerankFactor * k)
       .select(col("probe_id"), col("vec_id"))
-    val wTop = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-    // broadcast PINNED on the rerank survivors (≤ probes·rerankFactor·k
-    // rows by construction): the optimizer cannot see the window-rank
-    // filter's selectivity, so at large corpora its estimate crosses
-    // the auto-broadcast threshold and the join flips to shuffling the
-    // WHOLE embedding table into a SortMergeJoin (measured at stress
-    // s30 on the IVF-PQ twin: 7.2 → 21.3 s, VERDICT r11 #8). The hint
-    // keeps the corpus scan streaming, the same discipline as the
-    // bounded probe-frame broadcasts.
-    broadcast(cands).join(emb, "vec_id")
-      .join(broadcast(probes.select(col("probe_id"), col("p_emb"))), "probe_id")
-      .select(col("probe_id"), col("vec_id"),
-        cos4(col("p_emb"), col("embedding")).as("cos_sim"))
-      .withColumn("rn", row_number().over(wTop).cast("long"))
-      .filter(col("rn") <= k)
-      .orderBy(col("probe_id"), col("rn"))
+    topKByCos(broadcast(cands)
+      .join(emb.select(col("vec_id"), col("embedding").as("eb")), "vec_id")
+      .withColumn("sqb", dotFast(col("eb"), col("eb")))
+      .join(broadcast(probes.select(col("probe_id"), col("p_emb").as("ea"),
+        dotFast(col("p_emb"), col("p_emb")).as("sqa"))), "probe_id"),
+      ("probe_id", "vec_id"), k)
   }
 
   /**
@@ -1803,48 +1736,17 @@ object Similarity {
       s"annIvfPq: rerank survivor bound 10*$rerankFactor*$k exceeds " +
         s"$MaxRerankBroadcastRows rows — the pinned broadcast would " +
         s"not be driver-safe (see MaxRerankBroadcastRows)")
-    val emb = Tables.embeddings(s, d)
-    val (assigned, probeBuckets) = ivfParts(s, d, 3, nprobeOverride)
+    val (emb, index, cells, nprobe) = ivfIndex(s, d, 3, nprobeOverride)
     val books = pqTrain(emb)
-    val cbSeq = pqBookSeq(books)
-    val (lutExpr, adcScore, sizes) = pqAdcParts(books)
-    val codes = pqEncode(assigned, books)
-      .select(col("vec_id") +: col("bucket") +:
-        (0 until PqM).map(j => col(s"c$j")): _*)
-    val probes = probeBuckets
-      .withColumn("cb", typedlit(cbSeq))
-      .withColumn("cbl", typedlit(sizes.map(_ - 1)))
-      .withColumn("lut", expr(lutExpr))
-      .select(col("probe_id"), col("p_emb"), col("bucket"), col("lut"))
-    val wAdc = Window.partitionBy(col("probe_id"))
-      .orderBy(col("adc").desc, col("vec_id"))
-    // Same exchange-width discipline as [[annPq]] (ADVICE r9): the
-    // bucket equi-join carries only (bucket, probe_id, lut), adc is
-    // computed in that projection, and the window shuffles the narrow
-    // (probe_id, vec_id, adc) stream — the "n^¾ · 8 bytes of packed
-    // codes" claim now holds through the exchange too. p_emb re-joins
-    // from the bounded probe frame for the rerank survivors only.
-    val cands = codes
-      .join(broadcast(probes.select(col("bucket"), col("probe_id"), col("lut"))),
-        Seq("bucket"))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("adc", expr(adcScore))
-      .select(col("probe_id"), col("vec_id"), col("adc"))
-      .withColumn("crn", row_number().over(wAdc))
-      .filter(col("crn") <= rerankFactor * k)
-      .select(col("probe_id"), col("vec_id"))
-    val wTop = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-    // Same rerank-join broadcast pin as [[annPq]] — this is the join
-    // that flipped to SortMergeJoin at stress s30 (VERDICT r11 #8).
-    broadcast(cands).join(emb, "vec_id")
-      .join(broadcast(probes.select(col("probe_id"), col("p_emb"))
-        .dropDuplicates("probe_id")), "probe_id")
-      .select(col("probe_id"), col("vec_id"),
-        cos4(col("p_emb"), col("embedding")).as("cos_sim"))
-      .withColumn("rn", row_number().over(wTop).cast("long"))
-      .filter(col("rn") <= k)
-      .orderBy(col("probe_id"), col("rn"))
+    val (probes, adcScore) = pqProbes(emb, books)
+    val codes = pqEncode(cells, books)
+      .select(col("vec_id") +: col("cl") +: (0 until PqM).map(j => col(s"c$j")): _*)
+    // The cell join carries only (cl, probe_id, lut) on the probe side,
+    // so the "n^¾ · 8 bytes of packed codes" claim holds through the
+    // ADC window's exchange too.
+    adcRerank(cellPairs(broadcast(index.probeCells(probes, "p_emb", nprobe)
+        .select(col("cl"), col("probe_id"), col("lut"))), codes,
+      ("probe_id", "vec_id"), ordered = false), adcScore, emb, probes, rerankFactor, k)
   }
 
   val queries: Map[String, QFn] = Map(
@@ -2003,6 +1905,49 @@ object Similarity {
       |      ORDER BY cos_sim DESC, dst) AS BIGINT) AS rn
       |   FROM p)""".stripMargin
 
+  /** DuckDB oracle of the fixed-pivot cell arms, end to end: pivots =
+    * the FixedPivotNlist smallest md5(vec_id) vectors; every vector's
+    * cell is its nearest pivot, and the probing vectors (those passing
+    * `probes`, a predicate prefix on `p`) join the cells of their
+    * FixedPivotNprobe nearest pivots (full-L2 over the double-cast
+    * values — LIST_SUM left-folds like Spark's aggregate, proven
+    * bit-identical by fn_vector — ranked by (dist, pid)); rounded
+    * cosine + per-key top-k inside the probed cells, as (key, other,
+    * cos_sim, rn). Geometry constants are interpolated from the same
+    * vals the Spark plan reads. */
+  private def fixedPivotOracle(probes: String, ids: (String, String), k: Int): String = {
+    val (key, other) = ids
+    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
+       |           FROM embeddings),
+       | piv AS (SELECT vec_id AS pid, emb AS pv FROM e
+       |         ORDER BY MD5(CAST(vec_id AS VARCHAR)), vec_id
+       |         LIMIT $FixedPivotNlist),
+       | d AS (SELECT e.vec_id, piv.pid,
+       |    LIST_SUM(LIST_TRANSFORM(RANGE(1, 65),
+       |      i -> (e.emb[i] - piv.pv[i]) * (e.emb[i] - piv.pv[i]))) AS dist
+       |   FROM e CROSS JOIN piv),
+       | rk AS (SELECT vec_id, pid,
+       |    ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, pid) AS r
+       |   FROM d),
+       | n AS (SELECT vec_id, emb,
+       |    LIST_SUM(LIST_TRANSFORM(RANGE(1, 65), i -> emb[i] * emb[i])) AS sq
+       |   FROM e),
+       | cand AS (SELECT p.vec_id AS $key, a.vec_id AS $other
+       |   FROM rk p JOIN rk a ON p.pid = a.pid AND a.r = 1
+       |   WHERE ${probes}p.r <= $FixedPivotNprobe AND p.vec_id <> a.vec_id),
+       | sc AS (SELECT c.$key, c.$other,
+       |    ROUND(LIST_SUM(LIST_TRANSFORM(RANGE(1, 65),
+       |        i -> x.emb[i] * y.emb[i]))
+       |      / (SQRT(x.sq) * SQRT(y.sq)), 4) AS cos_sim
+       |   FROM cand c JOIN n x ON c.$key = x.vec_id
+       |               JOIN n y ON c.$other = y.vec_id),
+       | r AS (SELECT $key, $other, cos_sim,
+       |    CAST(ROW_NUMBER() OVER (PARTITION BY $key
+       |      ORDER BY cos_sim DESC, $other) AS BIGINT) AS rn FROM sc)
+       |SELECT $key, $other, cos_sim, rn FROM r
+       |WHERE rn <= $k ORDER BY $key, rn""".stripMargin
+  }
+
   /** Generated DuckDB oracle for [[embedLshVerdict]] — the identical
     * integer pipeline: floor-quantized codes, md5-nibble hyperplane
     * signs, 16 conditional-sum signature bits, two 8-bit packed band
@@ -2086,80 +2031,11 @@ object Similarity {
          |SELECT src, dst, cos_sim, rn FROM r
          |WHERE rn <= 3 ORDER BY src, rn""".stripMargin,
 
-    // The fixed-pivot multi-probe graph, end-to-end: pivots = the
-    // FixedPivotNlist smallest md5(vec_id) vectors; every vector joins
-    // the cells of its FixedPivotNprobe nearest pivots (full-L2 over
-    // the double-cast values — LIST_SUM left-folds like Spark's
-    // aggregate, proven bit-identical by fn_vector); rounded cosine +
-    // per-src top-k inside the probed cells. Geometry constants are
-    // interpolated from the same vals the Spark plan reads.
-    "knn_graph_blocked_verdict" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-         |           FROM embeddings),
-         | piv AS (SELECT vec_id AS pid, emb AS pv FROM e
-         |         ORDER BY MD5(CAST(vec_id AS VARCHAR)), vec_id
-         |         LIMIT $FixedPivotNlist),
-         | d AS (SELECT e.vec_id, piv.pid,
-         |    LIST_SUM(LIST_TRANSFORM(RANGE(1, 65),
-         |      i -> (e.emb[i] - piv.pv[i]) * (e.emb[i] - piv.pv[i]))) AS dist
-         |   FROM e CROSS JOIN piv),
-         | rk AS (SELECT vec_id, pid,
-         |    ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, pid) AS r
-         |   FROM d),
-         | n AS (SELECT vec_id, emb,
-         |    LIST_SUM(LIST_TRANSFORM(RANGE(1, 65), i -> emb[i] * emb[i])) AS sq
-         |   FROM e),
-         | cand AS (SELECT p.vec_id AS src, a.vec_id AS dst
-         |   FROM rk p JOIN rk a ON p.pid = a.pid AND a.r = 1
-         |   WHERE p.r <= $FixedPivotNprobe AND p.vec_id <> a.vec_id),
-         | sc AS (SELECT c.src, c.dst,
-         |    ROUND(LIST_SUM(LIST_TRANSFORM(RANGE(1, 65),
-         |        i -> x.emb[i] * y.emb[i]))
-         |      / (SQRT(x.sq) * SQRT(y.sq)), 4) AS cos_sim
-         |   FROM cand c JOIN n x ON c.src = x.vec_id
-         |               JOIN n y ON c.dst = y.vec_id),
-         | r AS (SELECT src, dst, cos_sim,
-         |    CAST(ROW_NUMBER() OVER (PARTITION BY src
-         |      ORDER BY cos_sim DESC, dst) AS BIGINT) AS rn FROM sc)
-         |SELECT src, dst, cos_sim, rn FROM r
-         |WHERE rn <= 3 ORDER BY src, rn""".stripMargin,
-
-    // The fixed-pivot IVF retrieval, end-to-end: same pivot choice and
-    // cell assignment as knn_graph_blocked_verdict's CTE chain, with
-    // the candidate stage probe-side (the ten probes' nprobe nearest
-    // cells) and the exact rounded-cosine rerank + per-probe top-k
-    // (k = 5, the ann_ivf registry row's k).
-    "ann_ivf_verdict" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-         |           FROM embeddings),
-         | piv AS (SELECT vec_id AS pid, emb AS pv FROM e
-         |         ORDER BY MD5(CAST(vec_id AS VARCHAR)), vec_id
-         |         LIMIT $FixedPivotNlist),
-         | d AS (SELECT e.vec_id, piv.pid,
-         |    LIST_SUM(LIST_TRANSFORM(RANGE(1, 65),
-         |      i -> (e.emb[i] - piv.pv[i]) * (e.emb[i] - piv.pv[i]))) AS dist
-         |   FROM e CROSS JOIN piv),
-         | rk AS (SELECT vec_id, pid,
-         |    ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, pid) AS r
-         |   FROM d),
-         | n AS (SELECT vec_id, emb,
-         |    LIST_SUM(LIST_TRANSFORM(RANGE(1, 65), i -> emb[i] * emb[i])) AS sq
-         |   FROM e),
-         | cand AS (SELECT p.vec_id AS probe_id, a.vec_id
-         |   FROM rk p JOIN rk a ON p.pid = a.pid AND a.r = 1
-         |   WHERE p.vec_id < 10 AND p.r <= $FixedPivotNprobe
-         |     AND p.vec_id <> a.vec_id),
-         | sc AS (SELECT c.probe_id, c.vec_id,
-         |    ROUND(LIST_SUM(LIST_TRANSFORM(RANGE(1, 65),
-         |        i -> x.emb[i] * y.emb[i]))
-         |      / (SQRT(x.sq) * SQRT(y.sq)), 4) AS cos_sim
-         |   FROM cand c JOIN n x ON c.probe_id = x.vec_id
-         |               JOIN n y ON c.vec_id = y.vec_id),
-         | r AS (SELECT probe_id, vec_id, cos_sim,
-         |    CAST(ROW_NUMBER() OVER (PARTITION BY probe_id
-         |      ORDER BY cos_sim DESC, vec_id) AS BIGINT) AS rn FROM sc)
-         |SELECT probe_id, vec_id, cos_sim, rn FROM r
-         |WHERE rn <= 5 ORDER BY probe_id, rn""".stripMargin,
+    // The fixed-pivot arms end-to-end ([[fixedPivotOracle]]): the
+    // multi-probe graph, and the IVF retrieval of the ten probes at the
+    // ann_ivf registry row's k = 5.
+    "knn_graph_blocked_verdict" -> fixedPivotOracle("", ("src", "dst"), 3),
+    "ann_ivf_verdict" -> fixedPivotOracle("p.vec_id < 10 AND ", ("probe_id", "vec_id"), 5),
 
     // LIST_SUM left-folds like Spark's aggregate (proven bit-identical by
     // fn_vector); the rounding is the shared floor(+0.5) spelling.

@@ -174,16 +174,29 @@ class KernelSpec extends SparkSpec {
       (i.toLong, (0 until 64).map(j => ((i * 7 + j) % 13 - 6) / 6.0f))
     } :+ ((40L, (0 until 64).map(j => ((3 * 7 + j) % 13 - 6) / 6.0f))))
       .sortBy(_._1)
-    val hof = emb.select($"vec_id", $"embedding".as("ea"))
-      .withColumn("cbv", typedlit(cents.map(_._2.map(_.toDouble))))
-      .withColumn("cbi", typedlit(cents.map(_._1)))
-      .select($"vec_id",
-        expr(llm.Similarity.nearBucketsHofSql(cents.size, 5)).as("ref"))
-    val fast = emb.select($"vec_id",
-      VectorExprs.nearestCentroids($"embedding",
-        cents.flatMap(_._2).toArray, cents.map(_._1).toArray, 64, 5).as("fast"))
-    val diff = hof.join(fast, "vec_id").filter($"ref" =!= $"fast").count()
-    assert(diff === 0)
+    def parity(flat: Array[Float], ids: Array[Long], nprobe: Int): Unit = {
+      val hof = emb.select($"vec_id", $"embedding".as("ea"))
+        .withColumn("cbv", typedlit(flat.grouped(64).map(_.toSeq.map(_.toDouble)).toSeq))
+        .withColumn("cbi", typedlit(ids.toSeq))
+        .select($"vec_id",
+          expr(llm.Similarity.nearBucketsHofSql(ids.length, nprobe)).as("ref"))
+      val fast = emb.select($"vec_id",
+        VectorExprs.nearestCentroids($"embedding", flat, ids, 64, nprobe).as("fast"))
+      val diff = hof.join(fast, "vec_id").filter($"ref" =!= $"fast").count()
+      assert(diff === 0)
+    }
+    parity(cents.flatMap(_._2).toArray, cents.map(_._1).toArray, 5)
+    // The fixed-pivot pack the verdict arms probe: the md5-smallest
+    // corpus vectors (checked against a driver-side md5 order), ids
+    // ascending — real corpus vectors as cells.
+    val corpus = Tables.embeddings(spark, sf0001)
+    val (piv, _) = llm.Similarity.pivotIndex(corpus)
+    def md5hex(s: String) = java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    val md5Smallest = corpus.select($"vec_id").collect().map(_.getLong(0))
+      .sortBy(id => (md5hex(id.toString), id)).take(llm.Similarity.FixedPivotNlist)
+    assert(piv.ids.toSeq === md5Smallest.sorted.toSeq)
+    parity(piv.flat, piv.ids, llm.Similarity.FixedPivotNprobe)
     // nprobe > nlist degenerates to "all buckets, sorted" — the full
     // argsort, still in (d, cl) order.
     val all = emb.limit(5).select(

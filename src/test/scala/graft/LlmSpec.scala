@@ -314,6 +314,23 @@ class LlmSpec extends SparkSpec {
     }
   }
 
+  test("candidate rows measure the real stage: semantic pairs and ann_ivf results lie inside their candidate frames (sf0.001)") {
+    // k-means is hash-seeded, so each call rebuilds the same index: the
+    // StressBench candidate rows count the frame the queries consume.
+    val emb = Tables.embeddings(spark, sf0001)
+    def pairs(df: org.apache.spark.sql.DataFrame, a: String, b: String) =
+      df.select(a, b).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val sem = pairs(Similarity.semanticPairs(emb, Similarity.NeardupCos), "vec_a", "vec_b")
+    val semCands = pairs(Similarity.semanticCandidates(emb), "vec_a", "vec_b")
+    assert(sem.nonEmpty && sem.subsetOf(semCands),
+      s"${(sem -- semCands).size} of ${sem.size} semantic pairs are not candidates")
+    val ann = pairs(Similarity.queries("ann_ivf")(spark, sf0001), "probe_id", "vec_id")
+    val ivfCands = pairs(Similarity.ivfCandidates(spark, sf0001), "probe_id", "vec_id")
+    assert(ann.size === 50 && ann.subsetOf(ivfCands),
+      s"${(ann -- ivfCands).size} of ${ann.size} ann_ivf results are not candidates")
+    assert(ivfCands.size > ann.size, "the candidate frame should exceed the top-k")
+  }
+
   test("dedup_semantic: natural-corpus verdicts are deterministic and exact-subset (sf0.01)") {
     val emb = Tables.embeddings(spark, sf001)
     val v1 = Similarity.semanticDedup(emb, 0.35).collect()

@@ -544,6 +544,27 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
+  test("cell-probe arms: probe and pivot choice run in the kernel — no nested-loop join, one window per top-k cut (sf0.001)") {
+    // Every cell-blocked arm picks its probe cells (and the pivot arms
+    // their corpus cells) inside the codegen'd NearestCentroidsF32
+    // projection: no vector × cell cross join, and no per-vector rank
+    // window. The windows left are the top-k cuts (ann_ivfpq also has
+    // its ADC cut), none partitioned by vec_id.
+    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
+    for ((q, cuts) <- Seq("ann_ivf" -> 1, "ann_ivfpq" -> 2, "ann_ivf_verdict" -> 1,
+        "knn_graph_blocked_verdict" -> 1)) {
+      val df = SparkEntry.queries(q)(spark, sf0001)
+      val p = df.queryExecution.executedPlan.toString
+      assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
+        s"$q plans a nested-loop join:\n$p")
+      val windows = df.queryExecution.optimizedPlan.collect { case w: LWindow => w }
+      val byVec = windows.filter(_.partitionSpec.exists(_.references.exists(_.name == "vec_id")))
+      assert(byVec.isEmpty, s"$q ranks per vec_id:\n${byVec.mkString("\n")}")
+      assert(windows.size === cuts, s"$q: ${windows.size} windows, expected $cuts")
+      spark.catalog.clearCache()
+    }
+  }
+
   test("text_quality_gate: one scan over documents, zero joins, zero exchanges below the sort (VERDICT r9 #7)") {
     val p = plan("text_quality_gate")
     val scans = p.linesIterator.count(l =>

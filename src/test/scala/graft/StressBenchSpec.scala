@@ -16,14 +16,15 @@ class StressBenchSpec extends AnyFunSuite {
     StressBench.Scale("s3", 3.0, Set("documents", "orders"), skew = true))
 
   private def artifact(results: Seq[(String, Seq[(String, Measured)])]) =
-    parse(compact(render(StressBench.artifact("/stress", scales, results,
+    parse(compact(render(StressBench.artifact("/stress", 4, scales, results,
       Seq("s1" -> 7, "knn_s3" -> 12), Seq("knn_graph_nnd:s3" -> "a \"quoted\" note")))))
 
   test("top level, scales without table dirs, and the conf notes render as JSON") {
     val json = artifact(Seq("minhash_lsh" -> Seq("s1" -> point(1.0, 10))))
     val JObject(top) = json
     assert(top.map(_._1) ===
-      List("metric", "unit", "scales", "queries", "cc_rounds", "conf_notes", "root"))
+      List("metric", "unit", "cpus", "scales", "queries", "cc_rounds", "conf_notes", "root"))
+    assert((json \ "cpus") === JInt(4))
     assert((json \ "scales" \ "s1") === JObject("skew" -> JBool(false)))
     assert((json \ "scales" \ "s3") === JObject("docs" -> JInt(30000),
       "orders" -> JInt(450000), "skew" -> JBool(true)))
