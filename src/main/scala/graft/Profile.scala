@@ -27,7 +27,9 @@ import org.json4s.jackson.JsonMethods.{compact, render}
  *    [[RunMetrics]] fields, cpu share, the post-AQE join strategies, GC
  *    seconds and the failure message;
  *  - `jobs` / `stages`: the last rep's per-job log (job id, stage ids,
- *    call site, seconds — `null` when the job's start was never seen)
+ *    SQL execution and root execution ids, the call site of the action
+ *    that started its execution, seconds — `null` when the job's start
+ *    was never seen)
  *    and per-stage name and shuffle-write bytes, which attribute a
  *    stage or shuffle delta to the job that grew.
  *
@@ -256,28 +258,49 @@ object Profile {
   /** Per-job and per-stage log of one execution. Entries are keyed by
     * id, so a job whose start event was never seen (listener added
     * mid-job, or an event dropped off a full bus) reports `null`
-    * seconds instead of a made-up duration. */
+    * seconds instead of a made-up duration. A job run for a SQL
+    * execution (its `spark.sql.execution.id` property) is named by that
+    * execution's description — the call site of the action, also for
+    * the query-stage jobs AQE submits from a pool thread, whose own
+    * call site names that thread — and records the execution's id and
+    * its root execution's id. */
   private class JobLog extends SparkListener {
     private case class Job(stages: Seq[Int] = Nil,
-        callSite: Option[String] = None, start: Option[Long] = None,
-        end: Option[Long] = None)
+        callSite: Option[String] = None, execution: Option[Long] = None,
+        start: Option[Long] = None, end: Option[Long] = None)
     private val jobs = mutable.Map.empty[Int, Job]
     private val stages = mutable.Map.empty[Int, (String, Long)]
+    // execution id -> (root execution id, description)
+    private val executions = mutable.Map.empty[Long, (Long, String)]
 
-    def reset(): Unit = synchronized { jobs.clear(); stages.clear() }
+    def reset(): Unit = synchronized {
+      jobs.clear(); stages.clear(); executions.clear()
+    }
 
     // Call site: the one set on the job, else its last stage's name —
     // the fallback Spark's own status store names jobs by.
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      val props = Option(e.properties)
       jobs(e.jobId) = jobs.getOrElse(e.jobId, Job()).copy(
         stages = e.stageIds, start = Some(e.time),
-        callSite = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short")))
-          .orElse(e.stageInfos.sortBy(_.stageId).lastOption.map(_.name)))
+        callSite = props.flatMap(p => Option(p.getProperty("callSite.short")))
+          .orElse(e.stageInfos.sortBy(_.stageId).lastOption.map(_.name)),
+        execution = props.flatMap(p => Option(p.getProperty(
+          org.apache.spark.sql.execution.SQLExecution.EXECUTION_ID_KEY)))
+          .flatMap(_.toLongOption))
     }
 
     override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
       jobs(e.jobId) = jobs.getOrElse(e.jobId, Job()).copy(end = Some(e.time))
+    }
+
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case x: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+        synchronized {
+          executions(x.executionId) =
+            (x.rootExecutionId.getOrElse(x.executionId), x.description)
+        }
+      case _ =>
     }
 
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
@@ -287,10 +310,16 @@ object Profile {
           if (m == null) 0L else m.shuffleWriteMetrics.bytesWritten)
       }
 
+    private def orNull[A](a: Option[A])(f: A => JValue): JValue =
+      a.map(f).getOrElse(JNull)
+
     def jobsJson: JArray = synchronized {
       JArray(jobs.toList.sortBy(_._1).map { case (id, j) =>
+        val exec = j.execution.flatMap(executions.get)
         ("job" -> id) ~ ("stage_ids" -> j.stages.toList) ~
-        ("call_site" -> j.callSite.map(JString(_)).getOrElse(JNull)) ~
+        ("execution_id" -> orNull(j.execution)(JInt(_))) ~
+        ("root_execution_id" -> orNull(exec)(x => JInt(x._1))) ~
+        ("call_site" -> orNull(exec.map(_._2).orElse(j.callSite))(JString(_))) ~
         ("sec" -> (for (s <- j.start; t <- j.end)
           yield JDouble((t - s) / 1e3)).getOrElse(JNull))
       })

@@ -54,23 +54,6 @@ object Q {
     * the simjoin rewrite uses — see SimilarityRewrite.EstRowBytes). */
   private val EstRowBytes = 280L
 
-  /**
-   * Conf-gated broadcast hint for LSH verify-join side tables (VERDICT r2
-   * item 2). An explicit `broadcast()` is honored by Spark
-   * UNCONDITIONALLY — a hard-coded hint on a per-doc signature/token
-   * table would OOM the driver once the corpus outgrows memory (10⁸
-   * docs). Decision is driver-side only (logical-plan `Statistics`, no
-   * data read) and gated on BOTH axes: estimated rows (CBO row count when
-   * present, else sizeInBytes/280) at or below
-   * `spark.graft.broadcastSideThreshold` (default 8 000 000 rows) AND
-   * estimated payload at or below `spark.graft.broadcastSideMaxBytes`
-   * (default 256 MB — rows alone would admit a ~4 GB wide-signature
-   * broadcast) → broadcast hash join, no shuffle of the big candidate
-   * stream; above either → no hint, so the planner falls back to a
-   * shuffle join keyed on the join column — the scale-safe shape. Mirrors
-   * how Spark itself promotes BHJ on `autoBroadcastJoinThreshold`; both
-   * expansions are plan-pinned in PlanShapeSpec.
-   */
   /** A persist with explicit ownership (VERDICT r9 #2): `df` plus
     * whether THIS call created the cache entry. Only the owner
     * unpersists — re-persisting a plan the CacheManager already holds
@@ -151,16 +134,45 @@ object Q {
     }
   }
 
-  /** `fanOut` scales both estimates for a side that explodes k rows per
-    * input row: Spark estimates a Generate at one row per input row. */
-  def maybeBroadcast(side: DataFrame, fanOut: Int = 1): DataFrame = {
+  /**
+   * Conf-gated broadcast hint for LSH verify-join side tables (VERDICT r2
+   * item 2). An explicit `broadcast()` is honored by Spark
+   * UNCONDITIONALLY — a hard-coded hint on a per-doc signature/token
+   * table would OOM the driver once the corpus outgrows memory (10⁸
+   * docs). Decision is driver-side only (logical-plan `Statistics`, no
+   * data read) and gated on BOTH axes: estimated rows (CBO row count when
+   * present, else sizeInBytes/280) at or below
+   * `spark.graft.broadcastSideThreshold` (default 8 000 000 rows) AND
+   * estimated payload at or below `spark.graft.broadcastSideMaxBytes`
+   * (default 256 MB — rows alone would admit a ~4 GB wide-signature
+   * broadcast) → broadcast hash join, no shuffle of the big candidate
+   * stream; above either → no hint, so the planner falls back to a
+   * shuffle join keyed on the join column — the scale-safe shape. Mirrors
+   * how Spark itself promotes BHJ on `autoBroadcastJoinThreshold`; both
+   * expansions are plan-pinned in PlanShapeSpec.
+   *
+   * The byte estimate is floored at 8 B per field per row, the fixed
+   * width of an UnsafeRow: Spark sizes an int at 4 B and an array at
+   * one element, so an int-heavy side with a known row count would
+   * otherwise pass the byte gate at about twice its size.
+   *
+   * `fanOut` scales both estimates for a side that explodes k rows per
+   * input row: Spark estimates a Generate at one row per input row.
+   * `rowsOf`, when given, is a frame with at least as many rows as
+   * `side` whose estimate the gates read instead of `side`'s own — for
+   * a per-key side whose estimate the joins under it inflate.
+   */
+  def maybeBroadcast(side: DataFrame, fanOut: Int = 1,
+      rowsOf: Option[DataFrame] = None): DataFrame = {
     val conf = side.sparkSession.conf
     val rowThreshold = conf.get(BroadcastSideThresholdKey, "8000000").toLong
     val byteThreshold = conf
       .get(BroadcastSideMaxBytesKey, (256L * 1024 * 1024).toString).toLong
-    val st = side.queryExecution.optimizedPlan.stats
+    val st = rowsOf.getOrElse(side).queryExecution.optimizedPlan.stats
     val estRows = st.rowCount.getOrElse(st.sizeInBytes / EstRowBytes) * fanOut
-    if (estRows <= BigInt(rowThreshold) &&
-        st.sizeInBytes * fanOut <= BigInt(byteThreshold)) broadcast(side) else side
+    val estBytes = (st.sizeInBytes * fanOut).max(estRows * 8 * side.schema.length)
+    if (estRows <= BigInt(rowThreshold) && estBytes <= BigInt(byteThreshold))
+      broadcast(side)
+    else side
   }
 }

@@ -374,11 +374,15 @@ object Dedup {
     * candidates, like minhash_lsh). */
   def neardedupVerdicts(docs: DataFrame, thresh: Double): DataFrame =
     verdictsFromPairs(docs.select(col("doc_id")), minhashLsh(docs, thresh))
+      .orderBy(col("doc_id"))
 
   /** (doc_id) frame + (doc_a, doc_b, jaccard) pairs → per-doc verdicts
-    * (doc_id, kept, dup_of, jaccard) ordered by doc_id — shared by
+    * (doc_id, kept, dup_of, jaccard), unordered — shared by
     * [[neardedupVerdicts]] and the streaming sink's per-epoch verdict
-    * step (one spelling of "smallest dup partner wins"). */
+    * step (one spelling of "smallest dup partner wins"). The per-doc
+    * dup frame holds at most one row per id, so it broadcasts when
+    * `ids` fits the gate: its own estimate multiplies the joins under
+    * the pairs and would never pass. */
   private[graft] def verdictsFromPairs(ids: DataFrame,
       pairs: DataFrame): DataFrame = {
     val wv = Window.partitionBy(col("doc_b")).orderBy(col("doc_a"))
@@ -386,10 +390,9 @@ object Dedup {
       .withColumn("rn", row_number().over(wv)).filter(col("rn") === 1)
       .select(col("doc_b").as("doc_id"), col("doc_a").as("dup_of"),
         col("jaccard"))
-    ids.join(dups, Seq("doc_id"), "left")
+    ids.join(Q.maybeBroadcast(dups, rowsOf = Some(ids)), Seq("doc_id"), "left")
       .select(col("doc_id"), col("dup_of").isNull.as("kept"),
         col("dup_of"), col("jaccard"))
-      .orderBy(col("doc_id"))
   }
 
   /** 64-bit SimHash per document (sketch-based near-dup at scale;

@@ -69,8 +69,14 @@ import org.apache.spark.sql.types._
  * — an empty result IS the empty trigger, which writes the ledger
  * marker only. Epochs with a committed past add one more: the collect
  * of the candidates' payload buckets, which prunes the payload read.
- * Everything else is the verify, the three writes, and the one
- * broadcast per verify side [[graft.llm.Dedup.verifyPairs]] builds.
+ * Everything else is the verify, the three writes, the one broadcast
+ * per verify side [[graft.llm.Dedup.verifyPairs]] builds, and the
+ * broadcast of the per-doc dup frame into the verdict join. The
+ * per-doc frame keeps the micro-batch's scan splits (no exchange, as
+ * in the batch operator), the verdicts are written unsorted
+ * ([[readVerdicts]] orders on read), and the cross-epoch join shuffles
+ * only the batch's band rows, on doc_id, which also serves its
+ * distinct().
  * Like every epoch-directory sink, buckets accumulate O(epochs) files;
  * [[compactStore]] folds committed epoch directories into one
  * consolidated epoch per side, keeping the `_bucket`/`_pbucket`
@@ -133,8 +139,12 @@ object NearDedupStream {
     val nBands = Dedup.lshBands(batch)
     // One scan computes both per-doc artifacts (signature + sorted
     // token hashes); persisted — it feeds banding, both verify sides,
-    // the verdict frame, and the payload write.
-    val prep = Q.ownPersist(Dedup.sigsAndToks(batch).dropDuplicates("doc_id"))
+    // the verdict frame, and the payload write. No exchange: the frame
+    // keeps the micro-batch's scan splits, like the batch operator's
+    // per-doc frame (doc_ids are unique by the delivery contract, and a
+    // full-row duplicate only repeats identical verdict rows, which
+    // readVerdicts' distinct folds).
+    val prep = Q.ownPersist(Dedup.sigsAndToks(batch))
     val sigsB = prep.df.select(col("doc_id"), col("sig"))
     // Band keys of lshCandidatePairs (one spelling), so cross-epoch
     // candidates are the same relation the within-batch banding finds.
@@ -191,12 +201,16 @@ object NearDedupStream {
       }
     }
     val havePast = hasCommittedData(bandsDir) && hasCommittedData(payloadDir)
+    // The batch side joins hash-partitioned on doc_id: only its small
+    // band rows shuffle, only on epochs with a past, and the join's
+    // output stays clustered on doc_b, so the distinct() needs no
+    // exchange of its own.
     val crossPairs =
       if (!havePast) None
       else {
         Some(spark.read.schema(BandsSchema).parquet(bandsDir)
           .filter(col("_bucket").isin(touched: _*)).as("s")
-          .join(bandsB.df.as("n"),
+          .join(bandsB.df.repartition(col("doc_id")).as("n"),
             col("s.band") === col("n.band") &&
               col("s.band_key") === col("n.band_key") &&
               col("s.doc_id") < col("n.doc_id"))

@@ -468,16 +468,18 @@ object StreamPipelines {
     // surviving row is partition-order-dependent, which breaks the
     // replay-idempotence guarantee the ledger otherwise provides.
     val wKey = Window.partitionBy(col(keyCol)).orderBy(col(orderCol).desc)
+    val bucket = pmod(xxhash64(col(keyCol)), lit(nBuckets)).cast("int")
     val upserts = batch
       .withColumn("_rn", row_number().over(wKey)).filter(col("_rn") === 1)
       .drop("_rn")
-      .withColumn("_bucket",
-        pmod(xxhash64(col(keyCol)), lit(nBuckets)).cast("int"))
+      .withColumn("_bucket", bucket)
     val dataDir = new Path(target, "data").toString
     if (!fs.exists(new Path(dataDir))) {
       upserts.write.partitionBy("_bucket").mode("overwrite").parquet(dataDir)
     } else {
-      val affected = upserts.select("_bucket").distinct()
+      // A bucket depends on the key alone, so the batch keys give the
+      // touched set without evaluating the dedup window a second time.
+      val affected = batch.select(bucket).distinct()
         .collect().map(_.getInt(0)).toSeq
       // mergeSchema + allowMissingColumns: the source schema may EVOLVE
       // between epochs (a column added upstream); old rows surface the

@@ -325,6 +325,33 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
+  test("maybeBroadcast floors the byte estimate at 8 B per field per row: a compact int side flips at rows x 8 x fields") {
+    // A materialized cache reports its real row count and its columnar
+    // size, far below what the rows occupy as UnsafeRows once broadcast.
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, ResolvedHint}
+    val (n, fields) = (20000L, 4)
+    val side = spark.range(n)
+      .select((0 until fields).map(i => (col("id") + i).cast("int").as(s"c$i")): _*)
+      .cache()
+    try {
+      side.count()
+      val st = side.queryExecution.optimizedPlan.stats
+      val floor = BigInt(n) * 8 * fields
+      assert(st.rowCount.contains(BigInt(n)), s"no row count: $st")
+      assert(st.sizeInBytes < floor - 1, s"size estimate already at the floor: $st")
+      def hinted(gate: BigInt): Boolean = {
+        spark.conf.set(Q.BroadcastSideMaxBytesKey, gate.toString)
+        try Q.maybeBroadcast(side).queryExecution.analyzed.exists {
+          case h: ResolvedHint => h.hints.strategy.contains(BROADCAST)
+          case _ => false
+        } finally spark.conf.unset(Q.BroadcastSideMaxBytesKey)
+      }
+      assert(hinted(floor), "a side at the floor must broadcast")
+      assert(!hinted(floor - 1), "the gate read Spark's columnar size, not the row floor")
+    } finally side.unpersist()
+  }
+
   test("bandedPairs' broadcast hint judges the gate at the exploded side's size (bands x rows)") {
     // Spark estimates the posexplode as one row per input row, so a gate
     // read off that estimate alone would admit a side nBands times larger.

@@ -62,9 +62,18 @@ class ProfileSpec extends SparkSpec {
     val JArray(jobs) = p \ "jobs"
     val JArray(stages) = p \ "stages"
     assert(jobs.nonEmpty && stages.nonEmpty)
+    // A job run for a SQL execution is named by its action, AQE's
+    // query-stage jobs too (not by the pool thread that submits them);
+    // a file-listing job runs outside any execution.
+    assert(jobs.exists(j => (j \ "execution_id").isInstanceOf[JInt]),
+      "no job recorded its SQL execution")
     for (j <- jobs) {
       assert((j \ "job").isInstanceOf[JInt])
-      assert((j \ "call_site") !== JNothing)
+      if ((j \ "execution_id").isInstanceOf[JInt])
+        assert((j \ "root_execution_id").isInstanceOf[JInt], s"execution start not seen: $j")
+      else assert((j \ "execution_id") === JNull && (j \ "root_execution_id") === JNull)
+      val JString(name) = j \ "call_site"
+      assert(!name.contains("CompletableFuture"), s"job named after the AQE pool thread: $j")
       assert((j \ "sec").isInstanceOf[JDouble], s"job start not seen: $j")
       val JArray(ids) = j \ "stage_ids"
       assert(ids.nonEmpty)
