@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, SparkSession, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -72,6 +72,17 @@ object Q {
   def ownPersist(df: DataFrame): Owned =
     if (org.apache.spark.sql.GraftShims.isCached(df)) Owned(df, owned = false)
     else Owned(df.persist(), owned = true)
+
+  /** The distinct values of `df`'s one non-null int column, collected
+    * in ONE stage: each partition returns its own set and the driver
+    * takes their union. For small domains such as bucket ids, where a
+    * `distinct().collect()` plans a hash aggregate and an exchange (two
+    * jobs under AQE) only to return a handful of ints; each partition
+    * ships at most the domain's size. */
+  def distinctInts(df: DataFrame): Set[Int] = {
+    implicit val ints: Encoder[Int] = Encoders.scalaInt
+    df.as[Int].mapPartitions(_.toSet.iterator).collect().toSet
+  }
 
   /** Per-SESSION ledger of the FINAL `localCheckpoint`-ed frame of
     * each iterative fixpoint (ADVICE r13, rebuilt per ADVICE r14).

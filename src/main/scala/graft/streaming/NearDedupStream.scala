@@ -63,20 +63,24 @@ import org.apache.spark.sql.types._
  * [[PayloadSchema]]) instead of inferring it, so neither launches a
  * schema-merge job over the store footers.
  *
- * Spark actions per epoch: ONE materializing action, a per-bucket
- * count over the batch's band keys, builds both epoch caches (the
- * per-doc frame and its band keys) and yields the touched band buckets
- * — an empty result IS the empty trigger, which writes the ledger
- * marker only. Epochs with a committed past add one more: the collect
- * of the candidates' payload buckets, which prunes the payload read.
- * Everything else is the verify, the three writes, the one broadcast
- * per verify side [[graft.llm.Dedup.verifyPairs]] builds, and the
- * broadcast of the per-doc dup frame into the verdict join. The
+ * Spark actions per epoch: ONE materializing action, a one-stage
+ * collect of the bucket set of the batch's band keys
+ * ([[graft.Q.distinctInts]]), builds both epoch caches (the per-doc
+ * frame and its band keys) and yields the touched band buckets — an
+ * empty result IS the empty trigger, which writes the ledger marker
+ * only. Epochs with a committed past add one more: the one-stage
+ * collect of the candidates' payload buckets, which prunes the payload
+ * read. Everything else is the verify, the three writes, the one
+ * broadcast per verify side [[graft.llm.Dedup.verifyPairs]] builds, and
+ * the broadcast of the per-doc dup frame into the verdict join. The
  * per-doc frame keeps the micro-batch's scan splits (no exchange, as
  * in the batch operator), the verdicts are written unsorted
- * ([[readVerdicts]] orders on read), and the cross-epoch join shuffles
- * only the batch's band rows, on doc_id, which also serves its
- * distinct().
+ * ([[readVerdicts]] orders on read), and the cross-epoch candidates
+ * stay a multiset (no distinct(): the cross-epoch join shuffles
+ * nothing when one side fits a broadcast). Each step runs under its own job description
+ * (`near-dedup touched buckets`, `… cross candidates`, `… verify +
+ * verdicts`, `… bands write`, `… payload write`), so the event log
+ * names the step every job belongs to.
  * Like every epoch-directory sink, buckets accumulate O(epochs) files;
  * [[compactStore]] folds committed epoch directories into one
  * consolidated epoch per side, keeping the `_bucket`/`_pbucket`
@@ -156,10 +160,12 @@ object NearDedupStream {
           .cast("int")))
     // The epoch's ONE materializing action: it builds both caches
     // (bandsB reads prep) and returns the band buckets the batch
-    // touches — the pruning set of the cross-epoch store read. Every
-    // doc yields nBands rows, so no buckets means an empty trigger.
-    val touched = bandsB.df.groupBy(col("_bucket")).count()
-      .collect().map(_.getInt(0)).toSeq // bounded by nBuckets
+    // touches — the pruning set of the cross-epoch store read — in one
+    // stage. Every doc yields nBands rows, so no buckets means an empty
+    // trigger.
+    val touched = StreamPipelines.step(spark, "near-dedup touched buckets") {
+      Q.distinctInts(bandsB.df.select(col("_bucket"))).toSeq
+    }
     if (touched.isEmpty) { // empty trigger: ledger only
       bandsB.release(); prep.release(); writeMarker(); return
     }
@@ -201,21 +207,21 @@ object NearDedupStream {
       }
     }
     val havePast = hasCommittedData(bandsDir) && hasCommittedData(payloadDir)
-    // The batch side joins hash-partitioned on doc_id: only its small
-    // band rows shuffle, only on epochs with a past, and the join's
-    // output stays clustered on doc_b, so the distinct() needs no
-    // exchange of its own.
+    // A pair sharing k bands surfaces k times (at most nBands copies):
+    // no distinct(), because copies are verdict-harmless — every copy
+    // of (a, b) carries the same jaccard and verdictsFromPairs keeps
+    // one row per doc_b — and they ride the broadcast verify joins,
+    // costing CPU, where a distinct() would shuffle the candidates.
     val crossPairs =
       if (!havePast) None
       else {
         Some(spark.read.schema(BandsSchema).parquet(bandsDir)
           .filter(col("_bucket").isin(touched: _*)).as("s")
-          .join(bandsB.df.repartition(col("doc_id")).as("n"),
+          .join(bandsB.df.as("n"),
             col("s.band") === col("n.band") &&
               col("s.band_key") === col("n.band_key") &&
               col("s.doc_id") < col("n.doc_id"))
-          .select(col("s.doc_id").as("doc_a"), col("n.doc_id").as("doc_b"))
-          .distinct())
+          .select(col("s.doc_id").as("doc_a"), col("n.doc_id").as("doc_b")))
       }
     // Payload rows for the cross-candidates' store side, pruned to the
     // doc buckets that actually hold candidates. They only ever join
@@ -225,10 +231,11 @@ object NearDedupStream {
       case None => (prep.df, None)
       case Some(cp) =>
         val cpOwned = Q.ownPersist(cp)
-        val pBuckets = cpOwned.df
-          .select(pmod(xxhash64(col("doc_a")), lit(nBuckets)).cast("int")
-            .as("_pbucket"))
-          .distinct().collect().map(_.getInt(0)).toSeq
+        val pBuckets =
+          StreamPipelines.step(spark, "near-dedup cross candidates") {
+            Q.distinctInts(cpOwned.df.select(
+              pmod(xxhash64(col("doc_a")), lit(nBuckets)).cast("int"))).toSeq
+          }
         val payload = spark.read.schema(PayloadSchema).parquet(payloadDir)
           .filter(col("_pbucket").isin(pBuckets: _*))
         (prep.df.unionByName(
@@ -242,14 +249,20 @@ object NearDedupStream {
     val verdicts = Dedup.verdictsFromPairs(
       prep.df.select(col("doc_id")), pairs)
     // Per-epoch overwrites (idempotent under replay), ledger LAST.
-    verdicts.write.mode("overwrite").parquet(s"$verdictsDir/epoch=$batchId")
-    bandsB.df.write.partitionBy("_bucket").mode("overwrite")
-      .parquet(s"$bandsDir/epoch=$batchId")
-    prep.df
-      .withColumn("_pbucket",
-        pmod(xxhash64(col("doc_id")), lit(nBuckets)).cast("int"))
-      .write.partitionBy("_pbucket").mode("overwrite")
-      .parquet(s"$payloadDir/epoch=$batchId")
+    StreamPipelines.step(spark, "near-dedup verify + verdicts") {
+      verdicts.write.mode("overwrite").parquet(s"$verdictsDir/epoch=$batchId")
+    }
+    StreamPipelines.step(spark, "near-dedup bands write") {
+      bandsB.df.write.partitionBy("_bucket").mode("overwrite")
+        .parquet(s"$bandsDir/epoch=$batchId")
+    }
+    StreamPipelines.step(spark, "near-dedup payload write") {
+      prep.df
+        .withColumn("_pbucket",
+          pmod(xxhash64(col("doc_id")), lit(nBuckets)).cast("int"))
+        .write.partitionBy("_pbucket").mode("overwrite")
+        .parquet(s"$payloadDir/epoch=$batchId")
+    }
     crossCands.foreach(_.release())
     bandsB.release()
     prep.release()

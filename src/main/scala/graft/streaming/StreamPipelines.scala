@@ -70,6 +70,20 @@ object StreamPipelines {
       System.err.println(s"[graft] snapshot unpersist skipped: $e")
     }
 
+  /** Runs `body` with its jobs described as `name` followed by the
+    * description they would otherwise carry (a stream batch's `id = …
+    * runId = … batch = N`), then restores that description. Structured
+    * Streaming gives every job of a foreachBatch sink the batch's
+    * description and call site, so without this the event log and
+    * [[graft.Profile]]'s job log cannot tell a sink's steps apart. */
+  private[streaming] def step[T](spark: SparkSession, name: String)
+      (body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(Option(prev).fold(name)(p => s"$name: ${p.trim}"))
+    try body finally sc.setJobDescription(prev)
+  }
+
   val eventSchema: StructType = StructType(Seq(
     StructField("event_id", LongType),
     StructField("ts", TimestampType),
@@ -452,7 +466,8 @@ object StreamPipelines {
    * what a transactional format's MERGE INTO executes (pruned read →
    * key dedup → partition rewrite); plain parquet + a ledger reproduces
    * it with only-idempotence (not isolation) guarantees, which is the
-   * right trade for a single-writer streaming sink.
+   * right trade for a single-writer streaming sink. Its jobs run under
+   * the descriptions `upsert buckets`, `upsert merge` and `upsert write`.
    */
   def upsertBatch(target: String, keyCol: String, orderCol: String,
       nBuckets: Int)(batch: DataFrame, batchId: Long): Unit = {
@@ -461,55 +476,64 @@ object StreamPipelines {
     val marker = new Path(new Path(target, "_epochs"), batchId.toString)
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(marker)) return // replayed epoch: already fully applied
-    // Last-write-wins WITHIN the batch first (a micro-batch can carry
-    // several versions of a key; exactly one row per key may survive).
     // CONTRACT: orderCol must totally order rows within a key (a unique
     // sequence / event id, not a coarse timestamp) — on ties the
     // surviving row is partition-order-dependent, which breaks the
     // replay-idempotence guarantee the ledger otherwise provides.
-    val wKey = Window.partitionBy(col(keyCol)).orderBy(col(orderCol).desc)
     val bucket = pmod(xxhash64(col(keyCol)), lit(nBuckets)).cast("int")
-    val upserts = batch
-      .withColumn("_rn", row_number().over(wKey)).filter(col("_rn") === 1)
-      .drop("_rn")
-      .withColumn("_bucket", bucket)
     val dataDir = new Path(target, "data").toString
     if (!fs.exists(new Path(dataDir))) {
-      upserts.write.partitionBy("_bucket").mode("overwrite").parquet(dataDir)
+      // First write: last-write-wins within the batch (a micro-batch can
+      // carry several versions of a key; exactly one row per key may
+      // survive).
+      val wKey = Window.partitionBy(col(keyCol)).orderBy(col(orderCol).desc)
+      val upserts = batch
+        .withColumn("_rn", row_number().over(wKey)).filter(col("_rn") === 1)
+        .drop("_rn")
+        .withColumn("_bucket", bucket)
+      step(spark, "upsert write") {
+        upserts.write.partitionBy("_bucket").mode("overwrite").parquet(dataDir)
+      }
     } else {
       // A bucket depends on the key alone, so the batch keys give the
-      // touched set without evaluating the dedup window a second time.
-      val affected = batch.select(bucket).distinct()
-        .collect().map(_.getInt(0)).toSeq
-      // mergeSchema + allowMissingColumns: the source schema may EVOLVE
-      // between epochs (a column added upstream); old rows surface the
-      // new column as null, epochs missing a column write nulls — the
-      // standard additive-evolution contract (tested in StreamingSpec).
-      val current = spark.read.option("mergeSchema", "true").parquet(dataDir)
-        .filter(col("_bucket").isin(affected: _*)) // partition-pruned read
+      // touched set without evaluating the merge.
+      val affected = step(spark, "upsert buckets") {
+        Q.distinctInts(batch.select(bucket)).toSeq
+      }
       // orderCol-wins across epochs, not arrival-order-wins: a later epoch
       // carrying a LOWER orderCol (late/out-of-order delivery) must not
       // clobber newer target state — the documented contract and the
       // upsert_latest batch twin both order by orderCol globally. Union
-      // target ∪ batch and keep the max-orderCol row per key; `_is_new`
-      // breaks exact-orderCol ties toward the batch row, which is only
-      // reachable when orderCol is not unique per key (outside the
-      // contract above) and keeps even that case deterministic.
+      // target ∪ raw batch and keep the max-orderCol row per key: the one
+      // window ranks the batch's own versions of a key together with the
+      // target's, so several versions in one batch need no window of
+      // their own. `_is_new` breaks exact-orderCol ties toward the batch row, which
+      // is only reachable when orderCol is not unique per key (outside
+      // the contract above) and keeps even that case deterministic.
       val wMerge = Window.partitionBy(col(keyCol))
         .orderBy(col(orderCol).desc, col("_is_new").desc)
-      val merged = current.withColumn("_is_new", lit(0))
-        .unionByName(upserts.withColumn("_is_new", lit(1)),
-          allowMissingColumns = true)
-        .withColumn("_rn", row_number().over(wMerge))
-        .filter(col("_rn") === 1).drop("_rn", "_is_new")
-        // materialize BEFORE overwriting the directories being read —
-        // Spark refuses (or corrupts) an overwrite of its own input
-        .localCheckpoint(true)
+      val merged = step(spark, "upsert merge") {
+        // mergeSchema + allowMissingColumns: the source schema may EVOLVE
+        // between epochs (a column added upstream); old rows surface the
+        // new column as null, epochs missing a column write nulls — the
+        // standard additive-evolution contract (tested in StreamingSpec).
+        val current = spark.read.option("mergeSchema", "true").parquet(dataDir)
+          .filter(col("_bucket").isin(affected: _*)) // partition-pruned read
+        current.withColumn("_is_new", lit(0))
+          .unionByName(batch.withColumn("_bucket", bucket)
+            .withColumn("_is_new", lit(1)), allowMissingColumns = true)
+          .withColumn("_rn", row_number().over(wMerge))
+          .filter(col("_rn") === 1).drop("_rn", "_is_new")
+          // materialize BEFORE overwriting the directories being read —
+          // Spark refuses (or corrupts) an overwrite of its own input
+          .localCheckpoint(true)
+      }
       val overwriteKey = "spark.sql.sources.partitionOverwriteMode"
       val prev = spark.conf.getOption(overwriteKey)
       spark.conf.set(overwriteKey, "dynamic")
-      try merged.write.partitionBy("_bucket").mode("overwrite").parquet(dataDir)
-      finally {
+      try step(spark, "upsert write") {
+        merged.write.partitionBy("_bucket").mode("overwrite").parquet(dataDir)
+      } finally {
         prev match {
           case Some(v) => spark.conf.set(overwriteKey, v)
           case None => spark.conf.unset(overwriteKey)
@@ -606,15 +630,16 @@ object StreamPipelines {
     if (fs.exists(marker)) return // replay: totals must not double
     val aggs = count(lit(1)).as("n_rows") +:
       sumCols.map(c => sum(col(c)).as(s"sum_$c"))
+    val bucket = pmod(xxhash64(col(keyCol)), lit(nBuckets)).cast("int")
     val deltas = batch.groupBy(col(keyCol)).agg(aggs.head, aggs.tail: _*)
-      .withColumn("_bucket",
-        pmod(xxhash64(col(keyCol)), lit(nBuckets)).cast("int"))
+      .withColumn("_bucket", bucket)
     val dataDir = new Path(target, "data").toString
     if (!fs.exists(new Path(dataDir))) {
       deltas.write.partitionBy("_bucket").mode("overwrite").parquet(dataDir)
     } else {
-      val affected = deltas.select("_bucket").distinct()
-        .collect().map(_.getInt(0)).toSeq
+      // The batch keys give the touched set without evaluating the
+      // delta aggregate a second time.
+      val affected = Q.distinctInts(batch.select(bucket)).toSeq
       val current = spark.read.option("mergeSchema", "true").parquet(dataDir)
         .filter(col("_bucket").isin(affected: _*))
       // union + re-aggregate folds existing totals and new deltas in one

@@ -22,6 +22,29 @@ class LlmSpec extends SparkSpec {
     assert((approx -- exact).isEmpty, "LSH emitted pairs below the Jaccard threshold")
   }
 
+  test("verdictsFromPairs: pairs repeated 1 to nBands times give the verdicts of the deduplicated pairs (sf0.001)") {
+    // The streaming sink's cross-epoch candidates are a multiset: a pair
+    // sharing k bands surfaces k times. Every copy carries the same
+    // jaccard, so the verdicts must not see the copies.
+    val docs = Tables.documents(spark, sf0001)
+    val nBands = Dedup.lshBands(docs)
+    val pairs = Dedup.minhashLsh(docs, 0.95)
+    val repeated = pairs.withColumn("copy", explode(sequence(lit(1),
+        pmod(xxhash64(col("doc_a"), col("doc_b")), lit(nBands)).cast("int") + 1)))
+      .drop("copy")
+    val ids = docs.select(col("doc_id"))
+    def verdicts(p: org.apache.spark.sql.DataFrame) =
+      Dedup.verdictsFromPairs(ids, p).orderBy(col("doc_id")).collect().toSeq
+    val copies = repeated.groupBy("doc_a", "doc_b").count()
+      .agg(min("count"), max("count")).collect()(0)
+    assert((copies.getLong(0), copies.getLong(1)) === ((1L, nBands.toLong)),
+      "the repeats do not span 1 to nBands copies")
+    val want = verdicts(pairs)
+    assert(verdicts(repeated) === want)
+    assert(want.exists(!_.getBoolean(1)),
+      "corpus surfaced no dups — the comparison is vacuous")
+  }
+
   test("simhash: identical texts collide, near-identical are hamming-close (literal frames)") {
     val s = spark
     import s.implicits._

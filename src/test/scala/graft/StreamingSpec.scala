@@ -380,6 +380,32 @@ class StreamingSpec extends SparkSpec {
       "late epoch clobbered newer target state")
   }
 
+  test("upsert sink: an epoch merging into a target plans one Window and names each step's jobs") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.execution.window.WindowExec
+    val target = java.nio.file.Files.createTempDirectory("graft_upsert_win").toString + "/t"
+    StreamPipelines.upsertBatch(target, "k", "seq", 4)(
+      Seq((1L, "a", 1L), (2L, "b", 4L)).toDF("k", "v", "seq"), 0L)
+    // epoch 1 carries two versions of key 1 and a stale one of key 2:
+    // the one merge window must rank them all against the target
+    val b1 = Seq((1L, "c", 3L), (1L, "d", 2L), (2L, "x", 3L), (3L, "e", 1L))
+      .toDF("k", "v", "seq")
+    var descs = Seq.empty[String]
+    val plans = executedPlansOf {
+      descs = jobsOf(StreamPipelines.upsertBatch(target, "k", "seq", 4)(b1, 1L))
+    }
+    assert(descs.toSet === Set("upsert buckets", "upsert merge", "upsert write"),
+      "every epoch-1 job is named by its upsert step")
+    val windows = plans.flatMap(p => Aqe.collect(p) { case w: WindowExec => w })
+    assert(windows.size === 1,
+      s"epoch 1 planned ${windows.size} windows:\n${plans.mkString("\n")}")
+    val state = StreamPipelines.readUpsertTarget(s, target).collect()
+      .map(r => r.getAs[Long]("k") -> ((r.getAs[String]("v"), r.getAs[Long]("seq"))))
+      .toMap
+    assert(state === Map(1L -> (("c", 3L)), 2L -> (("b", 4L)), 3L -> (("e", 1L))))
+  }
+
   test("upsert compaction after schema evolution: the evolved column survives the rewrite") {
     val s = spark
     import s.implicits._
@@ -878,19 +904,21 @@ class StreamingSpec extends SparkSpec {
     } finally spark.conf.unset(NearDedupStream.CompactAfterEpochsKey)
   }
 
-  /** Runs `body` and returns how many Spark jobs it started — counted
-    * through a thread-local property, which Spark copies into the
-    * broadcast and subquery threads a query spawns, so every job of
-    * `body` is counted and no job of anything else. */
-  private def jobsOf(body: => Unit): Int = {
+  /** Runs `body` and returns the description of every Spark job it
+    * started ("" for a job without one) — found through a thread-local
+    * property, which Spark copies into the broadcast and subquery
+    * threads a query spawns, so every job of `body` is counted and no
+    * job of anything else. */
+  private def jobsOf(body: => Unit): Seq[String] = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val key = "graft.test.jobBudget"
     val tag = java.util.UUID.randomUUID().toString
-    val n = new java.util.concurrent.atomic.AtomicInteger
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (e.properties != null && e.properties.getProperty(key) == tag)
-          n.incrementAndGet()
+          descs.add(Option(e.properties.getProperty("spark.job.description"))
+            .getOrElse(""))
     }
     val sc = spark.sparkContext
     sc.addSparkListener(l)
@@ -901,19 +929,17 @@ class StreamingSpec extends SparkSpec {
       org.apache.spark.graftbridge.ListenerDrain.drain(sc)
       sc.removeSparkListener(l)
     }
-    n.get
+    import scala.jdk.CollectionConverters._
+    descs.asScala.toSeq
   }
 
   private object Aqe extends org.apache.spark.sql.execution.adaptive
     .AdaptiveSparkPlanHelper
 
-  /** Runs `body` and returns the cached plans of every in-memory
-    * relation with exactly the columns `cols` that the actions of
-    * `body` scanned, directly or under another cached relation. */
-  private def cachedPlansOf(cols: Seq[String])(body: => Unit)
+  /** Runs `body` and returns the executed plan of every action it ran. */
+  private def executedPlansOf(body: => Unit)
       : Seq[org.apache.spark.sql.execution.SparkPlan] = {
     import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-    import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
     import org.apache.spark.sql.util.QueryExecutionListener
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
     val l = new QueryExecutionListener {
@@ -929,20 +955,53 @@ class StreamingSpec extends SparkSpec {
       org.apache.spark.graftbridge.ListenerDrain.drain(spark.sparkContext)
       lm.unregister(l)
     }
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq
+  }
+
+  /** Runs `body` and returns the cached plans of every in-memory
+    * relation with exactly the columns `cols` that the actions of
+    * `body` scanned, directly or under another cached relation. */
+  private def cachedPlansOf(cols: Seq[String])(body: => Unit)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
     def relations(p: SparkPlan): Seq[InMemoryRelation] =
       Aqe.collect(p) { case s: InMemoryTableScanExec => s.relation }
         .flatMap(r => r +: relations(r.cachedPlan))
-    import scala.jdk.CollectionConverters._
-    seen.asScala.toSeq.flatMap(relations)
+    executedPlansOf(body).flatMap(relations)
       .filter(_.output.map(_.name) == cols).map(_.cachedPlan)
   }
 
+  test("Q.distinctInts: the same set as distinct().collect(), in one job with no Exchange, on a multi-partition and an empty frame") {
+    import org.apache.spark.sql.functions.{col, lit, pmod}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val many = spark.range(0, 10000, 1, 6)
+      .select(pmod(col("id") * 7919, lit(13)).cast("int").as("_bucket"))
+    for ((name, df) <- Seq("multi-partition" -> many,
+        "empty" -> many.filter(col("_bucket") < 0))) {
+      val want = df.distinct().collect().map(_.getInt(0)).toSet
+      var got = Set.empty[Int]
+      var jobs = 0
+      val plans = executedPlansOf {
+        jobs = jobsOf { got = Q.distinctInts(df) }.size
+      }
+      assert(got === want, s"$name frame")
+      assert(jobs === 1, s"$name frame ran $jobs jobs")
+      assert(plans.nonEmpty, s"$name frame: no action recorded")
+      for (p <- plans)
+        assert(Aqe.collect(p) { case e: Exchange => e }.isEmpty,
+          s"$name frame plans an exchange:\n$p")
+    }
+    assert(many.rdd.getNumPartitions === 6)
+  }
+
   test("streaming near-dedup: per-epoch job budget — one materializing action per epoch, no schema-inference jobs on the store") {
-    // Budget: 11 jobs for epoch 0 (no store yet) and 16 for epoch 1
+    // Budget: 9 jobs for epoch 0 (no store yet) and 12 for epoch 1
     // (cross-epoch store reads and verify). A re-added eager count, a
-    // second touched-bucket action, an inferred-schema store read, a
-    // third verify broadcast or a sorted verdict write pushes an epoch
-    // over budget.
+    // second touched-bucket action, a bucket set collected through an
+    // aggregate, an inferred-schema store read, a third verify
+    // broadcast or a sorted verdict write pushes an epoch over budget.
     import java.nio.file.Files
     import org.apache.spark.sql.functions.col
     import graft.streaming.NearDedupStream
@@ -950,7 +1009,7 @@ class StreamingSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf0001).select("doc_id", "text")
     val mid = docs.selectExpr("percentile(doc_id, 0.5)").collect()(0)
       .getDouble(0).toLong
-    var e0, e1 = 0
+    var e0, e1 = Seq.empty[String]
     val perDoc = cachedPlansOf(Seq("doc_id", "sig", "toks")) {
       e0 = jobsOf(NearDedupStream.neardedupBatch(t, 0.95, 8)(
         docs.filter(col("doc_id") <= mid), 0L))
@@ -964,8 +1023,15 @@ class StreamingSpec extends SparkSpec {
       assert(Aqe.collect(p) {
         case e: org.apache.spark.sql.execution.exchange.Exchange => e
       }.isEmpty, s"the per-doc cache plans an exchange:\n$p")
-    assert(e0 <= 11, s"epoch 0 (no store yet) ran $e0 jobs, budget 11")
-    assert(e1 <= 16, s"epoch 1 (cross-epoch verify) ran $e1 jobs, budget 16")
+    assert(e0.size <= 9, s"epoch 0 (no store yet) ran ${e0.size} jobs, budget 9")
+    assert(e1.size <= 12,
+      s"epoch 1 (cross-epoch verify) ran ${e1.size} jobs, budget 12")
+    // Every job is named by the sink step that ran it.
+    val steps = Seq("touched buckets", "verify + verdicts", "bands write",
+      "payload write").map("near-dedup " + _)
+    assert(e0.toSet === steps.toSet, "epoch 0 job descriptions")
+    assert(e1.toSet === (steps :+ "near-dedup cross candidates").toSet,
+      "epoch 1 job descriptions")
   }
 
   test("streaming near-dedup: full-row duplicates inside an epoch yield one verdict per doc, equal to the batch twin") {
