@@ -21,7 +21,7 @@ import org.json4s.jackson.JsonMethods.{compact, render}
  * one JSON object holding
  *
  *  - `session`: master, cpus, shuffle partitions, whether the tables
- *    plan on ANALYZE stats, and the pinned confs — the context a number
+ *    plan on catalog stats, and the pinned confs — the context a number
  *    is read against;
  *  - `reps`: per rep the [[Measured]] row — wall s, rows, checksum, the
  *    [[RunMetrics]] fields, cpu share, the post-AQE join strategies, GC
@@ -52,16 +52,18 @@ object Profile {
   /** The one session every measuring runner builds: `local[cpus]`,
     * `cpus` shuffle partitions, UTC, UI off, WARN logging, and the gates
     * [[Q.maybeBroadcast]] reads pinned explicitly, so no conf drift in a
-    * long run can flip a broadcast side. `confs` are set on the builder
-    * (Bench's heavy-tier child passes its own warehouse). */
-  def session(cpus: Int, confs: (String, String)*): SparkSession = {
-    val b = SparkSession.builder()
+    * long run can flip a broadcast side. Every runner keeps the default
+    * `./spark-warehouse`: catalog copies are content-keyed and never
+    * overwritten ([[sources.CatalogStats.register]]), so Bench's
+    * heavy-tier child registers beside its parent without deleting the
+    * parent's table files. */
+  def session(cpus: Int): SparkSession = {
+    val s = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-    confs.foreach { case (k, v) => b.config(k, v) }
-    val s = b.getOrCreate()
+      .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s.conf.set(Q.BroadcastSideThresholdKey, "8000000")
     s.conf.set(Q.BroadcastSideMaxBytesKey, (256L * 1024 * 1024).toString)

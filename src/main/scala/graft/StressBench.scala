@@ -223,7 +223,7 @@ object StressBench {
     Frame((s, d) => llm.Similarity.lshCandidates(Tables.embeddings(s, d))))
 
   /** The sweep, in execution order: blocks of (scales, rows). Each block
-    * runs scale by scale — an untimed ANALYZE of the scale dir, so its
+    * runs scale by scale — an untimed registration of the scale dir, so its
     * points plan on that scale's TRUE rowCounts, then the block's rows in
     * order. The skew sweep and the s100 fresh-context rows follow it
     * (see `main`). */

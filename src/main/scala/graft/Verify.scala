@@ -21,7 +21,7 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Register + ANALYZE the testdata tables so every stats-driven arm
+    // Register the testdata tables (footer stats) so every stats-driven arm
     // (simjoin/tokjoin auto, band widths, IVF geometry) plans on TRUE
     // rowCounts in the committed correctness artifact — the "no
     // counting job at query time" contract exercised for real, not

@@ -20,6 +20,21 @@ object GraftShims {
   def waitListenerBusEmpty(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
+  /** Persist a table's statistics in the session catalog: the
+    * `CatalogStatistics(sizeInBytes, rowCount)` that `ANALYZE TABLE …
+    * COMPUTE STATISTICS` writes, from numbers the caller already has. */
+  def setTableStats(spark: SparkSession, table: String, sizeInBytes: BigInt,
+      rowCount: BigInt): Unit =
+    spark.asInstanceOf[classic.SparkSession].sessionState.catalog.alterTableStats(
+      catalyst.TableIdentifier(table),
+      Some(catalyst.catalog.CatalogStatistics(sizeInBytes, Some(rowCount))))
+
+  /** A table's catalog entry (statistics, location, type), as stored. */
+  def catalogTable(spark: SparkSession,
+      table: String): catalyst.catalog.CatalogTable =
+    spark.asInstanceOf[classic.SparkSession].sessionState.catalog
+      .getTableMetadata(catalyst.TableIdentifier(table))
+
   /** True when the frame's analyzed plan already has a CacheManager
     * entry (same-result match — the exact check `persist()` itself runs
     * before warning "Asked to cache already cached data"). Lets

@@ -723,7 +723,9 @@ class PlanShapeSpec extends SparkSpec {
       expr("array_join(transform(sequence(0, 319), " +
         "i -> md5(cast(id * 1000 + i as string))), ' ')").as("text"))
       .write.parquet(dir)
-    graft.sources.CatalogStats.register(s, "graft_stats_docs", dir)
+    // A plain external table: CatalogStats.register would set footer
+    // statistics, and this test needs a table without any first.
+    s.sql(s"CREATE TABLE graft_stats_docs USING parquet LOCATION '$dir'")
     graft.sources.CatalogStats.enableCbo(s)
     // Token modality → the token crossover key (r7: per-modality keys).
     val key = graft.plans.SimilarityJoinRewrite.TokThresholdKey
